@@ -757,7 +757,7 @@ def encode_jpeg_gray(
     # dc_code·diff_bits·EOB, which vectorizes to one numpy bit-pack per
     # chunk instead of ~6 interpreter ops per block through _BitWriter.
     # Bit-identity to the scalar loop is pinned differentially in
-    # tests/test_bmp_codec.py.
+    # tests/test_r16_codec_fastpaths.py.
     dconly = _fast and not rows_arr[:, 1:].any()
     if dconly:
         eob_ln, eob_code = ac[0x00]
@@ -1183,7 +1183,7 @@ def encode_jpeg_progressive(
         # blocks with NO nonzero coefficient in the band is a pure
         # EOB-run (each block bumps eobrun; flushes at 0x7FFF and at
         # scan end).  Bit-identity to the scalar loop below is pinned
-        # differentially in tests/test_bmp_codec.py; scans the
+        # differentially in tests/test_r16_codec_fastpaths.py; scans the
         # conditions exclude (interleaved, restarts, bands with
         # nonzeros) fall through unchanged.
         if _fast and not restart_interval and ns == 1:

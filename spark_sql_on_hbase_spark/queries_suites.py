@@ -188,7 +188,7 @@ FROM (SELECT round(stddev_samp(l_extendedprice), 2) AS sd,
              round(covar_samp(l_quantity, l_extendedprice), 2) AS cv,
              approx_count_distinct(l_partkey, 0.02) AS approx_nd
       FROM lineitem) m
-CROSS JOIN (SELECT count(*) AS exact_nd
+CROSS JOIN (SELECT count(l_partkey) AS exact_nd
             FROM (SELECT DISTINCT l_partkey FROM lineitem) t) d
 """
 _GLOBAL_ORACLE = """

@@ -669,25 +669,6 @@ class AstroSession:
         return self._ok("overwrote 1 row" if c.overwrite else "inserted 1 row")
 
     @staticmethod
-    def _fold_keyset_fallback(rel: AstroRelation, stats: dict) -> dict:
-        """Surface the retention cost cliff in last_write_stats (r11,
-        VERDICT r10 #4): when the resolved-key-set plan refused ONLY
-        because of retain_history (the predicate pruned a strict file
-        subset), the full retained rewrite's stats record how many files
-        a non-retained table would have rewritten instead — the WARN's
-        machine-readable twin."""
-        fb = getattr(rel, "_keyset_retention_fallback", None)
-        if fb:
-            rel._keyset_retention_fallback = None
-            return {
-                **stats,
-                "keyset_refused_prunable": (
-                    f"{fb['files_prunable']}/{fb['files_total']}"
-                ),
-            }
-        return stats
-
-    @staticmethod
     def _table_has_history(rel: AstroRelation) -> bool:
         """True when a table with an EMPTY live region set still carries
         version history that a bulk write would destroy: retired MVCC
@@ -867,20 +848,13 @@ class AstroSession:
     )
 
     def _update_via_rewrite(self, rel: AstroRelation, c: ddl.UpdateTable) -> DataFrame:
-        """UPDATE routed through the rewrite: matched rows get the SET
-        expressions applied in place — NULL results land as real NULLs —
-        and every other row/fragment is untouched.  Cheapest plan first:
-        a key-only WHERE with all-literal SETs takes the per-fragment
-        rewrite (r8 — no resolution, works under pending upserts and on
-        any layout); otherwise the resolved island rewrite; otherwise
-        the full atomic rewrite."""
-        if c.where and all(self._SET_LIT_RE.match(e) for e in c.update_set.values()):
-            self._update_projection(rel, c.update_set, "")  # validate targets
-            stats = rel.update_rows_keyonly(c.where, c.update_set)
-            if stats is not None:
-                self.last_write_stats = stats
-                rel.register_view()
-                return self._ok(f"updated {c.table}")
+        """UPDATE routed through the rewrite pipeline
+        (relation.rewrite_rows): matched rows get the SET expressions
+        applied in place — NULL results land as real NULLs — and every
+        other row/fragment is untouched.  A WHERE with all-literal SETs
+        also qualifies for the per-fragment plans (r8 — one constant on
+        every version of a matched key needs no resolution, so they work
+        under pending upserts and on any layout)."""
         cols = [n for n, _ in rel.meta.all_columns]
         schema = table_schema(rel.meta)
         when = f"coalesce(({c.where}), false)" if c.where else "true"
@@ -897,47 +871,29 @@ class AstroSession:
             out = df.selectExpr(*case_proj)
             return out.select(*[out[n].cast(schema[n].dataType) for n in cols])
 
-        stats = rel.rewrite_pruned(c.where, survivors_of) if c.where else None
-        if (
-            stats is None
-            and c.where
-            and all(self._SET_LIT_RE.match(e) for e in c.update_set.values())
-        ):
-            # all-literal SETs whose island closure degenerated: resolve
-            # the pruned fragments, apply the constants to every version
-            # of the matched rowkeys per-fragment (same exactness as the
-            # key-only literal rewrite — one constant on all versions)
-            stats = rel.update_rows_keyset(c.where, c.update_set)
-        if stats is None:
+        def full_rows() -> DataFrame:
             df = self.spark.sql(f"SELECT {', '.join(case_proj)} FROM {c.table}")
-            out = df.select(*[df[n].cast(schema[n].dataType) for n in cols])
-            if rel.meta.retain_history:
-                # MVCC retention (r10): full rewrite at a new generation,
-                # replaced fragments retired — history stays readable
-                stats = self._fold_keyset_fallback(rel, rel.rewrite_full_retained(out))
-            else:
-                rel.overwrite(out)
-                n = len(rel.meta.regions)
-                stats = {"files_total": n, "files_rewritten": n, "history": "folded"}
-        self.last_write_stats = stats
+            return df.select(*[df[n].cast(schema[n].dataType) for n in cols])
+
+        literal = all(self._SET_LIT_RE.match(e) for e in c.update_set.values())
+        self.last_write_stats = rel.rewrite_rows(
+            c.where,
+            survivors_of,
+            full_rows,
+            set_literals=c.update_set if literal else None,
+        )
         rel.register_view()
         return self._ok(f"updated {c.table}")
 
     def _exec_DeleteFrom(self, c: ddl.DeleteFrom) -> DataFrame:
-        """DELETE FROM … [AS a] [WHERE]: four plans, cheapest first.
-
-        1. KEY-ONLY predicate → per-fragment retroactive purge
-           (relation.delete_rows_keyonly): no resolution, no island
-           closure, works on any layout/generation state incl.
-           multi-gen z-order and fully-overlapping LSM states.
-        2. Residual predicate → island-closure pruned rewrite over the
-           resolved intersecting fragments (rewrite_pruned).
-        3. Residual predicate whose island closure degenerated →
-           resolved-key-set purge (relation.delete_rows_resolved_keys):
-           resolve the pruned fragments, anti-join the matched rowkeys
-           per-fragment.
-        4. Non-sargable / unfiltered / nothing prunes → full atomic
-           rewrite.
+        """DELETE FROM … [AS a] [WHERE]: one rewrite pipeline
+        (relation.rewrite_rows).  Plan selectors are tried in order,
+        cheapest first — key-only per-fragment purge → island-closure
+        rewrite of the resolved intersecting fragments → resolved-key-set
+        purge → full atomic rewrite (non-sargable, unfiltered, or nothing
+        prunes) — and the first that applies commits through the one
+        compare-and-swap commit, which retires the replaced fragments on
+        retain_history tables and folds history otherwise.
         Non-astro tables fall through to Spark SQL verbatim."""
         if not self.catalog.table_exists(c.table, c.namespace):
             return self.spark.sql(c.raw)
@@ -947,37 +903,21 @@ class AstroSession:
         # its first write: use -1 so the statement op still records
         before = rel.committed_seq() if rel.meta.generation_times else -1
         self.last_write_stats = None
-        stats = None
-        if c.where:
-            stats = rel.delete_rows_keyonly(c.where)
-        if c.where and stats is None:
-            stats = rel.rewrite_pruned(
-                c.where,
-                lambda df: df.filter(F.expr(f"NOT coalesce(({c.where}), false)")),
-                preserve_stamps=True,  # DELETE: retroactive view above floor
-            )
-        if c.where and stats is None:
-            # island closure degenerated (multi-gen z-order, fully
-            # overlapping LSM): resolve the pruned fragments, collect the
-            # matched ROWKEYS, purge them per-fragment — still never a
-            # full-table rewrite when the predicate prunes at all
-            stats = rel.delete_rows_resolved_keys(c.where)
-        if stats is None:
+
+        def full_rows() -> DataFrame:
             a = c.alias or c.table
             cols = ", ".join(f"{a}.`{n}`" for n, _ in rel.meta.all_columns)
-            survivors = self.spark.sql(
+            return self.spark.sql(
                 f"SELECT {cols} FROM {c.table} {a}"
                 + (f" WHERE NOT coalesce({c.where}, false)" if c.where else " WHERE false")
             )
-            if rel.meta.retain_history:
-                # MVCC retention (r10): pre-delete snapshots stay readable
-                stats = self._fold_keyset_fallback(
-                    rel, rel.rewrite_full_retained(survivors)
-                )
-            else:
-                n = len(rel.meta.regions)
-                rel.overwrite(survivors)
-                stats = {"files_total": n, "files_rewritten": n, "history": "folded"}
+
+        stats = rel.rewrite_rows(
+            c.where,
+            lambda df: df.filter(F.expr(f"NOT coalesce(({c.where}), false)")),
+            full_rows,
+            delete=True,
+        )
         self.last_write_stats = stats
         self._record_fold_op(rel, "DELETE", before, stats)
         rel.register_view()
@@ -1194,38 +1134,29 @@ class AstroSession:
                 if c.delete_cond
                 else c.on
             )
-            stats = None
-            if not parts:
-                # delete-only merge: region-pruned survivor rewrite
-                prune_where = self._source_key_bounds(c, rel)
+            # delete-only merge: region-pruned by the source's key bounds
+            prune_where = None if parts else self._source_key_bounds(c, rel)
 
-                def survivors_of(df: DataFrame) -> DataFrame:
-                    v = f"__astro_merge_target_{rel.meta.namespace}_{rel.meta.name}"
-                    df.createOrReplaceTempView(v)
-                    return _cast(self.spark.sql(
-                        f"SELECT {', '.join(f'{t}.`{col}`' for col in cols)} "
-                        f"FROM {v} {t} LEFT ANTI JOIN {c.source_from} ON {don}"
-                    ))
+            def survivors_of(df: DataFrame) -> DataFrame:
+                v = f"__astro_merge_target_{rel.meta.namespace}_{rel.meta.name}"
+                df.createOrReplaceTempView(v)
+                return _cast(self.spark.sql(
+                    f"SELECT {', '.join(f'{t}.`{col}`' for col in cols)} "
+                    f"FROM {v} {t} LEFT ANTI JOIN {c.source_from} ON {don}"
+                ))
 
-                if prune_where is not None:
-                    stats = rel.rewrite_pruned(prune_where, survivors_of)
-            if stats is None:
+            def full_rows() -> DataFrame:
                 # survivors = target rows with NO (condition-qualified)
-                # source match; atomic rewrite
-                survivors = self.spark.sql(
+                # source match, plus the inserts; atomic rewrite
+                out = _cast(self.spark.sql(
                     f"SELECT {', '.join(f'{t}.`{col}`' for col in cols)} "
                     f"FROM {c.table} {t} LEFT ANTI JOIN {c.source_from} ON {don}"
-                )
-                out = _cast(survivors)
+                ))
                 for p in parts:
                     out = out.unionByName(p)
-                if rel.meta.retain_history:
-                    stats = rel.rewrite_full_retained(out)  # r10: MVCC retention
-                else:
-                    n = len(rel.meta.regions)
-                    rel.overwrite(out)
-                    stats = {"files_total": n, "files_rewritten": n}
-            self.last_write_stats = stats
+                return out
+
+            self.last_write_stats = rel.rewrite_rows(prune_where, survivors_of, full_rows)
         else:
             if build_insert is not None:
                 parts.append(build_insert())
@@ -1269,20 +1200,15 @@ class AstroSession:
             )
             return out.select(*[out[n].cast(schema[n].dataType) for n in cols])
 
-        prune_where = self._source_key_bounds(c, rel)
-        stats = rel.rewrite_pruned(prune_where, survivors_of) if prune_where else None
-        if stats is None:
+        def full_rows() -> DataFrame:
             out = self.spark.sql(
                 f"SELECT {proj} FROM {c.table} {t} LEFT JOIN {wrapped} ON {c.on}"
             )
-            full = out.select(*[out[n_].cast(schema[n_].dataType) for n_ in cols])
-            if rel.meta.retain_history:
-                stats = rel.rewrite_full_retained(full)  # r10: MVCC retention
-            else:
-                n = len(rel.meta.regions)
-                rel.overwrite(full)
-                stats = {"files_total": n, "files_rewritten": n}
-        self.last_write_stats = stats
+            return out.select(*[out[n].cast(schema[n].dataType) for n in cols])
+
+        self.last_write_stats = rel.rewrite_rows(
+            self._source_key_bounds(c, rel), survivors_of, full_rows
+        )
 
     def _record_op(self, rel: AstroRelation, op: str, before_seq: int, always: bool = False) -> None:
         """Override the writer-recorded MECHANISM with the statement name

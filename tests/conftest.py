@@ -36,6 +36,8 @@ def pytest_collection_modifyitems(config, items):
         return
     # args that point BELOW the suite root name specific files/tests;
     # bare `tests/`, the repo root, or no path args = the broad lane
+    # every path is compared in resolved form, so a symlinked checkout or
+    # a relative invocation cannot misclassify the lane
     here = Path(__file__).resolve().parent
     broad = {str(here), str(here.parent)}
     explicit = set()
@@ -43,14 +45,14 @@ def pytest_collection_modifyitems(config, items):
         a = str(a)
         if a.startswith("-"):
             continue
-        p = os.path.abspath(a.split("::")[0])
+        p = str(Path(config.invocation_params.dir, a.split("::")[0]).resolve())
         if p not in broad and (os.path.isfile(p) or os.path.isdir(p)):
             explicit.add(p)
     skip = pytest.mark.skip(reason="slow lane: --runslow / SPARK_GRAFT_SLOW=1")
     for item in items:
         if "slow" not in item.keywords:
             continue
-        path = str(item.path)
+        path = str(Path(item.path).resolve())
         if any(path == e or path.startswith(e + os.sep) for e in explicit):
             continue  # named explicitly — run it
         item.add_marker(skip)

@@ -166,18 +166,27 @@ def test_fold_conflict_aborts_cleanly(spark, tmp_path, mode):
     assert c.sql("SELECT count(*) c FROM cc5").collect()[0].c == 101
 
 
-def test_conflicting_fragment_rewrite_aborts(spark, tmp_path, mode):
-    """require_live: two retained DELETEs over the SAME fragments from
-    two stale sessions — the second must abort (its survivors were
-    computed from fragments the first already retired), never
-    double-retire."""
-    a, b = _mk_sessions(spark, tmp_path, "cc6")
+@pytest.mark.parametrize("retain", [True, False], ids=["retained", "folded"])
+def test_conflicting_fragment_rewrite_aborts(spark, tmp_path, mode, retain):
+    """require_live: two DELETEs over the SAME fragments from two stale
+    sessions — the second must abort (its survivors were computed from
+    fragments the first already retired or folded away), never
+    double-apply, and its abort must leave nothing behind: no
+    uncommitted rw- file, no pinned reservation, no phantom
+    generation.  Covers both the retained commit and the fold commit."""
+    import os
+
+    a, b = _mk_sessions(spark, tmp_path, "cc6", retain=retain)
     rel_b = b.relation("cc6")
     rel_b._ensure_fresh_regions()  # B's view is now current…
-    a.sql("DELETE FROM cc6 WHERE k <= 25")  # …then A retires first
+    if not retain:
+        # B's source read leases its fragments, so A's fold defers their
+        # reclaim and B's stale rewrite job can still read them
+        rel_b.scan()
+    a.sql("DELETE FROM cc6 WHERE k <= 25")  # …then A rewrites first
 
-    # drive B's delete directly through the retained island rewrite with
-    # a STALE base (bypassing the session-level freshness probe)
+    # drive B's delete directly through the island rewrite with a STALE
+    # base (bypassing the session-level freshness probe)
     import pyspark.sql.functions as F
 
     with pytest.raises(ConcurrentWriteError):
@@ -185,9 +194,10 @@ def test_conflicting_fragment_rewrite_aborts(spark, tmp_path, mode):
         orig = type(rel_b)._ensure_fresh_regions
         try:
             type(rel_b)._ensure_fresh_regions = lambda self: None
+            # (a narrower delete, so B publishes survivors to clean up)
             rel_b.rewrite_pruned(
-                "k <= 25",
-                lambda df: df.filter(F.expr("NOT coalesce((k <= 25), false)")),
+                "k <= 10",
+                lambda df: df.filter(F.expr("NOT coalesce((k <= 10), false)")),
                 preserve_stamps=True,
             )
         finally:
@@ -198,6 +208,26 @@ def test_conflicting_fragment_rewrite_aborts(spark, tmp_path, mode):
     paths = [r.path for r in meta.retired_regions]
     assert len(paths) == len(set(paths))  # no double retirement
     assert c.sql("SELECT count(*) c FROM cc6 WHERE k <= 25").collect()[0].c == 0
+    # B's abort cleanup: every rw- file on disk is known to the catalog
+    rel_c = c.relation("cc6")
+    known = {
+        os.path.basename(rel_c._local_path(p))
+        for p in [r.path for r in meta.regions + meta.retired_regions]
+        + list(meta.gc_pending)
+    }
+    data_dir = c.catalog.data_dir(meta)
+    orphans = [
+        f
+        for f in os.listdir(data_dir)
+        if f.startswith("rw-cc6-") and f.endswith(".parquet") and f not in known
+    ]
+    assert orphans == []
+    # …its reservation is rolled back: no pin, and no generation stamp
+    # that no fragment was written or retired at
+    assert meta.pinned_gens == []
+    gens = {r.seq for r in meta.regions + meta.retired_regions}
+    gens |= {r.retired_at for r in meta.retired_regions}
+    assert {int(g) for g in meta.generation_times} <= gens
 
 
 def test_meta_version_monotonic_and_cas_error_fields(spark, tmp_path, mode):

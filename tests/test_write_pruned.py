@@ -125,6 +125,24 @@ def test_delete_full_rewrite_fallbacks(astro, tmp_path):
     assert astro.sql("SELECT count(*) AS c FROM pt").collect()[0].c == 0
 
 
+def test_full_fallback_stats_count_pre_statement_live_files(astro, tmp_path):
+    """Every full-rewrite fallback reports the live fragment count BEFORE
+    the rewrite: an UPDATE falling back to the whole-table fold must not
+    report the compacted post-rewrite count."""
+    rel = _load_pt(astro, tmp_path)
+    astro.sql("INSERT INTO pt VALUES (500, 'x', 5000)")
+    rel._ensure_fresh_regions()
+    live = len(rel.meta.regions)
+    assert live == 9
+    astro.sql("UPDATE pt SET v = NULL WHERE k + 0 = 3")  # non-sargable
+    assert astro.last_write_stats == {
+        "files_total": live,
+        "files_rewritten": live,
+        "history": "folded",
+    }
+    assert astro.sql("SELECT v FROM pt WHERE k = 3").collect()[0].v is None
+
+
 def test_merge_delete_only_pruned_by_source_bounds(astro, tmp_path):
     rel = _load_pt(astro, tmp_path)
     before = _file_idents(astro, rel)
