@@ -29,15 +29,21 @@ The three extensions go beyond the reference's 8 storable atomic types
 (``HBaseCatalog.scala:425-446``) because modern Spark makes them free; the
 same flip-transform keeps them order-preserving.
 
-Scale note: the codec runs driver-side only for pruning bounds and split
-keys (O(#files) values), and executor-side vectorized via pandas when a
-rowkey column is materialized — never per-row on the driver.
+Scale note: this module runs driver-side only, for pruning bounds and
+split keys (O(#files) values) — never per row.  A materialized rowkey
+column is built in the JVM by ``relation.rowkey_sql``, the same rules as
+Spark built-ins (sign-bit XOR + ``hex``/``lpad``/``unhex``,
+``unix_date``/``unix_micros``, ``bround`` at scale 2,
+``floatToIntBits``/``doubleToLongBits`` via ``reflect``, UTF-8
+``encode``); the two are pinned byte-identical by
+``tests/test_small_write_commits.py``.  TIMESTAMPs encode their exact
+integer microseconds since the epoch (= ``unix_micros``).
 """
 
 from __future__ import annotations
 
 import struct
-from datetime import date, datetime, timezone
+from datetime import date, datetime, timedelta, timezone
 from decimal import Decimal
 
 # Canonical lower-case type names accepted by the DDL (HBaseSQLParser.scala:234-249
@@ -80,6 +86,8 @@ _ALIAS = {
 _INT_SPEC = {BYTE: (1, 0x80), SHORT: (2, 0x8000), INT: (4, 0x8000_0000), LONG: (8, 0x8000_0000_0000_0000)}
 
 _EPOCH = date(1970, 1, 1)
+_EPOCH_TS = datetime(1970, 1, 1, tzinfo=timezone.utc)
+_MICRO = timedelta(microseconds=1)
 _DEFAULT_DECIMAL_SCALE = 2
 
 
@@ -116,10 +124,13 @@ def _float_bits_decode(raw: bytes) -> bytes:
 
 
 def _to_micros(v) -> int:
+    # exact integer microseconds (= the JVM's ``unix_micros``): going
+    # through the float ``timestamp()`` rounds ~1% of values 1 µs off and
+    # can order t+1µs before t
     if isinstance(v, datetime):
         if v.tzinfo is None:
             v = v.replace(tzinfo=timezone.utc)
-        return int(v.timestamp() * 1_000_000)
+        return (v - _EPOCH_TS) // _MICRO
     if isinstance(v, (int, float)):
         return int(v)
     raise ValueError(f"cannot encode timestamp from {type(v)}")
@@ -171,8 +182,7 @@ def decode_value(raw: bytes, dtype: str, *, scale: int = _DEFAULT_DECIMAL_SCALE)
     if t == DATE:
         return _EPOCH.fromordinal(_EPOCH.toordinal() + _int_decode(raw, 0x8000_0000))
     if t == TIMESTAMP:
-        micros = _int_decode(raw, 0x8000_0000_0000_0000)
-        return datetime.fromtimestamp(micros / 1_000_000, tz=timezone.utc)
+        return _EPOCH_TS + _int_decode(raw, 0x8000_0000_0000_0000) * _MICRO
     if t == DECIMAL:
         return Decimal(_int_decode(raw, 0x8000_0000_0000_0000)) / (10**scale)
     raise ValueError(f"unsupported type {dtype!r}")

@@ -11,8 +11,8 @@ region bounds) with Spark-native storage, plus parquet row-group/page
 min-max skipping *inside* each region for free.
 
 Write path = the reference's bulk load re-expressed Spark-first
-(SURVEY §2.1 row 17): CSV/DataFrame → encode rowkey (vectorized Arrow
-pandas_udf — the only Python in the pipeline, write-side only) →
+(SURVEY §2.1 row 17): CSV/DataFrame → encode rowkey (one JVM expression
+over Spark built-ins, ``rowkey_sql``) →
 ``repartitionByRange(rowkey)`` (Spark's range-sampling replaces
 HBasePartitioner's explicit split keys) → ``sortWithinPartitions`` →
 per-partition parquet files.  INSERT INTO appends new sorted fragments
@@ -22,6 +22,8 @@ scanning all fragments; ``compact()`` rewrites into clean regions.
 Scale notes (100 TB):
 - the rowkey encode is map-local; the only shuffle is the range
   repartition, which any total-order bulk load needs.
+- an append commit stats only the fragments it wrote
+  (``_adopt_listing``): O(rows written), not O(table).
 - region count should track data size (1 GB targets); `num_regions`
   is the local knob, `repartitionByRange` handles skew by sampling.
 - file-bounds collection is one aggregate over (file → min/max), i.e.
@@ -220,24 +222,68 @@ def table_schema(meta: TableMeta) -> T.StructType:
     )
 
 
-def _rowkey_udf(key_dtypes: list[str]):
-    """Vectorized Arrow encoder: key columns → binary rowkey.
-
-    Write-side only; production variant would be a JVM expression, but an
-    Arrow-batched encode at bulk-load time is bandwidth-bound, not
-    CPU-bound.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    dtypes = list(key_dtypes)
-
-    @pandas_udf(T.BinaryType())
-    def encode(keys: pd.DataFrame) -> pd.Series:
-        return pd.Series(
-            [C.encode_key(list(vals), dtypes) for vals in zip(*[keys[c] for c in keys.columns])]
+def _key_component_sql(c: str, t: str, final: bool) -> str:
+    """SQL for one key component's bytes, byte-identical to
+    ``codec.encode_value``: fixed-width types as the big-endian bytes of
+    an order-preserving LONG (``unhex(lpad(hex(...)))`` — hex of a
+    negative LONG is its unsigned two's complement)."""
+    if t == C.STRING:
+        s = f"CAST({c} AS STRING)"
+        if final:
+            return f"encode({s}, 'UTF-8')"
+        return (
+            f"CASE WHEN instr({s}, chr(0)) > 0 THEN raise_error("
+            f"'NUL byte not allowed inside non-final string key component') "
+            f"ELSE concat(encode({s}, 'UTF-8'), X'00') END"
         )
+    if t == C.BOOLEAN:
+        return f"CASE WHEN CAST({c} AS BOOLEAN) THEN X'01' ELSE X'00' END"
+    w = C.FIXED_WIDTH[t]
+    if t in (C.BYTE, C.SHORT, C.INT):
+        typed = spark_type(t).simpleString()
+        bits = f"CAST(CAST({c} AS {typed}) AS BIGINT) + {2 ** (8 * w - 1)}"
+    elif t == C.DATE:
+        bits = f"CAST(unix_date(CAST({c} AS DATE)) AS BIGINT) + {2**31}"
+    else:
+        if t == C.LONG:
+            raw = f"CAST({c} AS BIGINT)"
+        elif t == C.TIMESTAMP:
+            raw = f"unix_micros(CAST({c} AS TIMESTAMP))"
+        elif t == C.DECIMAL:
+            # Decimal(str(v)) at scale 2, rounded half-even → unscaled
+            raw = f"CAST(CAST(bround({c}, 2) AS DECIMAL(20,2)) * 100 AS BIGINT)"
+        elif t == C.FLOAT:
+            # IEEE bits, NaN canonicalized like struct.pack
+            raw = f"CAST(reflect('java.lang.Float', 'floatToIntBits', CAST({c} AS FLOAT)) AS BIGINT)"
+        else:
+            raw = f"CAST(reflect('java.lang.Double', 'doubleToLongBits', CAST({c} AS DOUBLE)) AS BIGINT)"
+        # integers: flip the sign bit.  IEEE floats: a negative value
+        # flips every bit, a non-negative one sets the sign bit —
+        # branch-free as x ^ (x >> 63 | sign)
+        sign = 2**31 if t == C.FLOAT else -(2**63)
+        if t in (C.FLOAT, C.DOUBLE):
+            bits = f"({raw}) ^ (shiftright({raw}, 63) | {sign})"
+        else:
+            bits = f"({raw}) ^ {sign}"
+    return f"unhex(lpad(hex({bits}), {2 * w}, '0'))"
 
-    return encode
+
+def rowkey_sql(key_names: list[str], key_dtypes: list[str]) -> str:
+    """Key columns → binary rowkey as ONE Catalyst expression over Spark
+    built-ins, byte-identical to ``codec.encode_key`` — the encode runs
+    in the JVM, so no write plan enters a Python worker for it.  A NULL
+    component, or a NUL byte inside a non-final STRING, fails the write
+    (``raise_error``)."""
+    parts = []
+    last = len(key_names) - 1
+    for i, (k, d) in enumerate(zip(key_names, key_dtypes)):
+        c = "`" + k.replace("`", "``") + "`"
+        enc = _key_component_sql(c, C.normalize_type(d), i == last)
+        parts.append(
+            f"CASE WHEN {c} IS NULL THEN raise_error('key columns are non-nullable') "
+            f"ELSE {enc} END"
+        )
+    return f"concat({', '.join(parts)})"
 
 
 class AstroRelation:
@@ -267,8 +313,9 @@ class AstroRelation:
 
     # -- write --------------------------------------------------------------
     def _with_rowkey(self, df: DataFrame) -> DataFrame:
-        enc = _rowkey_udf(self.meta.key_dtypes)
-        return df.withColumn(ROWKEY_COL, enc(F.struct(*[F.col(k) for k in self.meta.key_names])))
+        return df.withColumn(
+            ROWKEY_COL, F.expr(rowkey_sql(self.meta.key_names, self.meta.key_dtypes))
+        )
 
     @property
     def spark_table_name(self) -> str:
@@ -461,18 +508,22 @@ class AstroRelation:
         # on conflict, reload (the sibling's retirements/stamps are now
         # the base; our reservation survives the reload, it was durably
         # committed) and re-derive from the directory ground truth.
+        # Only the fragments the listing shows as new are statted (plus
+        # their bloom sidecars and index entries): the commit costs what
+        # the statement wrote, not what the table holds.
         def finalize():
             self.meta.pinned_gens = [g for g in self.meta.pinned_gens if g != seq]
             if demoted:
                 self.meta.layout = "range"  # re-apply after a conflict reload
-            self._refresh_region_bounds()
+            self._adopt_listing()
 
         self._commit_retry(finalize)
         if not any(r.seq == seq for r in meta.regions):
             # the batch was EMPTY (no files written): an empty append is
-            # not a commit — roll the reservation back, or it lingers as
-            # a phantom generation (r10 fuzz: a no-op UPDATE's empty
-            # append left a stamped fileless generation behind)
+            # not a commit — leave the regions as they are and roll the
+            # reservation back, or it lingers as a phantom generation
+            # (r10 fuzz: a no-op UPDATE's empty append left a stamped
+            # fileless generation behind)
             self._unreserve_generation(seq)
         self._maybe_autocompact()
 
@@ -3001,39 +3052,45 @@ class AstroRelation:
         outputs (published only through a catalog commit) and are never
         adopted from a listing.  The stats job only runs when the file
         set drifted — the single-writer fast path stays probe+listing."""
-        import os
-
         meta = self.meta
         dv = self.catalog.disk_version(meta.name, meta.namespace)
         if dv >= 0 and dv != meta.meta_version:
             self.catalog.reload_into(meta)
         self._run_gc()
-        out_dir = self.catalog.data_dir(self.meta)
+        if not self._adopt_listing() and self.meta.regions and not self.meta.generation_times:
+            # legacy table written before commit stamping existed:
+            # backfill generation_times from file mtimes ONCE (r9,
+            # VERDICT r8 #3) so TIMESTAMP AS OF works without
+            # requiring a write first — update_regions stamps every
+            # unseen generation from its files' max mtime
+            self.catalog.update_regions(self.meta, self.meta.regions)
+
+    def _adopt_listing(self) -> bool:
+        """Reconcile the catalog's live set with one driver-side listing
+        of the data directory; False when they already agree (nothing
+        statted, nothing committed).  The one fragment diff behind both
+        the freshness pass and an append's commit, so the stats job runs
+        only over what drifted: an append (ours or a sibling's) stats
+        ONLY the unseen fragments — at 10⁵-10⁶ files one small append
+        must not trigger a whole-table stats job (VERDICT r5 item 3).
+        Unknown ``rw-`` files are PRE-COMMIT rewrite outputs (published
+        only through a catalog commit) and are never adopted here."""
+        meta = self.meta
+        out_dir = self.catalog.data_dir(meta)
         if not os.path.isdir(out_dir):
-            return
+            return False
         on_disk = {f for f in os.listdir(out_dir) if f.endswith(".parquet")}
         # retired fragments (MVCC retention, r10) live in the same
         # directory but are NOT part of the live region set — known to
         # the freshness check, never re-adopted as live; ditto anything
         # still awaiting the post-commit reclaim
-        retired = {os.path.basename(r.path) for r in self.meta.retired_regions}
-        retired |= {os.path.basename(p) for p in self.meta.gc_pending}
-        on_disk -= retired
-        known = {os.path.basename(r.path) for r in self.meta.regions}
+        on_disk -= {os.path.basename(r.path) for r in meta.retired_regions}
+        on_disk -= {os.path.basename(p) for p in meta.gc_pending}
+        known = {os.path.basename(r.path) for r in meta.regions}
         # unknown rewrite outputs: ours or a sibling's, not yet committed
-        on_disk -= {f for f in on_disk - known if f.startswith("rw-")}
-        if on_disk == known:
-            if self.meta.regions and not self.meta.generation_times:
-                # legacy table written before commit stamping existed:
-                # backfill generation_times from file mtimes ONCE (r9,
-                # VERDICT r8 #3) so TIMESTAMP AS OF works without
-                # requiring a write first — update_regions stamps every
-                # unseen generation from its files' max mtime
-                self.catalog.update_regions(self.meta, self.meta.regions)
-            return
-        new = on_disk - known
+        new = {f for f in on_disk - known if not f.startswith("rw-")}
         gone = known - on_disk
-        if gone or not new:
+        if gone:
             # files vanished (compaction / overwrite by a MANY-TO-ONE
             # sibling, whose commit lives in ITS meta file): the
             # catalog's view of survivors may be stale too — full restat,
@@ -3048,14 +3105,11 @@ class AstroRelation:
             # rows the rewrite removed, and a rebasing rewrite makes
             # stored ``_g`` incomparable).  REINDEX re-attests.
             self._refresh_region_bounds(adopt_rw=True, drops_live=True)
-        else:
-            # pure appends: stat ONLY the unseen fragments and merge with
-            # the known region metadata — at 10⁵-10⁶ files one sibling
-            # append must not trigger a whole-table stats job (VERDICT r5
-            # item 3)
+        elif new:
             self._refresh_region_bounds(
                 only=[os.path.join(out_dir, f) for f in sorted(new)]
             )
+        return bool(new or gone)
 
     def _refresh_region_bounds(
         self,
