@@ -91,6 +91,9 @@ class PruneResult:
     # pending upserts but the index stayed merge_exact); None/False on
     # the plain covering fast path
     index_merge: bool = False
+    # the per-read merge decision: needs_merge() over the files that
+    # survived key-range and bloom pruning; None when no file is read
+    merge: bool | None = None
 
     @property
     def pruned(self) -> int:

@@ -3270,12 +3270,18 @@ class AstroRelation:
         )
 
     # -- upsert resolution ---------------------------------------------------
-    def needs_merge(self) -> bool:
-        """True iff some row key may appear in more than one physical row:
-        duplicate keys inside a fragment, or key-range overlap between
-        fragments.  Pure metadata check (O(#files log #files)); when False
-        the scan fast path applies — no shuffle, no merge."""
-        regs = self.meta.regions
+    def needs_merge(self, regions: list[RegionFile] | None = None) -> bool:
+        """True iff some row key may appear in more than one physical row
+        of ``regions`` (default: every live fragment): duplicate keys
+        inside a fragment, or key-range overlap between fragments.  Pure
+        metadata check (O(#files log #files)); when False the scan fast
+        path applies — no shuffle, no merge.
+
+        ``scan_where`` passes the fragments that survived key-range and
+        bloom pruning: every fragment holding a key the predicate can
+        match survives both, so all versions of such a key lie inside
+        that subset and the subset's answer is exact for the read."""
+        regs = self.meta.regions if regions is None else regions
         if any(r.num_keys >= 0 and r.num_keys != r.num_rows for r in regs):
             return True
         if self.meta.layout == "zorder" and len({r.seq for r in regs}) <= 1:
@@ -3288,6 +3294,26 @@ class AstroRelation:
         # hex-of-bytes compares identically to unsigned byte order
         return any(a.max_rowkey_hex >= b.min_rowkey_hex for a, b in zip(rs, rs[1:]))
 
+    def _merge_group_keys(self) -> list[str]:
+        """Key columns whose stored value is a function of the rowkey, so
+        grouping by them next to ``_rk`` leaves the groups unchanged:
+        integer types, DATE, TIMESTAMP (exact µs), BOOLEAN, STRING and
+        DECIMAL on binaryformat tables.  Every DECIMAL is stored as
+        ``decimal(20,2)``, the scale its rowkey rounds to; a wider stored
+        scale would not be a function of the rowkey.  Excluded:
+        FLOAT/DOUBLE (Spark normalizes −0.0 and NaN in grouping keys,
+        which the rowkey tells apart) and stringformat keys other than
+        STRING (the raw string of a number or date is not proven
+        canonical)."""
+        exact = {C.STRING}
+        if self.meta.encoding != STRING_FORMAT:
+            exact |= {C.BYTE, C.SHORT, C.INT, C.LONG, C.DATE, C.TIMESTAMP, C.BOOLEAN, C.DECIMAL}
+        return [
+            k
+            for k, d in zip(self.meta.key_names, self.meta.key_dtypes)
+            if C.normalize_type(d) in exact
+        ]
+
     def _merge_latest(self, df: DataFrame) -> DataFrame:
         """Resolve upserts with HBase read semantics: per COLUMN, the
         newest non-null cell wins (getColumnLatestCell,
@@ -3296,19 +3322,34 @@ class AstroRelation:
         cannot write nulls; INSERT skips null columns,
         HBaseRelation.scala:677-694).
 
-        One hash shuffle on rowkey with partial aggregation; only runs
-        when needs_merge() — compact() restores the shuffle-free path.
+        One hash shuffle with partial aggregation, grouped by the rowkey
+        plus every key column that is a function of it
+        (:meth:`_merge_group_keys`).  Every aggregate is deterministic, so
+        Catalyst pushes key conjuncts — from the SQL view and from
+        ``scan_where`` alike — below the aggregate into the parquet scan:
+        the merge shuffles only the keys a query asks for.  Non-key
+        conjuncts stay above it, so a superseded value never matches.
+        The remaining key columns are constant per rowkey and take a
+        deterministic ``max``; a table with no other column (an index
+        table) aggregates ``max(_seq)`` because ``agg()`` needs one
+        expression.  Only runs when needs_merge() — compact() restores
+        the shuffle-free path.
         """
+        group = self._merge_group_keys()
         keys = set(self.meta.key_names)
         aggs = []
         for c, _dt in self.meta.all_columns:
+            if c in group:
+                continue
             if c in keys:
-                aggs.append(F.first(F.col(c)).alias(c))  # constant per rowkey
+                aggs.append(F.max(F.col(c)).alias(c))  # constant per rowkey
             else:
                 aggs.append(
                     F.max_by(F.col(c), F.when(F.col(c).isNotNull(), F.col(SEQ_COL))).alias(c)
                 )
-        return df.groupBy(ROWKEY_COL).agg(*aggs)
+        if not aggs:
+            aggs.append(F.max(F.col(SEQ_COL)).alias(SEQ_COL))
+        return df.groupBy(ROWKEY_COL, *group).agg(*aggs)
 
     # -- bulk load (CSV) ----------------------------------------------------
     def load_csv(self, path: str, delimiter: str = ",") -> None:
@@ -3707,11 +3748,15 @@ class AstroRelation:
         """Shared scan tail: absent-cell NULLs for ALTER-ADDed columns
         (HBaseRelation.scala:885-901), upsert merge when needed, and
         schema-on-read casts for stringformat tables (SURVEY §7 step 8).
+        The output schema is :meth:`_scan_schema`.  A filter over the
+        result reaches the parquet scan for its key conjuncts whether or
+        not the merge runs (see :meth:`_merge_latest`).
 
         ``needs_merge`` overrides the table-global metadata check when
         the caller resolves a fragment SUBSET whose merge-ness it knows
-        exactly (rewrite_pruned's island closure) — the global check
-        would charge a merge-free subset for overlap elsewhere."""
+        exactly (``scan_where``'s pruned files, rewrite_pruned's island
+        closure) — the global check would charge a merge-free subset for
+        overlap elsewhere."""
         meta = self.meta
         present = set(df.columns)
         if SEQ_COL not in present:
@@ -3732,6 +3777,14 @@ class AstroRelation:
         if with_rowkey:
             cols.append(F.col(ROWKEY_COL))
         return df.select(*cols)
+
+    def _scan_schema(self) -> T.StructType:
+        """Schema of every ``scan()`` / ``scan_where`` result, from the
+        metadata alone: declared columns in order, typed, all nullable
+        (the read schema is nullable and no step narrows it)."""
+        return T.StructType(
+            [T.StructField(c, spark_type(dt), True) for c, dt in self.meta.all_columns]
+        )
 
     def register_view(self, name: str | None = None) -> None:
         self.scan().createOrReplaceTempView(name or self.meta.name)
@@ -3795,7 +3848,7 @@ class AstroRelation:
                     res.index_used = index_col
                     res.index_mode = "empty"
                     res.index_candidates = 0
-                    df = self.spark.createDataFrame([], self.scan().schema)
+                    df = self.spark.createDataFrame([], self._scan_schema())
                     return df, res
                 if route["kind"] == "augment":
                     where = f"({where}) AND {route['aug']}"
@@ -3831,20 +3884,22 @@ class AstroRelation:
                 res.files = [rf for rf in res.files if self._bloom_admits(rf, pts)]
                 res.bloom_skipped = res.bloom_probed - len(res.files)
         if not res.files:
-            df = self.spark.createDataFrame([], self.scan().schema)
+            df = self.spark.createDataFrame([], self._scan_schema())
             return df, res
         paths = [r.path for r in res.files]
         # any fragment holding a given key overlaps every key range that
-        # contains it, so range pruning keeps ALL versions of a surviving
-        # key — merging over the pruned subset is exact
+        # contains it, and a bloom skips only fragments proven not to
+        # hold it, so pruning keeps ALL versions of a surviving key —
+        # the merge decision and the merge itself need only the subset
+        res.merge = self.needs_merge(res.files)
         raw = self._read_fragments(*paths)
         if meta.encoding == STRING_FORMAT and not isinstance(res.predicate, Opaque):
             # stringformat pushdown (comparators.scala:47-243 parity): a
             # string-space superset of the typed predicate, applied to the
             # raw stored columns BEFORE the schema-on-read cast so it
             # reaches parquet as PushedFilters.  Sound because the full
-            # typed predicate is re-applied below.  Skipped under pending
-            # upserts: pre-merge row filtering could drop a newer version
+            # typed predicate is re-applied below.  Skipped when this read
+            # merges: pre-merge row filtering could drop a newer version
             # of a key while keeping an older one, corrupting the
             # newest-cell-wins merge.
             from spark_sql_on_hbase_spark.predicate import (
@@ -3852,13 +3907,13 @@ class AstroRelation:
                 string_pushdown,
             )
 
-            if not self.needs_merge() and referenced_columns(res.predicate) <= set(raw.columns):
+            if not res.merge and referenced_columns(res.predicate) <= set(raw.columns):
                 coltypes = {c: C.normalize_type(dt) for c, dt in meta.all_columns}
                 sf_pred = string_pushdown(res.predicate, coltypes)
                 if sf_pred is not None:
                     res.sf_pushdown = sf_pred
                     raw = raw.filter(F.expr(sf_pred))
-        df = self._resolve(raw)
+        df = self._resolve(raw, needs_merge=res.merge)
         if semi_keys is not None:
             # r13 over-cap index path: exact key membership via a
             # distributed leftsemi join against the index-side key set

@@ -315,6 +315,21 @@ class AstroSession:
             except Exception:
                 return repr(p)
 
+        def _merge():
+            n = len(res.files)
+            if res.index_merge:
+                return f"newest-cell-wins index-side over {n} index files"
+            if res.merge is None:
+                return "none (no files read)"
+            if not res.merge:
+                return "none (1 key-unique file)" if n == 1 else f"none ({n} key-disjoint files)"
+            below = rel._merge_group_keys()
+            return f"newest-cell-wins over {n} files, " + (
+                f"key conjuncts on ({', '.join(below)}) below"
+                if below
+                else "grouped by rowkey only (key conjuncts above)"
+            )
+
         meta = rel.meta
         rows = [
             ("table", f"{c.namespace}.{c.table}"),
@@ -370,6 +385,7 @@ class AstroSession:
                 else "false",
             ),
             ("pending_merge", str(rel.needs_merge()).lower()),
+            ("merge", _merge()),
             (
                 "effective_predicate",
                 _render(res.predicate),

@@ -1,5 +1,6 @@
 import os
 import sys
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -56,6 +57,21 @@ def pytest_collection_modifyitems(config, items):
         if any(path == e or path.startswith(e + os.sep) for e in explicit):
             continue  # named explicitly — run it
         item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Skip counts by reason after every run, so a lane that silently
+    loses coverage (the reference-fixture ports skip when the fixture
+    checkout is absent) shows in every summary."""
+    counts = Counter()
+    for rep in terminalreporter.stats.get("skipped", []):
+        lr = rep.longrepr
+        reason = lr[2] if isinstance(lr, tuple) else str(lr)
+        counts[reason.removeprefix("Skipped: ")] += 1
+    if counts:
+        terminalreporter.section("skips by reason")
+        for reason, n in counts.most_common():
+            terminalreporter.write_line(f"{n:5d}  {reason}")
 
 
 @pytest.fixture()

@@ -326,3 +326,4 @@ def test_explain_scan_reports_merge_on_read(astro):
     out = astro.sql("EXPLAIN SCAN cmr COLUMNS (k1, amt) WHERE status = 'E'")
     text = "\n".join(" ".join(str(c) for c in r) for r in out.collect())
     assert "merge-on-read" in text, text
+    assert "merge newest-cell-wins index-side over " in text, text
