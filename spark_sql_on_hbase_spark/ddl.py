@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from decimal import Decimal, InvalidOperation
 
 
 @dataclass
@@ -507,6 +508,10 @@ _ALTER_DROP_RE = re.compile(
 
 
 def _parse_literal(tok: str):
+    """One VALUES literal.  A non-integer number is kept as its exact
+    ``Decimal`` text; the insert coerces it by the column's type
+    (``AstroSession._coerce``), so a DECIMAL column gets ``1.23``, not
+    the float nearest to it."""
     tok = tok.strip()
     if tok.upper() == "NULL":
         return None
@@ -519,8 +524,8 @@ def _parse_literal(tok: str):
     except ValueError:
         pass
     try:
-        return float(tok)
-    except ValueError:
+        return Decimal(tok)
+    except InvalidOperation:
         pass
     raise ValueError(f"cannot parse literal {tok!r}")
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from decimal import Decimal
 from typing import Optional, Union
 
 TRUE, FALSE, UNKNOWN = 1, 0, -1
@@ -93,8 +94,9 @@ _TOKEN_RE = re.compile(
 
 
 class _Tokens:
-    def __init__(self, text: str):
+    def __init__(self, text: str, coltypes: dict[str, str] | None = None):
         self.text = text
+        self.coltypes = coltypes or {}
         self.toks: list[tuple[str, str]] = []
         # source span of each token, so opaque-leaf recovery can return
         # the ORIGINAL text slice — re-joining token values would mangle
@@ -142,10 +144,16 @@ class _Tokens:
         return v
 
 
-def _literal(kind: str, raw: str):
+def _literal(kind: str, raw: str, dtype: str | None = None):
+    """Python value of one literal token.  ``dtype`` is the normalized
+    type of the column it is compared with: a number compared with a
+    DECIMAL column keeps its exact text (``1.23`` as float never equals
+    the stored ``Decimal('1.23')``, so pruning would drop every file)."""
     if kind == "str":
         return raw[1:-1].replace("''", "'")
     if kind == "num":
+        if dtype == "decimal":
+            return Decimal(raw)
         return float(raw) if ("." in raw or "e" in raw or "E" in raw) else int(raw)
     if kind == "word":
         up = raw.upper()
@@ -158,7 +166,7 @@ def _literal(kind: str, raw: str):
     raise ValueError(f"bad literal {raw!r}")
 
 
-def parse_predicate(text: str) -> Pred:
+def parse_predicate(text: str, coltypes: dict[str, str] | None = None) -> Pred:
     """Parse a WHERE-style expression.  Grammar:
 
     expr   := term (OR term)*
@@ -166,8 +174,11 @@ def parse_predicate(text: str) -> Pred:
     factor := NOT factor | '(' expr ')' | atom
     atom   := col op literal | literal op col | col [NOT] BETWEEN a AND b
             | col [NOT] IN (lit, ...) | col IS [NOT] NULL
+
+    ``coltypes`` (column → normalized type, ``pruning.column_types``)
+    coerces each literal by the type of the column it is compared with.
     """
-    t = _Tokens(text)
+    t = _Tokens(text, coltypes)
     p = _parse_or(t)
     if t.i != len(t.toks):
         raise ValueError(f"trailing tokens in predicate: {t.toks[t.i:]}")
@@ -244,9 +255,9 @@ def _parse_factor_strict(t: _Tokens) -> Pred:
     kind, raw = t.next()
     if kind in ("str", "num"):
         # literal op col
-        lit = _literal(kind, raw)
         op = t.expect("op")
         col = t.expect("word")
+        lit = _literal(kind, raw, t.coltypes.get(col))
         op = _FLIP.get(op, op)
         if op in ("<>", "!="):
             op = "!="
@@ -254,6 +265,7 @@ def _parse_factor_strict(t: _Tokens) -> Pred:
     if kind != "word":
         raise ValueError(f"unexpected token {raw!r}")
     col = raw
+    dtype = t.coltypes.get(col)
     if t.peek("word", "IS"):
         t.next()
         if t.peek("word", "NOT"):
@@ -269,10 +281,10 @@ def _parse_factor_strict(t: _Tokens) -> Pred:
     if t.peek("word", "BETWEEN"):
         t.next()
         k1, r1 = t.next()
-        lo = _literal(k1, r1)
+        lo = _literal(k1, r1, dtype)
         t.expect("word", "AND")
         k2, r2 = t.next()
-        hi = _literal(k2, r2)
+        hi = _literal(k2, r2, dtype)
         rng = And((Comparison(">=", col, lo), Comparison("<=", col, hi)))
         return Not(rng) if negate else rng
     if t.peek("word", "IN"):
@@ -281,7 +293,7 @@ def _parse_factor_strict(t: _Tokens) -> Pred:
         vals = []
         while True:
             k, r = t.next()
-            vals.append(_literal(k, r))
+            vals.append(_literal(k, r, dtype))
             if t.peek("comma"):
                 t.next()
                 continue
@@ -293,7 +305,7 @@ def _parse_factor_strict(t: _Tokens) -> Pred:
         raise ValueError("dangling NOT")
     op = t.expect("op")
     k, r = t.next()
-    lit = _literal(k, r)
+    lit = _literal(k, r, dtype)
     if op in ("<>", "!="):
         op = "!="
     return Comparison(op=op, col=col, value=lit)
@@ -954,6 +966,8 @@ def _lit_sql(v) -> str:
         return "TRUE" if v else "FALSE"
     if isinstance(v, str):
         return "'" + v.replace("'", "''") + "'"
+    if isinstance(v, Decimal):
+        return str(v)  # Spark reads 1.23 as a DECIMAL literal
     return repr(v)
 
 

@@ -94,6 +94,12 @@ class PruneResult:
     # the per-read merge decision: needs_merge() over the files that
     # survived key-range and bloom pruning; None when no file is read
     merge: bool | None = None
+    # the index probe behind index_mode: (index files read, index files
+    # total); the probe never merges.  None when no index engaged
+    index_probe: tuple[int, int] | None = None
+    # how many exact index candidate rowkeys the blooms were probed
+    # with (instead of the predicate's point set); None otherwise
+    bloom_index_keys: int | None = None
 
     @property
     def pruned(self) -> int:
@@ -138,7 +144,14 @@ def file_envelope(rf: RegionFile, meta: TableMeta) -> dict[str, Interval]:
     return env
 
 
-def point_rowkeys(pred: Pred | None, meta: TableMeta, cap: int = 256) -> list[bytes] | None:
+# most rowkeys one read probes the ROW-bloom sidecars with (the
+# batched-Get point set); a larger set reads the range survivors as-is
+POINT_PROBE_CAP = 256
+
+
+def point_rowkeys(
+    pred: Pred | None, meta: TableMeta, cap: int = POINT_PROBE_CAP
+) -> list[bytes] | None:
     """Explicit full-rowkey point set of a predicate, or None.
 
     Returns the encoded rowkeys the predicate restricts the scan to when
@@ -277,8 +290,14 @@ def manifest_groups(meta: TableMeta):
     return groups
 
 
+def column_types(meta: TableMeta) -> dict[str, str]:
+    """Normalized type of every column: the ``coltypes`` that
+    ``parse_predicate`` coerces literals by."""
+    return {c: C.normalize_type(dt) for c, dt in meta.all_columns}
+
+
 def prune_files(meta: TableMeta, where: str | Pred) -> PruneResult:
-    pred = parse_predicate(where) if isinstance(where, str) else where
+    pred = parse_predicate(where, column_types(meta)) if isinstance(where, str) else where
     key_pushed, residual = classify(pred, set(meta.key_names))
     survivors = []
     groups = (

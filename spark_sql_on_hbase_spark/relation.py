@@ -1407,7 +1407,7 @@ class AstroRelation:
             referenced_columns,
             to_column,
         )
-        from spark_sql_on_hbase_spark.pruning import prune_files
+        from spark_sql_on_hbase_spark.pruning import column_types, prune_files
 
         meta = self.meta
         self._keyset_retention_fallback = None
@@ -1429,7 +1429,7 @@ class AstroRelation:
         match = where
         if not keyset:
             try:
-                match = parse_predicate(where)
+                match = parse_predicate(where, column_types(meta))
             except ValueError:
                 return None
             refs = referenced_columns(match)
@@ -2751,18 +2751,6 @@ class AstroRelation:
     # plain scan beats shuffling the whole frame through a join
     INDEX_SEMIJOIN_MAX_FRAC = 0.25
 
-    def _index_candidates(self, where: str):
-        """Back-compat shim over :meth:`_index_route` — the r12 3-tuple
-        (augment_sql, col, n) for the driver-collected candidate path,
-        ("", col, 0) for the empty proof, None otherwise (including when
-        the r13 semi-join path would engage)."""
-        route = self._index_route(where)
-        if route is None or route["kind"] in ("semijoin", "none"):
-            return None
-        if route["kind"] == "empty":
-            return ("", route["col"], 0)
-        return (route["aug"], route["col"], route["n"])
-
     def _servable_index_conjuncts(self, where: str):
         """Per indexed column, the AND-conjuncts of ``where`` an index
         can serve — the single servability definition behind both
@@ -2868,16 +2856,33 @@ class AstroRelation:
         an over-cap distributed semi-join, the Phoenix global-index
         join-path analog).  Returns None (no index path) or a dict:
 
-        - ``{"kind": "empty", "col"}`` — the index PROVES no key matches
-        - ``{"kind": "augment", "col", "aug", "n"}`` — ≤cap candidate
-          keys, folded into the pruning predicate as a per-dimension IN
-          superset (the r12 path, now fed by range conjuncts too)
-        - ``{"kind": "semijoin", "col", "keys", "aug", "n"}`` — over-cap:
-          ``keys`` is the DISTINCT main-key frame from the pruned
-          index-side scan (stays distributed — never collected); ``aug``
-          is a per-dimension min/max BETWEEN superset (O(#dims) scalars
-          to the driver) used for file pruning + parquet pushdown; the
-          caller leftsemi-joins ``keys`` for exactness.
+        - ``{"kind": "empty", "col", "probe"}`` — the index PROVES no key
+          matches
+        - ``{"kind": "augment", "col", "aug", "n", "rowkeys", "probe"}``
+          — ≤cap distinct candidate keys, folded into the pruning
+          predicate as a per-dimension IN superset; ``rowkeys`` are the
+          candidates' encoded rowkeys when there are at most
+          ``POINT_PROBE_CAP`` of them (else None), which scan_where
+          probes the ROW-bloom sidecars with — the batched-Get analog
+          (HBaseSQLReaderRDD.scala:270-315) fed by the exact key set
+          instead of the IN×IN cross product of ``aug``
+        - ``{"kind": "semijoin", "col", "keys", "aug", "n", "probe"}`` —
+          over-cap: ``keys`` is the DISTINCT main-key frame from the
+          pruned index-side scan (stays distributed — never collected);
+          ``aug`` is a per-dimension min/max BETWEEN superset (O(#dims)
+          scalars to the driver) used for file pruning + parquet
+          pushdown; the caller leftsemi-joins ``keys`` for exactness.
+
+        ``probe`` is (index files read, index files total).  The probe
+        is the index table's ``scan_where`` with ``merge=False``: its
+        conjuncts are on index-table key columns, so filtering before
+        or after the newest-cell-wins merge keeps the same (col, key)
+        tuples and only duplicates differ — they are dropped on the
+        driver.  When the catalog row counts of the surviving index
+        fragments already fit the cap, a plain ``collect()`` is exact
+        and runs one Spark job; otherwise ``limit(cap + 1)`` bounds the
+        collect, and only more than ``cap`` raw rows pay a ``distinct``
+        (the over-cap count and the semi-join).
 
         Soundness is unchanged from r12: every path yields a SUPERSET of
         the matching rows (the index is superset-maintained; the augment
@@ -2892,6 +2897,7 @@ class AstroRelation:
             render,
             _lit_sql,
         )
+        from spark_sql_on_hbase_spark.pruning import POINT_PROBE_CAP
 
         # the candidate keys / bounds must render back into parseable
         # SQL literals — temporal/decimal key columns don't round-trip
@@ -2975,28 +2981,47 @@ class AstroRelation:
         probe_sql = " AND ".join(render(c) for c in probe_conjuncts)
         cap = self.INDEX_LOOKUP_CAP
         try:
-            idx_df, _ = idx_rel.scan_where(probe_sql)
-            keys = idx_df.select(*self.meta.key_names).distinct()
-            rows = keys.limit(cap + 1).collect()
+            idx_df, idx_res = idx_rel.scan_where(probe_sql, merge=False)
+            raw = idx_df.select(*self.meta.key_names)
+            if not idx_res.files:
+                rows = []
+            elif sum(r.num_rows for r in idx_res.files) <= cap:
+                rows = raw.collect()
+            else:
+                rows = raw.limit(cap + 1).collect()
+            over_cap = len(rows) > cap
+            if over_cap:
+                # the only path to the semi-join below, which uses keys
+                keys = raw.distinct()
+                rows = keys.limit(cap + 1).collect()
         except Exception:
             return None  # index unreadable → full scan (never a dependency)
+        probe = (len(idx_res.files), idx_res.total)
         if not rows:
-            return {"kind": "empty", "col": col}
-        if len(rows) <= cap:
+            return {"kind": "empty", "col": col, "probe": probe}
+        # deduplicated by rowkey, the store's key identity (a set of
+        # values would fold -0.0 into 0.0)
+        cands = {C.encode_key(list(r), self.meta.key_dtypes): r for r in rows}
+        if len(cands) <= cap:
             parts = []
             try:
                 for i, k in enumerate(self.meta.key_names):
-                    vals = sorted({r[i] for r in rows})
+                    vals = sorted({r[i] for r in cands.values()})
                     parts.append(
                         f"{k} IN ({', '.join(_lit_sql(v) for v in vals)})"
                     )
             except (TypeError, ValueError):
                 return None  # un-renderable key literal (exotic type)
+            # only stored values encode to stored rowkeys: Spark's
+            # distinct normalizes -0.0 and NaN in FLOAT/DOUBLE keys
+            exact = not over_cap and len(cands) <= POINT_PROBE_CAP
             return {
                 "kind": "augment",
                 "col": col,
                 "aug": " AND ".join(parts),
-                "n": len(rows),
+                "n": len(cands),
+                "rowkeys": sorted(cands) if exact else None,
+                "probe": probe,
             }
         # over-cap (r13): index-side scan + distributed semi-join.
         # Bail when the key set is a large fraction of the table —
@@ -3036,7 +3061,9 @@ class AstroRelation:
             aug = " AND ".join(parts) if parts else None
         except Exception:
             aug = None  # bounds are an optimization; the join is exact
-        return {"kind": "semijoin", "col": col, "keys": keys, "aug": aug, "n": n_keys}
+        return {
+            "kind": "semijoin", "col": col, "keys": keys, "aug": aug, "n": n_keys, "probe": probe,
+        }
 
     def _ensure_fresh_regions(self) -> None:
         """Region-info freshness: (1) cross-SESSION — a sibling session's
@@ -3796,11 +3823,24 @@ class AstroRelation:
             self.catalog, self.meta
         )
 
-    def scan_where(self, where: str):
+    def scan_where(self, where: str, *, merge: bool = True):
         """Pruned scan: CPR file pruning on key-column predicates, then the
         FULL predicate re-applied over the surviving files (pruning is an
         optimization, never a correctness dependency — SURVEY §7
         known-hard #2).
+
+        A predicate on an indexed column routes through the index first
+        (:meth:`_index_route`): one merge-free probe job collects the
+        candidate keys, which narrow the pruning predicate and — up to
+        ``POINT_PROBE_CAP`` of them — are the exact points the ROW-bloom
+        sidecars are probed with, so a fragment holding no candidate is
+        skipped and the read often needs no merge.
+
+        ``merge=False`` skips the newest-cell-wins merge and returns
+        every stored version of each matching row.  Only sound when
+        duplicates do not matter and the predicate is on key columns
+        alone (a non-key conjunct could match a superseded value); the
+        index probe is the one caller.
 
         Returns (DataFrame, PruneResult); PruneResult carries
         files-read/files-total for plan assertions and bench metrics
@@ -3816,6 +3856,8 @@ class AstroRelation:
         index_mode = None
         index_n = None
         index_declined = None
+        index_probe = None
+        cand_rowkeys = None
         semi_keys = None
         if meta.indexes and self._full_key_pinned(where):
             # r14 short-circuit (VERDICT r13 #5): a full-key point/IN
@@ -3827,12 +3869,12 @@ class AstroRelation:
             # secondary-index routing (r12, extended r13): =/IN and
             # non-string RANGE conjuncts on an indexed column resolve
             # through the index table.  ≤cap candidates fold into the
-            # pruning predicate as a per-dimension IN superset; over-cap
-            # becomes an index-side scan semi-joined distributed, with
-            # min/max bounds folded for file pruning.  The FULL original
-            # predicate is still applied below, so stale index entries
-            # (old upsert values, deleted rows) only cost reads, never
-            # wrong rows.
+            # pruning predicate as a per-dimension IN superset and drive
+            # the bloom probe below; over-cap becomes an index-side scan
+            # semi-joined distributed, with min/max bounds folded for
+            # file pruning.  The FULL original predicate is still
+            # applied below, so stale index entries (old upsert values,
+            # deleted rows) only cost reads, never wrong rows.
             route = self._index_route(where)
             if route is not None and route["kind"] == "none":
                 index_declined = route.get("reason")
@@ -3841,6 +3883,7 @@ class AstroRelation:
                 index_col = route["col"]
                 index_mode = route["kind"]
                 index_n = route.get("n")
+                index_probe = route["probe"]
                 if route["kind"] == "empty":
                     # the index proves no key carries the value
                     res = prune_files(meta, where)
@@ -3848,10 +3891,12 @@ class AstroRelation:
                     res.index_used = index_col
                     res.index_mode = "empty"
                     res.index_candidates = 0
+                    res.index_probe = index_probe
                     df = self.spark.createDataFrame([], self._scan_schema())
                     return df, res
                 if route["kind"] == "augment":
                     where = f"({where}) AND {route['aug']}"
+                    cand_rowkeys = route["rowkeys"]
                 else:  # semijoin
                     semi_keys = route["keys"]
                     if route["aug"]:
@@ -3862,6 +3907,7 @@ class AstroRelation:
             res.index_mode = index_mode
             res.index_candidates = index_n
             res.index_declined = index_declined
+            res.index_probe = index_probe
         except ValueError:
             # non-sargable / unparseable predicate → graceful full scan
             # (reference Tpc Query 27: ss_ticket_number + 0 = 3 scans all,
@@ -3875,10 +3921,16 @@ class AstroRelation:
             # full-key point/IN scan drops range-surviving fragments
             # whose sidecar proves every probed key absent — after k
             # trickle appends a point lookup reads the 1-2 fragments
-            # that may hold the key, not all k
+            # that may hold the key, not all k.  An index lookup probes
+            # its exact candidate keys: every fragment holding a version
+            # of a candidate admits that candidate.
             from spark_sql_on_hbase_spark.pruning import point_rowkeys
 
-            pts = point_rowkeys(res.predicate, meta)
+            pts = cand_rowkeys
+            if pts is None:
+                pts = point_rowkeys(res.predicate, meta)
+            else:
+                res.bloom_index_keys = len(pts)
             if pts is not None:
                 res.bloom_probed = len(res.files)
                 res.files = [rf for rf in res.files if self._bloom_admits(rf, pts)]
@@ -3891,7 +3943,7 @@ class AstroRelation:
         # contains it, and a bloom skips only fragments proven not to
         # hold it, so pruning keeps ALL versions of a surviving key —
         # the merge decision and the merge itself need only the subset
-        res.merge = self.needs_merge(res.files)
+        res.merge = merge and self.needs_merge(res.files)
         raw = self._read_fragments(*paths)
         if meta.encoding == STRING_FORMAT and not isinstance(res.predicate, Opaque):
             # stringformat pushdown (comparators.scala:47-243 parity): a

@@ -19,6 +19,7 @@ Usage::
 from __future__ import annotations
 
 import re
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -330,6 +331,31 @@ class AstroSession:
                 else "grouped by rowkey only (key conjuncts above)"
             )
 
+        def _index_mode():
+            out = res.index_mode or "(none)"
+            if res.index_candidates is not None:
+                probe = ""
+                if res.index_probe is not None:
+                    read, total = res.index_probe
+                    probe = f"; probe read {read} of {total} index files, no merge"
+                out += f" ({res.index_candidates} candidate keys{probe})"
+            if res.index_declined:
+                out += f" — declined: {res.index_declined}"
+            return out
+
+        def _bloom_outcome():
+            if res.bloom_probed is None:
+                return "(not consulted — no sidecars or non-point predicate)"
+            keys = (
+                f" with {res.bloom_index_keys} index candidate keys"
+                if res.bloom_index_keys is not None
+                else ""
+            )
+            return (
+                f"probed {res.bloom_probed} range-surviving files{keys}, "
+                f"skipped {res.bloom_skipped}"
+            )
+
         meta = rel.meta
         rows = [
             ("table", f"{c.namespace}.{c.table}"),
@@ -337,30 +363,9 @@ class AstroSession:
             ("files_read", str(len(res.files))),
             ("files_pruned", str(res.pruned)),
             ("index_used", res.index_used or "(none)"),
-            (
-                "index_mode",
-                (res.index_mode or "(none)")
-                + (
-                    f" ({res.index_candidates} candidate keys)"
-                    if res.index_candidates is not None
-                    else ""
-                )
-                + (
-                    f" — declined: {res.index_declined}"
-                    if res.index_declined
-                    else ""
-                ),
-            ),
+            ("index_mode", _index_mode()),
             ("bloomfilter", meta.bloomfilter or "none"),
-            (
-                "bloom_outcome",
-                (
-                    f"probed {res.bloom_probed} range-surviving files, "
-                    f"skipped {res.bloom_skipped}"
-                )
-                if res.bloom_probed is not None
-                else "(not consulted — no sidecars or non-point predicate)",
-            ),
+            ("bloom_outcome", _bloom_outcome()),
             (
                 "stringformat_pushdown",
                 res.sf_pushdown
@@ -711,6 +716,8 @@ class AstroSession:
             return int(v)
         if t in (C.FLOAT, C.DOUBLE):
             return float(v)
+        if t == C.DECIMAL and type(v) is int:
+            return Decimal(v)
         if t == C.BOOLEAN:
             return bool(v)
         return v

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 from collections import Counter
 from pathlib import Path
 
@@ -106,3 +107,22 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def jobs_of(spark):
+    """``jobs_of(action)`` → (result, ids of the Spark jobs ``action``
+    ran), counted by a status-tracker job group."""
+    sc = spark.sparkContext
+
+    def run(action):
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count")
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    return run

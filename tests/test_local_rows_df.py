@@ -7,7 +7,6 @@ time zone, decimals), a ``LocalTableScan`` plan, and a statement result
 that collects without running a Spark job.
 """
 
-import uuid
 from datetime import date, datetime
 from decimal import Decimal
 
@@ -100,26 +99,12 @@ def test_local_rows_df_verifies_like_create_dataframe(spark):
         local_rows_df(spark, [("x",)], "n long")
 
 
-def _jobs_of(sc, action):
-    """(result, ids of the Spark jobs ``action`` ran), counted by a
-    status-tracker job group."""
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, sc.statusTracker().getJobIdsForGroup(group)
-
-
-def test_statement_result_runs_no_spark_job(spark, tmp_path):
-    sc = spark.sparkContext
+def test_statement_result_runs_no_spark_job(spark, tmp_path, jobs_of):
     astro = AstroSession(spark, str(tmp_path / "wh"))
     # the counter sees a real job …
-    assert _jobs_of(sc, lambda: spark.range(3).collect())[1]
+    assert jobs_of(lambda: spark.range(3).collect())[1]
     # … and none for a statement result
-    rows, jobs = _jobs_of(sc, lambda: astro._ok("inserted 1 row").collect())
+    rows, jobs = jobs_of(lambda: astro._ok("inserted 1 row").collect())
     assert [r.result for r in rows] == ["inserted 1 row"]
     assert jobs == []
 

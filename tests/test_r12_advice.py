@@ -1,6 +1,6 @@
 """r13 — regression tests for the five r12 ADVICE findings.
 
-1 (high)   relation._index_candidates must BYPASS the index for any
+1 (high)   relation._index_route must BYPASS the index for any
            lookup mentioning a NUL-containing string value — such values
            are storable but deliberately unindexed, so probing the
            partial value list silently dropped rows.
@@ -64,11 +64,12 @@ def test_nul_value_in_list_bypasses_index(astro, spark):
     rel.append(df)
     rel = astro.relation("adv")
     # the whole lookup must take the full-scan path, not probe 'E' alone
-    assert rel._index_candidates("status IN ('E', 'a\x00b')") is None
-    assert rel._index_candidates("status = 'a\x00b'") is None
+    assert rel._index_route("status IN ('E', 'a\x00b')") is None
+    assert rel._index_route("status = 'a\x00b'") is None
     # plain lookups still route through the index
-    got = rel._index_candidates("status = 'E'")
-    assert got is not None and got[1] == "status"
+    got = rel._index_route("status = 'E'")
+    assert got is not None and got["kind"] == "augment" and got["col"] == "status"
+    assert got["n"] == 2  # keys 7 and 17; the NUL-carrying row is unindexed
     # end-to-end: the full-scan fallback returns BOTH the indexed and
     # the unindexed rows
     df, res = rel.scan_where("status IN ('E', 'a\x00b')")
@@ -81,8 +82,9 @@ def test_all_null_in_list_still_safe(astro):
     rel = astro.relation("adv")
     # `= NULL` / `IN (NULL)` can never match — dropping SQL-NULL alone
     # keeps the index usable for the remaining values
-    got = rel._index_candidates("status IN (NULL, 'E')")
-    assert got is not None and got[1] == "status"
+    got = rel._index_route("status IN (NULL, 'E')")
+    assert got is not None and got["kind"] == "augment" and got["col"] == "status"
+    assert got["n"] == 2
     df, _ = rel.scan_where("status IN (NULL, 'E')")
     assert sorted(r.k1 for r in df.collect()) == [7, 17]
 
