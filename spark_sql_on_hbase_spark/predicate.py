@@ -17,6 +17,7 @@ pruning can only be an optimization, never a correctness hazard.
 
 from __future__ import annotations
 
+import math
 import re
 from dataclasses import dataclass
 from decimal import Decimal
@@ -968,6 +969,10 @@ def _lit_sql(v) -> str:
         return "'" + v.replace("'", "''") + "'"
     if isinstance(v, Decimal):
         return str(v)  # Spark reads 1.23 as a DECIMAL literal
+    if isinstance(v, float) and not math.isfinite(v):
+        # repr gives nan / inf, which Spark parses as column names
+        name = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+        return f"CAST('{name}' AS DOUBLE)"
     return repr(v)
 
 

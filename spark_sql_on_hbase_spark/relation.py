@@ -15,9 +15,12 @@ Write path = the reference's bulk load re-expressed Spark-first
 over Spark built-ins, ``rowkey_sql``) →
 ``repartitionByRange(rowkey)`` (Spark's range-sampling replaces
 HBasePartitioner's explicit split keys) → ``sortWithinPartitions`` →
-per-partition parquet files.  INSERT INTO appends new sorted fragments
-(the LSM-ish pattern; HBase memstore flush analog) — readers merge by
-scanning all fragments; ``compact()`` rewrites into clean regions.
+per-partition parquet files.  New rows enter through one decision
+(``insert``): a table without history is bulk-loaded at generation 0,
+any other table appends new sorted fragments (the LSM-ish pattern; HBase
+memstore flush analog) — readers merge by scanning all fragments.  Every
+rewrite, ``compact()`` and INSERT OVERWRITE included, publishes through
+one commit (``_commit_rewrite``).
 
 Scale notes (100 TB):
 - the rowkey encode is map-local; the only shuffle is the range
@@ -327,15 +330,18 @@ class AstroRelation:
         return f"astro_{tag}_{self.meta.namespace}_{self.meta.name}".lower()
 
     def write(
-        self,
-        df: DataFrame,
-        mode: str = "overwrite",
-        align_prefix: int | None = None,
-        refresh: bool = True,
-        zorder: bool | None = None,
+        self, df: DataFrame, align_prefix: int | None = None, out_dir: str | None = None
     ) -> None:
-        """Total-order bulk write: range shuffle on key, sort, one parquet
-        file per region, then record per-file bounds.
+        """Total-order layout job at generation 0: range shuffle on key,
+        sort, one parquet file per region.
+
+        ``out_dir`` None is a BULK LOAD into the live directory: the
+        directory is clobbered, retired fragments and pending reclaims go
+        with it, and the per-file bounds are statted and committed with
+        every generation re-stamped (reached through :meth:`insert` on a
+        table with no history).  A given ``out_dir`` (a whole-table
+        rewrite's temp dir) gets the layout job only: the caller links
+        and commits the files (:meth:`_rebuild`).
 
         ``align_prefix=k`` range-partitions on the first k key columns
         only (still fully key-sorted within each region), so region
@@ -351,21 +357,14 @@ class AstroRelation:
         aggregation Exchange entirely JVM-side (plans/aggregate.py).
         """
         meta = self.meta
-        out_dir = self.catalog.data_dir(meta)
+        load = out_dir is None
+        if load:
+            out_dir = self.catalog.data_dir(meta)
         n = max(1, meta.num_regions)
-        # replaced content: the folded gen 0 re-stamps AT REFRESH TIME
-        # (restamp="now"), not by inheriting the pre-overwrite commit
-        # time — and only after the write job has SUCCEEDED (ADVICE r8:
-        # clearing the in-memory stamps up front meant a failed write
-        # left the cached meta with empty stamps, and the next
-        # update_regions silently shifted TIMESTAMP AS OF boundaries)
-        restamp = "now" if mode == "overwrite" else "keep"
-        if zorder is None:
-            zorder = bool(meta.zorder) and not align_prefix
-        assert not (zorder and align_prefix), "zorder and align= are exclusive layouts"
+        layout = self._layout_for(align_prefix)
         keyed = self._with_rowkey(df.select(*[c for c, _ in meta.all_columns]))
         keyed = self._physical_encode(keyed).withColumn(SEQ_COL, F.lit(0))
-        if zorder:
+        if layout == "zorder":
             # cluster on the bit-interleaved key: every dimension becomes
             # range-bounded in every region file (recorded as dim_min/
             # dim_max boxes), so a predicate on ANY key dim — not just a
@@ -378,59 +377,57 @@ class AstroRelation:
                     zed.repartitionByRange(n, F.col("__z"))
                     .sortWithinPartitions("__z", ROWKEY_COL)
                     .drop("__z")
-                    .write.mode(mode)
+                    .write.mode("overwrite")
                 ).parquet(out_dir)
             )
-            meta.layout = "zorder"
-            meta.align_prefix = 0
-            if mode == "overwrite" and refresh:
-                # dir clobbered — reclaim (r10).  refresh=False targets a
-                # TEMP dir (_rewrite_with): the real dir's retired
-                # fragments are untouched there
-                meta.retired_regions = []
-                meta.gc_pending = []
-            if refresh:
-                self._refresh_region_bounds(restamp=restamp)
-                self._record_gen_op(0, "WRITE")
-            return
-        if align_prefix:
-            part_cols = [F.col(c) for c in meta.key_names[:align_prefix]]
-        else:
-            part_cols = [F.col(ROWKEY_COL)]
-        ranged = keyed.repartitionByRange(n, *part_cols)
-        if align_prefix:
+        elif layout == "bucketed":
             ids = mine_region_ids(n)
             # partition index → mined bucket id, map-local (no extra shuffle:
             # each range-partition task holds exactly one _region value and
             # therefore writes exactly one bucket file)
-            ranged = ranged.withColumn(
+            ranged = keyed.repartitionByRange(
+                n, *[F.col(c) for c in meta.key_names[:align_prefix]]
+            ).withColumn(
                 REGION_COL,
                 F.element_at(F.array(*[F.lit(i) for i in ids]), F.spark_partition_id() + 1),
             )
             self.spark.sql(f"DROP TABLE IF EXISTS {self.spark_table_name}")
             (
-                _layout_options(ranged.write.mode(mode))
+                _layout_options(ranged.write.mode("overwrite"))
                 .format("parquet")
                 .option("path", out_dir)
                 .bucketBy(n, REGION_COL)
                 .sortBy(ROWKEY_COL)
                 .saveAsTable(self.spark_table_name)
             )
-            meta.layout = "bucketed"
-            meta.align_prefix = int(align_prefix)
         else:
             _layout_options(
-                ranged.sortWithinPartitions(ROWKEY_COL).write.mode(mode)
+                keyed.repartitionByRange(n, F.col(ROWKEY_COL))
+                .sortWithinPartitions(ROWKEY_COL)
+                .write.mode("overwrite")
             ).parquet(out_dir)
-            meta.layout = "range"
-        if mode == "overwrite" and refresh:
-            # dir clobbered — reclaim (r10); refresh=False targets a TEMP
-            # dir (_rewrite_with), where the real dir is untouched
-            meta.retired_regions = []
-            meta.gc_pending = []
-        if refresh:
-            self._refresh_region_bounds(restamp=restamp)
-            self._record_gen_op(0, "WRITE")
+        if not load:
+            return
+        meta.layout = layout
+        if layout != "range":
+            meta.align_prefix = int(align_prefix or 0)
+        # the directory was clobbered: retired fragments and pending
+        # reclaims went with it (r10).  The folded gen 0 re-stamps AT
+        # REFRESH TIME (restamp="now"), only after the write job has
+        # SUCCEEDED (ADVICE r8: clearing the in-memory stamps up front
+        # meant a failed write left the cached meta with empty stamps)
+        meta.retired_regions = []
+        meta.gc_pending = []
+        meta.generation_ops["0"] = "WRITE"
+        self._refresh_region_bounds(restamp="now")
+
+    def _layout_for(self, align_prefix: int | None) -> str:
+        """The layout a generation-0 write lands in: ``bucketed`` for an
+        aligned write, ``zorder`` when the table declares it, else
+        ``range``."""
+        if align_prefix:
+            return "bucketed"
+        return "zorder" if self.meta.zorder else "range"
 
     def ensure_spark_table(self) -> str:
         """Re-register the bucketed table in a fresh session from catalog
@@ -460,10 +457,30 @@ class AstroRelation:
             )
         return tbl
 
+    def insert(self, df: DataFrame, fragments: int | None = None) -> None:
+        """New rows, one decision (INSERT VALUES / INSERT … SELECT, LOAD
+        DATA, MERGE's NOT MATCHED inserts, streaming micro-batches and
+        the retained full rewrite of an emptied table): a table with no
+        live fragments, no retired fragments and no commit stamps is
+        bulk-loaded in its declared layout at generation 0
+        (:meth:`write`); any other table appends at the next generation
+        (:meth:`append`, ``fragments`` is its flush-size hint).  History
+        decides, not the live set: a bulk load clobbers the data
+        directory and re-stamps every generation, so on a table emptied
+        by a retained DELETE (retired fragments) or by VACUUM (stamps
+        only) it would destroy every readable snapshot (r11, ADVICE r10
+        high).  The declared layout returns at the next COMPACT."""
+        m = self.meta
+        if m.regions or m.retired_regions or m.generation_times:
+            self.append(df, fragments=fragments)
+        else:
+            self.write(df, align_prefix=m.align_prefix or None)
+
     def append(self, df: DataFrame, fragments: int | None = None, op: str = "APPEND") -> None:
-        """INSERT INTO …: append sorted fragment files at the next LSM
-        generation (HBase memstore-flush analog; reference insert =
-        batched Puts, HBaseRelation.scala:657-708).  A re-inserted row
+        """Append sorted fragment files at the next LSM generation (HBase
+        memstore-flush analog; reference insert = batched Puts,
+        HBaseRelation.scala:657-708) — the append side of
+        :meth:`insert`, and UPDATE's upsert path.  A re-inserted row
         key upserts: readers resolve newest-cell-wins per column via
         ``_merge_latest`` until ``compact()`` rewrites.
 
@@ -545,7 +562,7 @@ class AstroRelation:
         except ConcurrentWriteError:
             pass
 
-    def _commit_retry(self, apply_fn, require_live: list[str] | None = None, attempts: int = 8):
+    def _commit_retry(self, apply_fn, conflict=None, attempts: int = 8):
         """Optimistic-concurrency commit loop (r12, VERDICT r11 #1):
         run ``apply_fn`` — a closure that derives this write's metadata
         mutations from ``self.meta``'s CURRENT state and persists them
@@ -556,37 +573,37 @@ class AstroRelation:
         fresh base: recompute, don't capture, anything derived from
         meta.
 
-        ``require_live``: fragment paths this write RESOLVED or
-        REPLACED.  If the sibling's commit removed any of them, our
-        survivors were computed from fragments that no longer exist —
-        a write-write conflict on the same data (Delta's
-        ConcurrentDeleteDelete analog) that no metadata merge can fix;
-        abort with the conflict instead of double-applying.  Appends
-        pass None (they replace nothing — always commutative)."""
+        ``conflict``: for writes that RESOLVED or REPLACED fragments, a
+        predicate over the metadata that is true when a sibling's commit
+        changed those fragments — our survivors were computed from
+        fragments that no longer exist, a write-write conflict on the
+        same data (Delta's ConcurrentDeleteDelete analog) that no
+        metadata merge can fix.  It is checked before EVERY attempt (an
+        earlier conflict reload, e.g. a reservation's, may already have
+        absorbed the sibling's commit) and aborts at once with the
+        conflict instead of double-applying.  Appends pass None (they
+        replace nothing — always commutative)."""
         from spark_sql_on_hbase_spark.catalog import ConcurrentWriteError
 
-        last: Exception | None = None
-        for i in range(attempts):
+        last: ConcurrentWriteError | None = None
+        for _ in range(attempts):
+            m = self.meta
+            if conflict is not None and conflict(m):
+                raise ConcurrentWriteError(
+                    f"{m.namespace}.{m.name}",
+                    last.expected if last else m.meta_version,
+                    m.meta_version,
+                    detail=(
+                        "a concurrent writer changed the fragments this "
+                        "statement resolved (write-write conflict on the same "
+                        "rows) — re-run the statement against the new state"
+                    ),
+                ) from last
             try:
                 return apply_fn()
             except ConcurrentWriteError as e:
                 last = e
                 self.catalog.reload_into(self.meta)
-                if require_live is not None:
-                    live = {r.path for r in self.meta.regions}
-                    gone = [p for p in require_live if p not in live]
-                    if gone:
-                        raise ConcurrentWriteError(
-                            f"{self.meta.namespace}.{self.meta.name}",
-                            e.expected,
-                            e.found,
-                            detail=(
-                                f"a concurrent writer rewrote {len(gone)} of "
-                                f"the fragments this statement resolved "
-                                f"(write-write conflict on the same rows) — "
-                                f"re-run the statement against the new state"
-                            ),
-                        ) from e
         raise last  # type: ignore[misc]
 
     def _reserve_generation(self, op: str) -> int:
@@ -713,7 +730,10 @@ class AstroRelation:
 
     def compact(self) -> None:
         """Rewrite all fragments into num_regions clean sorted regions,
-        restoring the table's declared alignment (bucketed layout) if any.
+        restoring the table's declared layout (bucketed or z-order) and
+        reclaiming retired fragments — one :meth:`_rebuild`, committed by
+        :meth:`_commit_rewrite`'s ``rebuild`` mode, which skips index
+        upkeep for a COMPACT (the indexes already cover its content).
 
         Crash-safe at EVERY point (r12 manifest-pointer commit): the
         merged result is written to a sibling temp directory, published
@@ -745,14 +765,7 @@ class AstroRelation:
         ]
         preserve = bool(pre_clean or pre_vec_fresh) and not self.needs_merge()
         df = self.scan().select(*[c for c, _ in self.meta.all_columns])
-        # maintain_indexes=False: a compact's output is a fold of
-        # content the indexes already cover (every output cell existed
-        # in an input fragment) — re-indexing it at the rebased
-        # generation would only add per-key duplicate entries at
-        # ``_g``=0 (r15: ``_g`` is part of the index rowkey, so they no
-        # longer upsert-collapse with the originals).  The rebase
-        # itself clears merge_exact inside the commit (update_regions).
-        self._rewrite_with(df, op="COMPACT", maintain_indexes=False)
+        self._rebuild(df, "COMPACT")
         if preserve:
             post = {r.path for r in self.meta.regions}
 
@@ -777,103 +790,33 @@ class AstroRelation:
         """INSERT OVERWRITE …: atomically replace the table's contents
         with ``df`` (beyond-reference write op — the reference explicitly
         lacks it, HBaseRelation.scala:660-663 supports append only).
-        Same write-new-then-switch structure and crash-safety envelope as
-        :meth:`compact`; the result lands as clean sorted regions in the
-        table's declared layout, so the shuffle-free scan path holds."""
+        Same write-new-then-switch structure, commit and crash-safety
+        envelope as :meth:`compact` (:meth:`_rebuild`); the result lands
+        as clean sorted regions in the table's declared layout, so the
+        shuffle-free scan path holds.  A table that has never had a data
+        directory has nothing to replace and is bulk-loaded in place."""
         df = df.select(*[c for c, _ in self.meta.all_columns])
         if not self.meta.regions and not os.path.isdir(self.catalog.data_dir(self.meta)):
             self.write(df, align_prefix=self.meta.align_prefix or None)
-            return
-        self._rewrite_with(df, op="OVERWRITE")
+        else:
+            self._rebuild(df, "OVERWRITE")
 
-    def _rewrite_with(
-        self, df: DataFrame, op: str = "REWRITE", maintain_indexes: bool = True
-    ) -> None:
-        """Write ``df`` as the table's new full contents via a
-        MANIFEST-POINTER commit (r12, VERDICT r11 #2 — the 100 TB /
-        object-store design the r11 fsops notes named): the rewrite job
-        lands in a sibling temp directory, each output file is then
-        linked into the LIVE directory under a fresh ``rw-<table>-…``
-        name (discovery never adopts unknown ``rw-`` files, so readers
-        cannot see them early), and the catalog's single-object metadata
-        replace is the ONLY commit — no directory swap in any fsops
-        mode, no mixed-listing window.  The replaced files are recorded
-        in ``gc_pending`` by the same commit and deleted right after
-        (a crash in between leaves the list persisted; the next
-        freshness pass completes the reclaim).  Crash before the commit
-        leaves the old catalog + untouched old files — a consistent
-        pre-rewrite table — plus orphan ``rw-`` files that the next
-        rewrite of this table clears."""
-        import shutil
-
-        meta = self.meta
+    def _rebuild(self, df: DataFrame, op: str) -> None:
+        """Replace the whole table with ``df`` (COMPACT / INSERT
+        OVERWRITE / the non-retained full fallback): the layout job
+        writes the declared layout into the rewrite temp dir, its files
+        are linked into the live directory under fresh ``rw-`` names
+        (:meth:`_link_published`), and :meth:`_commit_rewrite`'s
+        ``rebuild`` mode replaces every live fragment in one commit.
+        The live set is captured from the SAME metadata snapshot ``df``
+        was planned against — deliberately not re-freshened: a fold is
+        non-commutative, and adopting a sibling's mid-statement commit
+        would fold it away with contents computed before it existed."""
+        hit = list(self.meta.regions)
         out_dir, tmp_dir = self._staging_dirs()
-        shutil.rmtree(out_dir + ".compact.tmp", ignore_errors=True)  # legacy
-        # everything this table references AT THIS POINT is what the fold
-        # replaces: live fragments AND retired ones (the whole-table
-        # rebuild is the MVCC reclaim point, r10 retention).  Captured
-        # from the SAME metadata snapshot ``df`` was planned against —
-        # deliberately NOT re-freshened here: a fold is NON-commutative,
-        # and silently adopting a sibling's mid-statement commit would
-        # fold it away with contents computed before it existed.  Any
-        # drift since this snapshot trips the CAS at the commit below
-        # and aborts the statement instead.
-        old_paths = sorted(
-            {self._local_path(r.path) for r in meta.regions}
-            | {self._local_path(r.path) for r in meta.retired_regions}
-        )
-
-        real_phys = meta.physical_table
-        try:
-            # point the writer at the temp dir by temporarily renaming the
-            # physical table (data_dir derives from it)
-            meta.physical_table = os.path.basename(tmp_dir)
-            self.write(df, align_prefix=meta.align_prefix or None, refresh=False)
-        finally:
-            meta.physical_table = real_phys
+        self.write(df, align_prefix=self.meta.align_prefix or None, out_dir=tmp_dir)
         new_files = self._link_published(tmp_dir, out_dir)
-        if meta.layout == "bucketed":
-            # re-point the session-catalog table at the final location
-            self.spark.sql(f"DROP TABLE IF EXISTS {self.spark_table_name}")
-
-        from spark_sql_on_hbase_spark.catalog import ConcurrentWriteError
-
-        meta.gc_pending = sorted(set(meta.gc_pending) | set(old_paths))
-        meta.retired_regions = []
-        meta.history_floor = 0  # everything rebuilt at generation 0
-        meta.regions = []
-        try:
-            # folded history: gen 0 re-stamps at rewrite time
-            # (restamp="now", applied only HERE — after the files are in
-            # place; see ADVICE r8 on clearing stamps before an
-            # uncommitted write).  only=new_files: the old files still
-            # exist until the post-commit GC, a directory restat would
-            # resurrect them.
-            self._refresh_region_bounds(
-                only=new_files,
-                restamp="now",
-                maintain_indexes=maintain_indexes,
-            )
-        except ConcurrentWriteError as e:
-            # a sibling committed during the rewrite job.  A fold based
-            # on the pre-commit snapshot would LOSE that commit's rows —
-            # discard our dirty in-memory state, reclaim our uncommitted
-            # rw- files, and surface the conflict (re-running the
-            # statement folds the merged state instead).
-            self.catalog.reload_into(self.meta)
-            self._discard_files(new_files)
-            raise ConcurrentWriteError(
-                f"{self.meta.namespace}.{self.meta.name}",
-                e.expected,
-                e.found,
-                detail=(
-                    "a whole-table rewrite (COMPACT/OVERWRITE/fold) raced a "
-                    "concurrent commit; nothing was changed — re-run the "
-                    "statement"
-                ),
-            ) from e
-        self._run_gc(release_own_lease=True)
-        self._record_gen_op(0, op)
+        self._commit_rewrite(hit, new_files, "rebuild", op=op)
 
     def _clear_orphan_rw(self, out_dir: str) -> None:
         """Reclaim ``rw-<this-table>-…`` files a CRASHED rewrite left
@@ -1150,13 +1093,13 @@ class AstroRelation:
         new_files: list[str],
         history: str,
         retire_at: int | None = None,
+        op: str | None = None,
     ) -> None:
-        """The one metadata commit of every partial and full-retained
-        rewrite (r12 manifest-pointer): drop the ``hit`` fragments from
-        the live set and adopt the published ``new_files`` in one
-        optimistic commit.  ``history`` — the rewrite's
-        ``last_write_stats`` label — picks what happens to the hit
-        fragments and to versioned reads:
+        """The one metadata commit of every rewrite (r12 manifest-pointer):
+        drop the ``hit`` fragments from the live set and adopt the
+        published ``new_files`` in one optimistic commit.  ``history`` —
+        the rewrite's ``last_write_stats`` label, or ``rebuild`` — picks
+        what happens to the hit fragments and to versioned reads:
 
         - ``retained``: the hit fragments RETIRE at the reserved
           generation ``retire_at`` (kept on disk, readable by every
@@ -1185,46 +1128,52 @@ class AstroRelation:
           MERGE rewrote values) re-stamps everything at rewrite time, so
           every pre-rewrite timestamp refuses rather than silently
           serving post-update data.
+        - ``rebuild`` (:meth:`_rebuild`: COMPACT / INSERT OVERWRITE, with
+          ``hit`` = every live fragment): the whole-table MVCC reclaim
+          point.  The retired fragments join the hit files in
+          ``gc_pending``, the floor drops to 0, every generation
+          re-stamps at commit time, the declared layout is re-applied
+          and generation 0 is labelled ``op``.  COMPACT skips index
+          upkeep: its output is a fold of content the indexes already
+          cover, and re-indexing it at the rebased generation would
+          only add per-key duplicate entries at ``_g``=0 (r15: ``_g`` is
+          part of the index rowkey).  The rebase itself clears
+          merge_exact (update_regions).
 
-        Optimistic retry: a concurrent APPEND is commutative (reload +
-        re-derive); a concurrent rewrite of our own hit fragments aborts
-        — our survivors were computed from fragments that no longer
-        exist.  An aborted commit leaves nothing behind: the published
-        files are unlinked and a retained rewrite's reservation is
-        rolled back (no phantom generation, no orphan storage)."""
+        Optimistic retry: a concurrent APPEND is commutative for a
+        partial rewrite (reload + re-derive); a concurrent rewrite of
+        our own hit fragments aborts — our survivors were computed from
+        fragments that no longer exist.  A rebuild aborts on ANY change
+        of the live set (a fold based on the pre-commit snapshot would
+        lose a sibling's appended rows).  An aborted commit leaves
+        nothing behind: the published files are unlinked and a retained
+        rewrite's reservation is rolled back (no phantom generation, no
+        orphan storage)."""
         from dataclasses import replace as _dc_replace
 
         from spark_sql_on_hbase_spark.catalog import ConcurrentWriteError
 
-        hit_paths = [f.path for f in hit]
-        hp = set(hit_paths)
+        hp = {f.path for f in hit}
         retain = history == "retained"
-        restamp = "now" if history == "folded" else "keep"
-        demoted = self.meta.layout == "bucketed"
-        if demoted:
-            # rewritten fragments break the bucket-file invariant; demote
-            # (one-phase agg falls back) until COMPACT restores alignment
+        rebuild = history == "rebuild"
+        restamp = "now" if history in ("folded", "rebuild") else "keep"
+        # rewritten fragments break the bucket-file invariant: demote
+        # (one-phase agg falls back) until COMPACT restores alignment
+        layout = self._layout_for(self.meta.align_prefix) if rebuild else "range"
+        if "bucketed" in (self.meta.layout, layout):
+            # the session-catalog table points at replaced files (or, for
+            # a bucketed rebuild, at the temp dir); ensure_spark_table
+            # re-registers it from the catalog
             self.spark.sql(f"DROP TABLE IF EXISTS {self.spark_table_name}")
+
+        def conflict(m) -> bool:
+            live = {r.path for r in m.regions}
+            return not hp <= live or (rebuild and live != hp)
 
         def commit():
             m = self.meta
-            # the hit fragments must still be LIVE in the state we are
-            # committing against (checked on EVERY attempt: an earlier
-            # reservation's conflict-reload may have already absorbed a
-            # sibling's commit, so require_live's on-conflict check alone
-            # would miss it) — our survivors were computed from them
-            if not hp <= {r.path for r in m.regions}:
-                raise ConcurrentWriteError(
-                    f"{m.namespace}.{m.name}",
-                    m.meta_version,
-                    m.meta_version,
-                    detail=(
-                        "a concurrent writer rewrote fragments this "
-                        "statement resolved — re-run the statement"
-                    ),
-                )
-            if demoted:
-                m.layout = "range"
+            if rebuild or m.layout == "bucketed":
+                m.layout = layout
             if retain:
                 m.pinned_gens = [g for g in m.pinned_gens if g != retire_at]
                 m.retired_regions = m.retired_regions + [
@@ -1233,19 +1182,27 @@ class AstroRelation:
                     if r.path in hp
                 ]
             else:
+                gone = hp | {r.path for r in m.retired_regions} if rebuild else hp
                 # MERGE with (never replace) any entries a conflict reload
                 # adopted from a sibling's commit — dropping them would
                 # leak the sibling's replaced files on disk forever
                 m.gc_pending = sorted(
-                    set(m.gc_pending) | {self._local_path(p) for p in hp}
+                    set(m.gc_pending) | {self._local_path(p) for p in gone}
                 )
+            if rebuild:
+                m.retired_regions = []
+                m.history_floor = 0  # everything rebuilt at generation 0
+                m.generation_ops["0"] = op
             # kept fragments: basenames unchanged → catalog entries stay
             # exact; stat only the new files (same incremental discipline
             # as _ensure_fresh_regions)
             m.regions = [r for r in m.regions if r.path not in hp]
             if new_files:
                 self._refresh_region_bounds(
-                    only=new_files, restamp=restamp, drops_live=True
+                    only=new_files,
+                    restamp=restamp,
+                    drops_live=True,
+                    maintain_indexes=op != "COMPACT",
                 )
             else:
                 self.catalog.update_regions(
@@ -1258,7 +1215,7 @@ class AstroRelation:
                 self.catalog.persist(m)
 
         try:
-            self._commit_retry(commit, require_live=hit_paths)
+            self._commit_retry(commit, conflict=conflict)
         except ConcurrentWriteError:
             self._discard_files(new_files)
             if retain:
@@ -1732,13 +1689,6 @@ class AstroRelation:
             "deferred_leased_paths": deferred_paths,
         }
 
-    def _record_gen_op(self, seq: int, op: str) -> None:
-        """Record the operation that committed generation ``seq`` (r11 —
-        DESCRIBE HISTORY).  Writers record the MECHANISM; the SQL
-        session overrides with the statement name."""
-        self.meta.generation_ops[str(seq)] = op
-        self.catalog.persist(self.meta)
-
     def _ensure_generation_stamp(self, seq: int) -> None:
         """A retained rewrite that emitted zero survivor files (a DELETE
         emptying its islands) has no file mtime to stamp its generation
@@ -1768,17 +1718,9 @@ class AstroRelation:
         hit = list(meta.regions)
         stats = {"files_total": len(hit), "files_rewritten": len(hit), "history": "retained"}
         if not hit:
-            if meta.retired_regions or meta.generation_times:
-                # r11 (ADVICE r10, medium): an emptied-but-retained table
-                # (retained delete-everything, or post-VACUUM with stamps)
-                # must NOT bulk-overwrite — that clobbers the data dir,
-                # deleting retired fragments and resetting stamps, i.e.
-                # destroying exactly the history this method promises to
-                # preserve.  Land the post-write contents as the next
-                # generation instead (append stamps the commit itself).
-                self.append(out)
-            else:
-                self.write(out, align_prefix=meta.align_prefix or None)
+            # an emptied-but-retained table appends (insert: a bulk load
+            # would clobber the history this method promises to keep)
+            self.insert(out)
             return stats
         # reservation = the writer-path commit stamp + the concurrency
         # claim (r12 CAS; see append).  File granularity mirrors the
@@ -1794,8 +1736,10 @@ class AstroRelation:
         (DELETE / UPDATE / MERGE / RESTORE): ``out`` — the table's full
         post-write contents — replaces the table, retained
         (:meth:`rewrite_full_retained`) on ``retain_history`` tables,
-        otherwise as a history-folding :meth:`overwrite`.  Stats count
-        the live fragments BEFORE the rewrite on both branches.
+        otherwise as a history-folding :meth:`overwrite` (layout job
+        into the temp dir, then :meth:`_commit_rewrite`'s ``rebuild``
+        commit).  Stats count the live fragments BEFORE the rewrite on
+        both branches.
 
         When the resolved-key-set UPDATE plan refused ONLY because of
         retain_history (the predicate pruned a strict file subset), the
@@ -3405,19 +3349,7 @@ class AstroRelation:
                 ).alias(n)
             return col.cast(spark_type(dt)).alias(n)
 
-        typed = raw.select(*[field(n, dt) for n, dt in self.meta.all_columns])
-        meta = self.meta
-        if meta.regions or meta.retired_regions or meta.generation_times:
-            # any history (live fragments, retained snapshots, commit
-            # stamps from an ALTER or a delete-everything) routes to the
-            # append path — a gen-0 bulk write would clobber/backdate it
-            # (r11 ADVICE; r12 ALTER commits).  The declared layout is
-            # restored by the next COMPACT.
-            self.append(typed)
-        else:
-            # first load honors the table's declared layout (DDL
-            # OPTIONS(align=K) / OPTIONS(layout=zorder))
-            self.write(typed, align_prefix=self.meta.align_prefix or None)
+        self.insert(raw.select(*[field(n, dt) for n, dt in self.meta.all_columns]))
 
     # -- read ---------------------------------------------------------------
     def current_seq(self) -> int:

@@ -668,18 +668,11 @@ class AstroSession:
         df = local_rows_df(self.spark, coerced, schema)
         if c.overwrite:
             rel.overwrite(df)
-        elif rel.meta.regions or self._table_has_history(rel):
+        else:
             # literal VALUES: the row count is known — flush as few
             # fragments (r9; a handful of rows must not land as
-            # num_regions slivers that bloat later island closures).
-            # r11 (ADVICE r10, high): a table whose LIVE set is empty but
-            # which still carries history (retired fragments / commit
-            # stamps after a retained delete-everything) must APPEND —
-            # the bulk-write path clobbers the data dir, destroying every
-            # retained snapshot and resetting stamps.
-            rel.append(df, fragments=max(1, -(-len(coerced) // 50_000)))
-        else:
-            rel.write(df)
+            # num_regions slivers that bloat later island closures)
+            rel.insert(df, fragments=max(1, -(-len(coerced) // 50_000)))
         self._record_op(
             rel,
             "INSERT OVERWRITE" if c.overwrite else "INSERT",
@@ -688,17 +681,6 @@ class AstroSession:
         )
         rel.register_view()
         return self._ok("overwrote 1 row" if c.overwrite else "inserted 1 row")
-
-    @staticmethod
-    def _table_has_history(rel: AstroRelation) -> bool:
-        """True when a table with an EMPTY live region set still carries
-        version history that a bulk write would destroy: retired MVCC
-        fragments (readable pre-delete snapshots) or generation commit
-        stamps (a post-VACUUM emptied table — a gen-0 bulk write would
-        land BELOW the history floor and brick ``TIMESTAMP AS OF now``).
-        Such tables take the append path (r11, ADVICE r10 high #2)."""
-        m = rel.meta
-        return bool(m.retired_regions or m.generation_times)
 
     @staticmethod
     def _coerce(v, dtype: str):
@@ -735,13 +717,8 @@ class AstroSession:
         )
         if c.overwrite:
             rel.overwrite(cast)
-        elif rel.meta.regions or self._table_has_history(rel):
-            # r11 (ADVICE r10, high): see _exec_InsertValues — an
-            # empty-live table with retained history must append, never
-            # bulk-overwrite the data dir.
-            rel.append(cast)
         else:
-            rel.write(cast)
+            rel.insert(cast)
         self._record_op(
             rel,
             "INSERT OVERWRITE" if c.overwrite else "INSERT",
@@ -1142,11 +1119,7 @@ class AstroSession:
             self._merge_update_rewrite(rel, c)
             if build_insert is not None:
                 rel.register_view()
-                p = build_insert()
-                if rel.meta.regions:
-                    rel.append(p)
-                else:
-                    rel.write(p)
+                rel.insert(build_insert())
         elif c.delete_matched:
             if build_insert is not None:
                 parts.append(build_insert())
@@ -1186,10 +1159,7 @@ class AstroSession:
             merged = parts[0]
             for p in parts[1:]:
                 merged = merged.unionByName(p)
-            if rel.meta.regions:
-                rel.append(merged)
-            else:
-                rel.write(merged)
+            rel.insert(merged)
         rel.register_view()
         self._record_fold_op(rel, "MERGE", before, self.last_write_stats)
         return self._ok(f"merged into {c.table}")

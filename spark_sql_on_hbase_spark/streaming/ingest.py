@@ -88,8 +88,9 @@ def astro_table_sink(
     auto_compact_fragments: int | str | None = "auto",
 ):
     """Continuous ingestion into an Astro table: each micro-batch lands
-    through the LSM upsert append (``AstroRelation.append``) — the
-    streaming face of ``INSERT INTO``, bridging the engine's storage
+    through ``AstroRelation.insert`` (the LSM upsert append; the first
+    batch into a table without history bulk-loads) — the streaming face
+    of ``INSERT INTO``, bridging the engine's storage
     half and its streaming half (the reference has no streaming at all;
     its closest analog is batched Puts, HBaseRelation.scala:657-708).
 
@@ -156,16 +157,16 @@ def astro_table_sink(
             cast = batch_df.select(
                 *[batch_df[n].cast(schema[n].dataType) for n in cols]
             )
-            if rel.meta.regions:
-                # flush-size the fragment count (r9): a small micro-batch
-                # must land as ~1 fragment, not num_regions slivers — every
-                # sliver later joins the island closure of any DELETE
-                # touching its key range
-                regs = rel.meta.regions
-                target = max(1, sum(r.num_rows for r in regs) // max(1, len(regs)))
-                rel.append(cast, fragments=max(1, -(-cnt // target)))
-            else:
-                rel.write(cast)
+            # flush-size the fragment count (r9): a small micro-batch
+            # must land as ~1 fragment, not num_regions slivers — every
+            # sliver later joins the island closure of any DELETE
+            # touching its key range
+            regs = rel.meta.regions
+            hint = None
+            if regs:
+                target = max(1, sum(r.num_rows for r in regs) // len(regs))
+                hint = max(1, -(-cnt // target))
+            rel.insert(cast, fragments=hint)
         finally:
             batch_df.unpersist()
         os.makedirs(marker_dir, exist_ok=True)

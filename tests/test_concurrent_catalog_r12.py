@@ -149,21 +149,63 @@ def test_streaming_sink_races_batch_update(spark, tmp_path, mode):
     assert len(set(seqs)) == len(meta.generation_times)
 
 
-def test_fold_conflict_aborts_cleanly(spark, tmp_path, mode):
-    """Non-commutative path: a whole-table fold (COMPACT) racing a
-    sibling commit must raise ConcurrentWriteError and leave the table
-    exactly as the sibling's commit built it."""
+def _assert_rebuild_aborts_cleanly(spark, a, run, monkeypatch):
+    """``run`` (a whole-table rebuild racing B's committed INSERT of key
+    800) must raise the "re-run" ConcurrentWriteError at its first
+    conflict — one reload, not the retry loop's — and leave the table as
+    B built it, with no uncommitted rw- file or rewrite temp dir."""
+    import os
+
+    reloads = []
+    orig_reload = type(a.catalog).reload_into
+
+    def counted_reload(self, m):
+        if self is a.catalog:
+            reloads.append(m.name)
+        return orig_reload(self, m)
+
+    monkeypatch.setattr(type(a.catalog), "reload_into", counted_reload)
+    with pytest.raises(ConcurrentWriteError, match="re-run"):
+        run()
+    assert reloads == ["cc5"]
+    c = AstroSession(spark, a.catalog.root)
+    assert c.sql("SELECT count(*) c FROM cc5 WHERE k = 800").collect()[0].c == 1
+    assert c.sql("SELECT count(*) c FROM cc5").collect()[0].c == 101
+    meta = c.catalog.get_table("cc5")
+    data_dir = c.catalog.data_dir(meta).rstrip("/")
+    known = {os.path.basename(r.path) for r in meta.regions + meta.retired_regions}
+    known |= {os.path.basename(p) for p in meta.gc_pending}
+    assert [f for f in os.listdir(data_dir) if f.startswith("rw-") and f not in known] == []
+    assert not os.path.exists(data_dir + ".rewrite.tmp")
+
+
+def test_fold_conflict_aborts_cleanly(spark, tmp_path, mode, monkeypatch):
+    """Non-commutative path: a whole-table fold (INSERT OVERWRITE)
+    racing a sibling commit must raise ConcurrentWriteError and leave the
+    table exactly as the sibling's commit built it."""
     a, b = _mk_sessions(spark, tmp_path, "cc5", retain=False)
     rel_a = a.relation("cc5")
     df = rel_a.scan().select(*[c for c, _ in rel_a.meta.all_columns])
     df = df.filter("k <= 90")  # the fold's contents, computed pre-race
     # B commits while A's fold is "in flight" (before A's commit)
     b.sql("INSERT INTO cc5 VALUES (800, 'winner')")
-    with pytest.raises(ConcurrentWriteError, match="re-run"):
-        rel_a._rewrite_with(df, op="OVERWRITE")
-    c = AstroSession(spark, a.catalog.root)
-    assert c.sql("SELECT count(*) c FROM cc5 WHERE k = 800").collect()[0].c == 1
-    assert c.sql("SELECT count(*) c FROM cc5").collect()[0].c == 101
+    _assert_rebuild_aborts_cleanly(spark, a, lambda: rel_a.overwrite(df), monkeypatch)
+
+
+def test_compact_conflict_aborts_cleanly(spark, tmp_path, mode, monkeypatch):
+    """The same race through COMPACT, which plans its own read: B
+    commits during A's layout job."""
+    a, b = _mk_sessions(spark, tmp_path, "cc5", retain=False)
+    rel_a = a.relation("cc5")
+    orig_write = type(rel_a).write
+
+    def racing_write(self, *args, **kwargs):
+        monkeypatch.setattr(type(rel_a), "write", orig_write)
+        b.sql("INSERT INTO cc5 VALUES (800, 'winner')")
+        return orig_write(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(rel_a), "write", racing_write)
+    _assert_rebuild_aborts_cleanly(spark, a, rel_a.compact, monkeypatch)
 
 
 @pytest.mark.parametrize("retain", [True, False], ids=["retained", "folded"])

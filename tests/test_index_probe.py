@@ -253,3 +253,29 @@ def test_composite_index_with_deeper_conjuncts(spark, tmp_path):
         assert res.index_probe[0] < res.index_probe[1], where
         got = sorted(r.k for r in df.collect())
         assert got == sorted(k for k, r in model.items() if pred(r)), where
+
+
+def test_non_finite_double_key_candidates(spark, tmp_path):
+    """Index candidates holding NaN / ±inf DOUBLE keys render as
+    ``CAST('NaN' AS DOUBLE)`` etc., not as the bare words ``nan`` / ``inf``
+    that Spark would parse as column names."""
+    import math
+
+    from spark_sql_on_hbase_spark.predicate import _lit_sql
+
+    assert _lit_sql(float("nan")) == "CAST('NaN' AS DOUBLE)"
+    assert _lit_sql(float("inf")) == "CAST('Infinity' AS DOUBLE)"
+    assert _lit_sql(float("-inf")) == "CAST('-Infinity' AS DOUBLE)"
+    astro = AstroSession(spark, str(tmp_path / "fk_wh"))
+    astro.sql("CREATE TABLE fk (k DOUBLE, v INT, PRIMARY KEY (k)) MAPPED BY (fk_h, COLS=[v=f.v])")
+    rel = astro.relation("fk")
+    rows = [(1.5, 5), (float("nan"), 5), (2.5, 7)]
+    rel.write(spark.createDataFrame(rows, table_schema(rel.meta)))
+    astro.sql("CREATE INDEX ON fk (v)")
+    df, res = astro.relation("fk").scan_where("v = 5")
+    assert res.index_used == "v"
+    got = sorted(df.collect(), key=lambda r: (math.isnan(r.k), r.k))
+    assert got[0].k == 1.5 and math.isnan(got[1].k) and len(got) == 2
+    rel.append(spark.createDataFrame([(float("inf"), 7), (float("-inf"), 7)], table_schema(rel.meta)))
+    df, _ = astro.relation("fk").scan_where("v = 7")
+    assert sorted(r.k for r in df.collect()) == [float("-inf"), 2.5, float("inf")]

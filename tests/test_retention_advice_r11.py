@@ -111,6 +111,66 @@ def test_insert_select_into_emptied_retained_table_appends(astro, tmp_path):
     assert [r.k for r in astro.sql("SELECT * FROM tis").collect()] == [9]
 
 
+def _emptied_retained(astro, tmp_path, name):
+    """A retained table emptied by DELETE: (relation, retired fragment
+    paths, a timestamp before the delete)."""
+    _load_retained(astro, tmp_path, name)
+    rel = astro.relation(name)
+    t_pre = time.time()
+    time.sleep(0.05)
+    astro.sql(f"DELETE FROM {name}")
+    retired_paths = [r.path for r in astro.catalog.get_table(name).retired_regions]
+    assert retired_paths
+    return rel, retired_paths, t_pre
+
+
+def _assert_history_kept(astro, rel, name, retired_paths, t_pre):
+    for p in retired_paths:
+        assert os.path.exists(rel._local_path(p))
+    meta = astro.catalog.get_table(name)
+    assert {r.path for r in meta.retired_regions} == set(retired_paths)
+    assert rel.scan(as_of_seq=rel.seq_for_timestamp(t_pre)).count() == 100
+    assert astro.sql(f"SELECT * FROM {name} TIMESTAMP AS OF {t_pre}").count() == 100
+
+
+def test_merge_insert_into_emptied_retained_table_appends(astro, tmp_path):
+    """MERGE's NOT MATCHED INSERT takes the same append-or-load decision
+    as INSERT INTO: on an emptied retained table it appends, keeping
+    every retired fragment and the pre-delete snapshot."""
+    rel, retired_paths, t_pre = _emptied_retained(astro, tmp_path, "tmi")
+    astro.sql(
+        "MERGE INTO tmi t USING (SELECT 7 AS kk, 'm' AS vv) s ON t.k = s.kk "
+        "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.kk, s.vv)"
+    )
+    _assert_history_kept(astro, rel, "tmi", retired_paths, t_pre)
+    assert [(r.k, r.v) for r in astro.sql("SELECT * FROM tmi").collect()] == [(7, "m")]
+
+
+def test_stream_batch_into_emptied_retained_table_appends(astro, tmp_path, monkeypatch):
+    """A streaming micro-batch (astro_table_sink) into an emptied
+    retained table appends too."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from spark_sql_on_hbase_spark.streaming.ingest import astro_table_sink
+
+    rel, retired_paths, t_pre = _emptied_retained(astro, tmp_path, "tsb")
+    holder = {}
+    orig = DataStreamWriter.foreachBatch
+
+    def capture(self, fn):
+        holder["fn"] = fn
+        return orig(self, fn)
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", capture)
+    src = str(tmp_path / "src")
+    astro.spark.createDataFrame([(3, "s")], "k int, v string").write.parquet(src)
+    stream = astro.spark.readStream.schema("k int, v string").parquet(src)
+    astro_table_sink(stream, astro, "tsb", str(tmp_path / "ckpt"))
+    holder["fn"](astro.spark.createDataFrame([(3, "s")], "k int, v string"), 0)
+    _assert_history_kept(astro, rel, "tsb", retired_paths, t_pre)
+    assert [(r.k, r.v) for r in astro.sql("SELECT * FROM tsb").collect()] == [(3, "s")]
+
+
 def test_full_retained_rewrite_on_emptied_table_preserves_history(astro, tmp_path):
     """ADVICE r10 medium: rewrite_full_retained with an empty live set
     used to call write(overwrite), deleting retired fragments — the
