@@ -20,7 +20,8 @@ Hashing is engine-portable on purpose: ``md5(rowkey)`` split into two
 (``pos_i = (h1 + i*h2) mod m``), so the builder (executor-side pandas
 over Arrow batches) and the prober (driver-side, pure Python) cannot
 drift — no dependency on JVM hash internals.  Parameters target ~1%
-false positives (10 bits/key, k=7).
+false positives (10 bits/key, k=7), with a 1,024-bit floor for small
+fragments.
 
 Sidecars are immutable like the fragments they describe: built once
 after a fragment is statted, deleted alongside it, never updated.  A
@@ -47,8 +48,13 @@ SUFFIX = ".bloom"
 
 def params_for(n_keys: int) -> tuple[int, int]:
     """(m bits, k hashes) for n keys — m rounded up to a byte multiple,
-    floored at 64 bits so empty/tiny fragments still get a real filter."""
-    m = max(64, n_keys * BITS_PER_KEY)
+    floored at 1,024 bits (a 128-byte sidecar).  At 10 bits per key a
+    9-key trickle fragment admits ~0.6 % of absent probes, so an index
+    lookup probing 40 exact candidates reads it about one time in five;
+    the floor puts it at ~3e-9 per probe.  m and k live in each
+    sidecar's header, so sidecars built under another sizing stay
+    readable."""
+    m = max(1024, n_keys * BITS_PER_KEY)
     m = (m + 7) // 8 * 8
     return m, NUM_HASHES
 

@@ -692,7 +692,12 @@ class AstroCatalog:
         regions: list[RegionFile],
         restamp: str = "keep",
         drops_live: bool = False,
+        before_write=None,
     ) -> None:
+        # ``before_write(meta)``: the caller's last mutations (a
+        # rewrite's history floor and label), applied after the
+        # regions, stamps and ops below are settled so they ride this
+        # commit's one pointer write.
         # covering-index liveness (r13): a commit that removes or
         # replaces LIVE fragments (any fold — restamp="now" — or a
         # partial/retained rewrite, flagged by the caller) invalidates
@@ -793,6 +798,8 @@ class AstroCatalog:
             meta.generation_ops = {
                 s: op for s, op in meta.generation_ops.items() if s in gt
             }
+        if before_write is not None:
+            before_write(meta)
         self._write(meta)
 
     def persist(self, meta: TableMeta) -> None:

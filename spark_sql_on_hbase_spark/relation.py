@@ -310,9 +310,6 @@ class AstroRelation:
         import uuid as _uuid
 
         self._lease_id = _uuid.uuid4().hex[:16]
-        # prunability facts of a retention-refused key-set UPDATE, read
-        # by the statement's rewrite_full fallback (see rewrite_full)
-        self._keyset_retention_fallback: dict | None = None
 
     # -- write --------------------------------------------------------------
     def _with_rowkey(self, df: DataFrame) -> DataFrame:
@@ -330,7 +327,11 @@ class AstroRelation:
         return f"astro_{tag}_{self.meta.namespace}_{self.meta.name}".lower()
 
     def write(
-        self, df: DataFrame, align_prefix: int | None = None, out_dir: str | None = None
+        self,
+        df: DataFrame,
+        align_prefix: int | None = None,
+        out_dir: str | None = None,
+        op: str = "WRITE",
     ) -> None:
         """Total-order layout job at generation 0: range shuffle on key,
         sort, one parquet file per region.
@@ -338,10 +339,11 @@ class AstroRelation:
         ``out_dir`` None is a BULK LOAD into the live directory: the
         directory is clobbered, retired fragments and pending reclaims go
         with it, and the per-file bounds are statted and committed with
-        every generation re-stamped (reached through :meth:`insert` on a
-        table with no history).  A given ``out_dir`` (a whole-table
-        rewrite's temp dir) gets the layout job only: the caller links
-        and commits the files (:meth:`_rebuild`).
+        every generation re-stamped and generation 0 labelled ``op`` for
+        DESCRIBE HISTORY (reached through :meth:`insert` on a table with
+        no history).  A given ``out_dir`` (a whole-table rewrite's temp
+        dir) gets the layout job only: the caller links and commits the
+        files (:meth:`_rebuild`).
 
         ``align_prefix=k`` range-partitions on the first k key columns
         only (still fully key-sorted within each region), so region
@@ -418,7 +420,7 @@ class AstroRelation:
         # meant a failed write left the cached meta with empty stamps)
         meta.retired_regions = []
         meta.gc_pending = []
-        meta.generation_ops["0"] = "WRITE"
+        meta.generation_ops["0"] = op
         self._refresh_region_bounds(restamp="now")
 
     def _layout_for(self, align_prefix: int | None) -> str:
@@ -457,7 +459,9 @@ class AstroRelation:
             )
         return tbl
 
-    def insert(self, df: DataFrame, fragments: int | None = None) -> None:
+    def insert(
+        self, df: DataFrame, fragments: int | None = None, op: str | None = None
+    ) -> None:
         """New rows, one decision (INSERT VALUES / INSERT … SELECT, LOAD
         DATA, MERGE's NOT MATCHED inserts, streaming micro-batches and
         the retained full rewrite of an emptied table): a table with no
@@ -469,12 +473,14 @@ class AstroRelation:
         directory and re-stamps every generation, so on a table emptied
         by a retained DELETE (retired fragments) or by VACUUM (stamps
         only) it would destroy every readable snapshot (r11, ADVICE r10
-        high).  The declared layout returns at the next COMPACT."""
+        high).  The declared layout returns at the next COMPACT.
+        ``op`` labels the generation in that commit (default: the
+        mechanism, ``APPEND`` or ``WRITE``)."""
         m = self.meta
         if m.regions or m.retired_regions or m.generation_times:
-            self.append(df, fragments=fragments)
+            self.append(df, fragments=fragments, op=op or "APPEND")
         else:
-            self.write(df, align_prefix=m.align_prefix or None)
+            self.write(df, align_prefix=m.align_prefix or None, op=op or "WRITE")
 
     def append(self, df: DataFrame, fragments: int | None = None, op: str = "APPEND") -> None:
         """Append sorted fragment files at the next LSM generation (HBase
@@ -483,6 +489,9 @@ class AstroRelation:
         :meth:`insert`, and UPDATE's upsert path.  A re-inserted row
         key upserts: readers resolve newest-cell-wins per column via
         ``_merge_latest`` until ``compact()`` rewrites.
+
+        ``op`` labels the generation in its reservation commit (the
+        statement name for SQL writes, DESCRIBE HISTORY).
 
         ``fragments`` (r9): flush-size hint from callers that KNOW the
         batch is small (streaming micro-batches, trickle inserts) — a
@@ -786,7 +795,7 @@ class AstroRelation:
 
             self._commit_retry(_reclean)
 
-    def overwrite(self, df: DataFrame) -> None:
+    def overwrite(self, df: DataFrame, op: str | None = None) -> None:
         """INSERT OVERWRITE …: atomically replace the table's contents
         with ``df`` (beyond-reference write op — the reference explicitly
         lacks it, HBaseRelation.scala:660-663 supports append only).
@@ -794,12 +803,14 @@ class AstroRelation:
         envelope as :meth:`compact` (:meth:`_rebuild`); the result lands
         as clean sorted regions in the table's declared layout, so the
         shuffle-free scan path holds.  A table that has never had a data
-        directory has nothing to replace and is bulk-loaded in place."""
+        directory has nothing to replace and is bulk-loaded in place.
+        ``op`` labels generation 0 in the commit (default: the
+        mechanism, ``OVERWRITE`` or ``WRITE``)."""
         df = df.select(*[c for c, _ in self.meta.all_columns])
         if not self.meta.regions and not os.path.isdir(self.catalog.data_dir(self.meta)):
-            self.write(df, align_prefix=self.meta.align_prefix or None)
+            self.write(df, align_prefix=self.meta.align_prefix or None, op=op or "WRITE")
         else:
-            self._rebuild(df, "OVERWRITE")
+            self._rebuild(df, op or "OVERWRITE")
 
     def _rebuild(self, df: DataFrame, op: str) -> None:
         """Replace the whole table with ``df`` (COMPACT / INSERT
@@ -890,11 +901,15 @@ class AstroRelation:
         full_rows,
         delete: bool = False,
         set_literals: dict[str, str] | None = None,
+        op: str | None = None,
     ) -> dict:
         """The one rewrite pipeline of DELETE / UPDATE / MERGE: plan
         selectors tried cheapest first, the first that applies runs and
         commits through :meth:`_commit_rewrite`; :meth:`rewrite_full`
         is the fallback when none applies.  Returns ``last_write_stats``.
+        ``op`` is the statement name the plan's commit records for
+        DESCRIBE HISTORY (see :meth:`_commit_rewrite`); None records the
+        mechanism (``REWRITE``, or ``OVERWRITE`` for the full fold).
 
         1. key-only predicate → per-fragment retroactive purge
            (:meth:`delete_rows_keyonly` / :meth:`update_rows_keyonly`);
@@ -910,34 +925,48 @@ class AstroRelation:
         ``where`` is the statement's own predicate for a DELETE
         (``delete=True``) or an all-literal-SET UPDATE (``set_literals``);
         only those take the per-fragment plans 1 and 3.  Otherwise it
-        only prunes plan 2 (MERGE passes its source's key bounds)."""
+        only prunes plan 2 (MERGE passes its source's key bounds).
+
+        Plan 3 refuses a literal-SET UPDATE on ``retain_history`` tables
+        (old and new values would collide at one generation), so a
+        predicate that prunes pays the whole-table retained rewrite:
+        that cost cliff warns, and the stats record how many files a
+        non-retained table would have rewritten instead
+        (``keyset_refused_prunable``, r11, VERDICT r10 #4)."""
         per_fragment = bool(where) and (delete or set_literals is not None)
         stats = None
         if per_fragment:
             stats = (
-                self.delete_rows_keyonly(where)
+                self.delete_rows_keyonly(where, op=op)
                 if delete
-                else self.update_rows_keyonly(where, set_literals)
+                else self.update_rows_keyonly(where, set_literals, op=op)
             )
         if where and stats is None:
             # DELETE keeps surviving stamps: retroactive view above floor
-            stats = self.rewrite_pruned(where, survivors_of, preserve_stamps=delete)
+            stats = self.rewrite_pruned(where, survivors_of, preserve_stamps=delete, op=op)
         if per_fragment and stats is None:
             # island closure degenerated (multi-gen z-order, fully
             # overlapping LSM): resolve the pruned fragments, collect the
             # matched ROWKEYS, rewrite them per-fragment — still never a
             # full-table rewrite when the predicate prunes at all
             stats = (
-                self.delete_rows_resolved_keys(where)
+                self.delete_rows_resolved_keys(where, op=op)
                 if delete
-                else self.update_rows_keyset(where, set_literals)
+                else self.update_rows_keyset(where, set_literals, op=op)
             )
         if stats is None:
-            stats = self.rewrite_full(full_rows())
+            refused = (
+                self._keyset_retention_refusal(where)
+                if per_fragment and not delete and self.meta.retain_history
+                else None
+            )
+            stats = self.rewrite_full(full_rows(), op=op)
+            if refused:
+                stats["keyset_refused_prunable"] = refused
         return stats
 
     def rewrite_pruned(
-        self, prune_where, survivors_of, preserve_stamps: bool = False
+        self, prune_where, survivors_of, preserve_stamps: bool = False, op: str | None = None
     ) -> dict | None:
         """Region-pruned partial rewrite — DELETE / MERGE-matched-DELETE /
         NULL-assigning UPDATE without touching non-intersecting regions
@@ -1002,8 +1031,8 @@ class AstroRelation:
         pre-rewrite VERSION/TIMESTAMP AS OF stays readable, COMPACT
         reclaims.  Without retention, survivors rebuild at gen 0 (the z
         path: at their source generation) and history folds — see
-        :meth:`_commit_rewrite` for the floor and stamp rules
-        (``preserve_stamps``: a DELETE's retroactive view, r9).
+        :meth:`_commit_rewrite` for the floor, stamp and ``op`` label
+        rules (``preserve_stamps``: a DELETE's retroactive view, r9).
 
         Returns ``{"files_total", "files_rewritten", "history"}`` stats,
         or None when the pruned path does not apply (caller falls back to
@@ -1076,14 +1105,14 @@ class AstroRelation:
         else:
             # retained rewrites RESERVE their generation before the data
             # job (r12 CAS)
-            seq = self._reserve_generation("REWRITE") if retain else 0
+            seq = self._reserve_generation(op or "REWRITE") if retain else 0
         new_files = self._publish_rows(out, seq, hit, zmaxs)
         if retain:
             stats["history"] = "retained"
         else:
             stats["history"] = "folded-purge" if preserve_stamps else "folded"
         self._commit_rewrite(
-            hit, new_files, stats["history"], retire_at=seq if retain else None
+            hit, new_files, stats["history"], retire_at=seq if retain else None, op=op
         )
         return stats
 
@@ -1104,8 +1133,9 @@ class AstroRelation:
         - ``retained``: the hit fragments RETIRE at the reserved
           generation ``retire_at`` (kept on disk, readable by every
           snapshot below it); floor and stamps untouched, the
-          reservation unpinned.  Serves the island rewrite (survivors at
-          the NEW generation), the r12 retained per-fragment purge
+          reservation (which recorded the label) unpinned.  Serves the
+          island rewrite (survivors at the NEW generation), the r12
+          retained per-fragment purge
           (value-identical survivors at their ORIGINAL generations) and
           the full retained rewrite.
         - otherwise history FOLDS: the hit files are recorded in
@@ -1127,7 +1157,12 @@ class AstroRelation:
           because a DELETE only removes rows.  ``folded`` (UPDATE /
           MERGE rewrote values) re-stamps everything at rewrite time, so
           every pre-rewrite timestamp refuses rather than silently
-          serving post-update data.
+          serving post-update data.  A fold that leaves generation 0
+          the only generation (the rewritten files were its own) labels
+          it with the statement name ``op``; a fold that leaves other
+          generations standing relabels none of them (earlier
+          statements committed them), nor does a direct relation call
+          (``op`` None).
         - ``rebuild`` (:meth:`_rebuild`: COMPACT / INSERT OVERWRITE, with
           ``hit`` = every live fragment): the whole-table MVCC reclaim
           point.  The retired fragments join the hit files in
@@ -1170,6 +1205,15 @@ class AstroRelation:
             live = {r.path for r in m.regions}
             return not hp <= live or (rebuild and live != hp)
 
+        def finish(m) -> None:
+            # inside the commit's one pointer write, once regions and
+            # stamps are settled (so delete-everything states — no
+            # surviving newest gens — floor correctly)
+            if history in ("folded", "folded-purge"):
+                m.history_floor = max((r.seq for r in m.regions), default=0)
+            if op and not (retain or rebuild) and m.next_seq() == 1:
+                m.generation_ops["0"] = op
+
         def commit():
             m = self.meta
             if rebuild or m.layout == "bucketed":
@@ -1203,16 +1247,12 @@ class AstroRelation:
                     restamp=restamp,
                     drops_live=True,
                     maintain_indexes=op != "COMPACT",
+                    before_write=finish,
                 )
             else:
                 self.catalog.update_regions(
-                    m, m.regions, restamp=restamp, drops_live=True
+                    m, m.regions, restamp=restamp, drops_live=True, before_write=finish
                 )
-            if history in ("folded", "folded-purge"):
-                # computed after the refresh so delete-everything states
-                # (no surviving newest gens) floor correctly
-                m.history_floor = max((r.seq for r in m.regions), default=0)
-                self.catalog.persist(m)
 
         try:
             self._commit_retry(commit, conflict=conflict)
@@ -1226,7 +1266,7 @@ class AstroRelation:
         else:
             self._run_gc(release_own_lease=True)
 
-    def delete_rows_keyonly(self, where: str) -> dict | None:
+    def delete_rows_keyonly(self, where: str, op: str | None = None) -> dict | None:
         """Per-fragment retroactive purge for KEY-ONLY delete predicates
         (r8): key columns are constant across a key's versions, so a
         predicate referencing only keys decides identically for EVERY
@@ -1257,9 +1297,11 @@ class AstroRelation:
         the originals, so the retire-and-republish plan is sound — see
         :meth:`_rewrite_fragments`), closing the r11 cost cliff for
         key-only DELETEs."""
-        return self._rewrite_fragments(where, None, keyset=False)
+        return self._rewrite_fragments(where, None, keyset=False, op=op)
 
-    def update_rows_keyonly(self, where: str, set_literals: dict[str, str]) -> dict | None:
+    def update_rows_keyonly(
+        self, where: str, set_literals: dict[str, str], op: str | None = None
+    ) -> dict | None:
         """Per-fragment retroactive UPDATE for KEY-ONLY predicates whose
         SET expressions are plain LITERALS (r8; the NULL-routing case
         ``SET v = NULL WHERE k = …`` is the canonical one): every
@@ -1272,9 +1314,9 @@ class AstroRelation:
         row state that differs per version and must take the resolved
         paths; SETs on key columns are refused (keys are immutable in
         place)."""
-        return self._rewrite_fragments(where, set_literals, keyset=False)
+        return self._rewrite_fragments(where, set_literals, keyset=False, op=op)
 
-    def delete_rows_resolved_keys(self, where: str) -> dict | None:
+    def delete_rows_resolved_keys(self, where: str, op: str | None = None) -> dict | None:
         """Resolved-key-set DELETE for RESIDUAL predicates on states where
         the island closure degenerates (r8 follow-on): multi-generation
         z-order layouts and fully-overlapping LSM states, where every
@@ -1319,26 +1361,34 @@ class AstroRelation:
         originals retired — see :meth:`_rewrite_fragments`), closing
         the r11 cost cliff: a prunable residual DELETE no longer pays a
         full-table retained rewrite."""
-        return self._rewrite_fragments(where, None, keyset=True)
+        return self._rewrite_fragments(where, None, keyset=True, op=op)
 
-    def update_rows_keyset(self, where: str, set_literals: dict[str, str]) -> dict | None:
+    def update_rows_keyset(
+        self, where: str, set_literals: dict[str, str], op: str | None = None
+    ) -> dict | None:
         """Resolved-key-set UPDATE: the literal-SET analog of
         :meth:`delete_rows_resolved_keys` for residual predicates — the
         matched resolved rowkeys get the constant applied to EVERY
         version per-fragment (same exactness argument as
         :meth:`update_rows_keyonly`: identical constant on all versions
         ⇒ resolution returns it, NULL included), non-matching fragments
-        stay byte-identical.  SETs on key columns are refused."""
-        return self._rewrite_fragments(where, set_literals, keyset=True)
+        stay byte-identical.  SETs on key columns are refused, and so is
+        every ``retain_history`` table (see :meth:`_rewrite_fragments`)."""
+        return self._rewrite_fragments(where, set_literals, keyset=True, op=op)
 
     def _rewrite_fragments(
-        self, where: str, set_literals: dict[str, str] | None, keyset: bool
+        self,
+        where: str,
+        set_literals: dict[str, str] | None,
+        keyset: bool,
+        op: str | None = None,
     ) -> dict | None:
         """The one per-fragment engine behind the four entry points
         above: the envelope-intersecting fragments are rewritten one
         output file per source fragment, rows keeping their generation
         numbers, and the DELETE (``set_literals`` None) drops the matched
-        rows while the UPDATE applies the literal SETs to them.  What
+        rows while the UPDATE applies the literal SETs to them.  The
+        commit records ``op`` (see :meth:`_commit_rewrite`).  What
         marks a row as matched is the only difference between the plans:
         the compiled KEY-ONLY predicate (``keyset=False``; history
         ``purged``, floor and stamps untouched), or membership in the
@@ -1367,7 +1417,6 @@ class AstroRelation:
         from spark_sql_on_hbase_spark.pruning import column_types, prune_files
 
         meta = self.meta
-        self._keyset_retention_fallback = None
         delete = set_literals is None
         if not delete and set(set_literals) & set(meta.key_names):
             return None
@@ -1377,8 +1426,6 @@ class AstroRelation:
             # generations: retiring the originals is unsound (see above)
             # and folding in place destroys the history retention
             # promises — route to the retained rewrite plans instead
-            if keyset:
-                self._note_keyset_retention_refusal(where)
             return None
         self._ensure_fresh_regions()
         if not meta.regions:
@@ -1490,36 +1537,33 @@ class AstroRelation:
             sort_cols = ["__z", ROWKEY_COL]
         else:
             sort_cols = [ROWKEY_COL]
-        new_seq = self._reserve_generation("REWRITE") if retain else None
+        new_seq = self._reserve_generation(op or "REWRITE") if retain else None
         new_files = self._publish_survivors(survivors, idx, len(hit), sort_cols=sort_cols)
-        self._commit_rewrite(hit, new_files, history, retire_at=new_seq)
+        self._commit_rewrite(hit, new_files, history, retire_at=new_seq, op=op)
         stats["history"] = history
         return stats
 
-    def _note_keyset_retention_refusal(self, where: str) -> None:
+    def _keyset_retention_refusal(self, where: str) -> str | None:
         """The resolved-key-set UPDATE refusal under retain_history is
         SOUND but a cost cliff (r11, VERDICT r10 #4): when the predicate
         would have pruned, the only remaining retained plan is the
-        whole-table :meth:`rewrite_full_retained`.  Warn, and leave the
-        prunability facts for :meth:`rewrite_full`'s stats.  (DELETEs
-        no longer hit this: r12's retained purge covers them.)"""
+        whole-table :meth:`rewrite_full_retained`.  Warn, and return
+        ``"<prunable>/<total>"`` files for the statement's stats; None
+        when the predicate would not have pruned.  (DELETEs no longer
+        hit this: r12's retained purge covers them.)"""
         from spark_sql_on_hbase_spark.pruning import prune_files
 
         meta = self.meta
         self._ensure_fresh_regions()
         if not meta.regions:
-            return
+            return None
         try:
             res = prune_files(meta, where)
         except ValueError:
-            return
+            return None
         if 0 < len(res.files) < res.total:
             import warnings
 
-            self._keyset_retention_fallback = {
-                "files_total": res.total,
-                "files_prunable": len(res.files),
-            }
             warnings.warn(
                 f"{meta.name}: retain_history refuses the resolved-"
                 f"key-set UPDATE plan (old and new values would "
@@ -1530,8 +1574,10 @@ class AstroRelation:
                 f"islands) or disable retain_history to regain "
                 f"pruned rewrites for this statement shape.",
                 RuntimeWarning,
-                stacklevel=4,
+                stacklevel=3,
             )
+            return f"{len(res.files)}/{res.total}"
+        return None
 
     def vacuum(
         self,
@@ -1702,7 +1748,7 @@ class AstroRelation:
             meta.generation_times[str(seq)] = time.time()
             self.catalog.persist(meta)
 
-    def rewrite_full_retained(self, out: DataFrame) -> dict:
+    def rewrite_full_retained(self, out: DataFrame, op: str | None = None) -> dict:
         """Whole-table rewrite under MVCC retention (r10, VERDICT r9 #1):
         the fallback plan when no pruned retained path applies (non-
         sargable predicate, nothing prunes, or a literal-SET fallback
@@ -1712,7 +1758,8 @@ class AstroRelation:
         is deleted, every pre-rewrite snapshot stays readable, and
         COMPACT / INSERT OVERWRITE reclaim the retired storage.  Same
         cost envelope as the non-retained full rewrite (one read + one
-        write of the table) plus the retired bytes until reclaim."""
+        write of the table) plus the retired bytes until reclaim.  The
+        reservation records ``op``."""
         meta = self.meta
         self._ensure_fresh_regions()
         hit = list(meta.regions)
@@ -1720,18 +1767,18 @@ class AstroRelation:
         if not hit:
             # an emptied-but-retained table appends (insert: a bulk load
             # would clobber the history this method promises to keep)
-            self.insert(out)
+            self.insert(out, op=op)
             return stats
         # reservation = the writer-path commit stamp + the concurrency
         # claim (r12 CAS; see append).  File granularity mirrors the
         # pre-rewrite layout (the rewrite_pruned rule with hit =
         # everything).
-        new_seq = self._reserve_generation("REWRITE")  # session overrides op
+        new_seq = self._reserve_generation(op or "REWRITE")
         new_files = self._publish_rows(out, new_seq, hit)
-        self._commit_rewrite(hit, new_files, "retained", retire_at=new_seq)
+        self._commit_rewrite(hit, new_files, "retained", retire_at=new_seq, op=op)
         return stats
 
-    def rewrite_full(self, out: DataFrame) -> dict:
+    def rewrite_full(self, out: DataFrame, op: str | None = None) -> dict:
         """The one full-rewrite fallback of every statement pipeline
         (DELETE / UPDATE / MERGE / RESTORE): ``out`` — the table's full
         post-write contents — replaces the table, retained
@@ -1739,23 +1786,13 @@ class AstroRelation:
         otherwise as a history-folding :meth:`overwrite` (layout job
         into the temp dir, then :meth:`_commit_rewrite`'s ``rebuild``
         commit).  Stats count the live fragments BEFORE the rewrite on
-        both branches.
-
-        When the resolved-key-set UPDATE plan refused ONLY because of
-        retain_history (the predicate pruned a strict file subset), the
-        stats also record how many files a non-retained table would have
-        rewritten instead (r11, VERDICT r10 #4) — the WARN's
-        machine-readable twin."""
+        both branches.  The commit labels its generation ``op`` (the
+        default keeps each branch's mechanism name)."""
         if self.meta.retain_history:
-            stats = self.rewrite_full_retained(out)
-        else:
-            n = len(self.meta.regions)
-            self.overwrite(out)
-            stats = {"files_total": n, "files_rewritten": n, "history": "folded"}
-        fb, self._keyset_retention_fallback = self._keyset_retention_fallback, None
-        if fb:
-            stats["keyset_refused_prunable"] = f"{fb['files_prunable']}/{fb['files_total']}"
-        return stats
+            return self.rewrite_full_retained(out, op=op)
+        n = len(self.meta.regions)
+        self.overwrite(out, op=op)
+        return {"files_total": n, "files_rewritten": n, "history": "folded"}
 
     def _publish_rows(
         self, out: DataFrame, seq: int, hit: list[RegionFile], zmaxs: list | None = None
@@ -3089,6 +3126,7 @@ class AstroRelation:
         adopt_rw: bool = False,
         drops_live: bool = False,
         maintain_indexes: bool = True,
+        before_write=None,
     ) -> None:
         """One aggregate job → per-file (min,max) key bounds + generation
         + distinct-key count into catalog.  All stats ride the same
@@ -3102,7 +3140,8 @@ class AstroRelation:
         pre-commit rewrite outputs; adopting one mid-rewrite would
         double-count its source rows), except in the sibling-rewrite
         recovery path (_ensure_fresh_regions' gone-files case, where a
-        many-to-one sibling's committed rewrite replaced the store)."""
+        many-to-one sibling's committed rewrite replaced the store).
+        ``before_write`` is handed to the commit (``update_regions``)."""
         meta = self.meta
         out_dir = self.catalog.data_dir(meta)
         if only is not None:
@@ -3124,7 +3163,7 @@ class AstroRelation:
             )
         if not stat_paths:
             self.catalog.update_regions(
-                meta, [], restamp=restamp, drops_live=drops_live
+                meta, [], restamp=restamp, drops_live=drops_live, before_write=before_write
             )
             return
         raw = self._read_fragments(*stat_paths)
@@ -3237,7 +3276,7 @@ class AstroRelation:
             ]
             self._maintain_vector_indexes(fresh_v)
         self.catalog.update_regions(
-            meta, regions, restamp=restamp, drops_live=drops_live
+            meta, regions, restamp=restamp, drops_live=drops_live, before_write=before_write
         )
 
     # -- upsert resolution ---------------------------------------------------
@@ -3323,10 +3362,11 @@ class AstroRelation:
         return df.groupBy(ROWKEY_COL, *group).agg(*aggs)
 
     # -- bulk load (CSV) ----------------------------------------------------
-    def load_csv(self, path: str, delimiter: str = ",") -> None:
+    def load_csv(self, path: str, delimiter: str = ",", op: str | None = None) -> None:
         """LOAD DATA INPATH: CSV fields map to declared columns by ordinal;
         empty field ⇒ NULL (HadoopReader.scala:40-56 semantics); PARALL vs
-        serial disappears — the range shuffle is always parallel."""
+        serial disappears — the range shuffle is always parallel.  The
+        rows go through :meth:`insert`, whose commit records ``op``."""
         vec_cols = [
             n for n, dt in self.meta.all_columns
             if C.normalize_type(dt) in C.VECTOR_TYPES
@@ -3349,7 +3389,7 @@ class AstroRelation:
                 ).alias(n)
             return col.cast(spark_type(dt)).alias(n)
 
-        self.insert(raw.select(*[field(n, dt) for n, dt in self.meta.all_columns]))
+        self.insert(raw.select(*[field(n, dt) for n, dt in self.meta.all_columns]), op=op)
 
     # -- read ---------------------------------------------------------------
     def current_seq(self) -> int:
@@ -3358,7 +3398,7 @@ class AstroRelation:
         self._ensure_fresh_regions()
         return max((r.seq for r in self.meta.regions), default=0)
 
-    def restore(self, as_of_seq: int) -> dict:
+    def restore(self, as_of_seq: int, op: str | None = None) -> dict:
         """Roll the table back to its generation-``as_of_seq`` snapshot
         (r11 — the Delta RESTORE analog, the write-side complement of
         VERSION/TIMESTAMP AS OF reads): the snapshot's contents land as
@@ -3368,13 +3408,14 @@ class AstroRelation:
         stays readable, and a second RESTORE undoes the first.  Without
         retention the table is atomically rebuilt with the snapshot
         (history folds, like every whole-table rewrite).  The floor
-        guard applies exactly as for versioned reads."""
+        guard applies exactly as for versioned reads.  The commit
+        records ``op`` (see :meth:`rewrite_full`)."""
         meta = self.meta
         self._ensure_fresh_regions()
         snap = self.scan(as_of_seq=as_of_seq).select(
             *[c for c, _ in meta.all_columns]
         )
-        return {**self.rewrite_full(snap), "restored_to": as_of_seq}
+        return {**self.rewrite_full(snap, op=op), "restored_to": as_of_seq}
 
     def committed_seq(self) -> int:
         """Newest COMMITTED generation, including fileless retirement

@@ -643,22 +643,12 @@ class AstroSession:
 
     def _exec_BulkLoad(self, c: ddl.BulkLoad) -> DataFrame:
         rel = self.relation(c.table, c.namespace)
-        # a never-committed table reports seq 0 both before and after
-        # its first write: use -1 so the statement op still records
-        before = rel.committed_seq() if rel.meta.generation_times else -1
-        rel.load_csv(c.path, delimiter=c.delimiter)
-        # force-record only for a FRESH table (before == -1, where both
-        # seqs read 0); an empty LOAD into an already-written table must
-        # not relabel the previous newest generation's op (ADVICE r11)
-        self._record_op(rel, "LOAD", before, always=(before == -1))
+        rel.load_csv(c.path, delimiter=c.delimiter, op="LOAD")
         rel.register_view()
         return self._ok(f"loaded {c.path} into {c.table}")
 
     def _exec_InsertValues(self, c: ddl.InsertValues) -> DataFrame:
         rel = self.relation(c.table, c.namespace)
-        # a never-committed table reports seq 0 both before and after
-        # its first write: use -1 so the statement op still records
-        before = rel.committed_seq() if rel.meta.generation_times else -1
         schema = table_schema(rel.meta)
         coerced = []
         for row in c.values:
@@ -667,18 +657,12 @@ class AstroSession:
             )
         df = local_rows_df(self.spark, coerced, schema)
         if c.overwrite:
-            rel.overwrite(df)
+            rel.overwrite(df, op="INSERT OVERWRITE")
         else:
             # literal VALUES: the row count is known — flush as few
             # fragments (r9; a handful of rows must not land as
             # num_regions slivers that bloat later island closures)
-            rel.insert(df, fragments=max(1, -(-len(coerced) // 50_000)))
-        self._record_op(
-            rel,
-            "INSERT OVERWRITE" if c.overwrite else "INSERT",
-            before,
-            always=c.overwrite,
-        )
+            rel.insert(df, fragments=max(1, -(-len(coerced) // 50_000)), op="INSERT")
         rel.register_view()
         return self._ok("overwrote 1 row" if c.overwrite else "inserted 1 row")
 
@@ -708,23 +692,14 @@ class AstroSession:
         self._register_all()
         src = self.spark.sql(c.select_sql)
         rel = self.relation(c.table, c.namespace)
-        # a never-committed table reports seq 0 both before and after
-        # its first write: use -1 so the statement op still records
-        before = rel.committed_seq() if rel.meta.generation_times else -1
         named = src.toDF(*[n for n, _ in rel.meta.all_columns])
         cast = named.select(
             *[named[n].cast(table_schema(rel.meta)[n].dataType) for n, _ in rel.meta.all_columns]
         )
         if c.overwrite:
-            rel.overwrite(cast)
+            rel.overwrite(cast, op="INSERT OVERWRITE")
         else:
-            rel.insert(cast)
-        self._record_op(
-            rel,
-            "INSERT OVERWRITE" if c.overwrite else "INSERT",
-            before,
-            always=c.overwrite,
-        )
+            rel.insert(cast, op="INSERT")
         rel.register_view()
         return self._ok(f"{'overwrote' if c.overwrite else 'inserted into'} {c.table}")
 
@@ -810,9 +785,6 @@ class AstroSession:
             return self.spark.sql(c.raw)
         self._register_all()
         rel = self.relation(c.table, c.namespace)
-        # a never-committed table reports seq 0 both before and after
-        # its first write: use -1 so the statement op still records
-        before = rel.committed_seq() if rel.meta.generation_times else -1
         cols = [n for n, _ in rel.meta.all_columns]
         schema = table_schema(rel.meta)
         proj = self._update_projection(rel, c.update_set, "")
@@ -828,9 +800,7 @@ class AstroSession:
                 + " LIMIT 1"
             )
             if probe.take(1):
-                out = self._update_via_rewrite(rel, c)
-                self._record_fold_op(rel, "UPDATE", before, self.last_write_stats)
-                return out
+                return self._update_via_rewrite(rel, c)
         df = self.spark.sql(
             f"SELECT {proj} FROM {c.table}" + (f" WHERE {c.where}" if c.where else "")
         )
@@ -881,6 +851,7 @@ class AstroSession:
             survivors_of,
             full_rows,
             set_literals=c.update_set if literal else None,
+            op="UPDATE",
         )
         rel.register_view()
         return self._ok(f"updated {c.table}")
@@ -899,9 +870,6 @@ class AstroSession:
             return self.spark.sql(c.raw)
         self._register_all()
         rel = self.relation(c.table, c.namespace)
-        # a never-committed table reports seq 0 both before and after
-        # its first write: use -1 so the statement op still records
-        before = rel.committed_seq() if rel.meta.generation_times else -1
         self.last_write_stats = None
 
         def full_rows() -> DataFrame:
@@ -912,14 +880,13 @@ class AstroSession:
                 + (f" WHERE NOT coalesce({c.where}, false)" if c.where else " WHERE false")
             )
 
-        stats = rel.rewrite_rows(
+        self.last_write_stats = rel.rewrite_rows(
             c.where,
             lambda df: df.filter(F.expr(f"NOT coalesce(({c.where}), false)")),
             full_rows,
             delete=True,
+            op="DELETE",
         )
-        self.last_write_stats = stats
-        self._record_fold_op(rel, "DELETE", before, stats)
         rel.register_view()
         return self._ok(f"deleted from {c.table}")
 
@@ -1042,9 +1009,6 @@ class AstroSession:
             return self.spark.sql(c.raw)
         self._register_all()
         rel = self.relation(c.table, c.namespace)
-        # a never-committed table reports seq 0 both before and after
-        # its first write: use -1 so the statement op still records
-        before = rel.committed_seq() if rel.meta.generation_times else -1
         cols = [n for n, _ in rel.meta.all_columns]
         keyset = {k.name for k in rel.meta.key_columns}
         t, s = c.target_alias, c.source_alias
@@ -1119,7 +1083,7 @@ class AstroSession:
             self._merge_update_rewrite(rel, c)
             if build_insert is not None:
                 rel.register_view()
-                rel.insert(build_insert())
+                rel.insert(build_insert(), op="MERGE")
         elif c.delete_matched:
             if build_insert is not None:
                 parts.append(build_insert())
@@ -1152,16 +1116,17 @@ class AstroSession:
                     out = out.unionByName(p)
                 return out
 
-            self.last_write_stats = rel.rewrite_rows(prune_where, survivors_of, full_rows)
+            self.last_write_stats = rel.rewrite_rows(
+                prune_where, survivors_of, full_rows, op="MERGE"
+            )
         else:
             if build_insert is not None:
                 parts.append(build_insert())
             merged = parts[0]
             for p in parts[1:]:
                 merged = merged.unionByName(p)
-            rel.insert(merged)
+            rel.insert(merged, op="MERGE")
         rel.register_view()
-        self._record_fold_op(rel, "MERGE", before, self.last_write_stats)
         return self._ok(f"merged into {c.table}")
 
     def _merge_update_rewrite(self, rel: AstroRelation, c: ddl.MergeInto) -> None:
@@ -1200,40 +1165,8 @@ class AstroSession:
             return out.select(*[out[n].cast(schema[n].dataType) for n in cols])
 
         self.last_write_stats = rel.rewrite_rows(
-            self._source_key_bounds(c, rel), survivors_of, full_rows
+            self._source_key_bounds(c, rel), survivors_of, full_rows, op="MERGE"
         )
-
-    def _record_op(self, rel: AstroRelation, op: str, before_seq: int, always: bool = False) -> None:
-        """Override the writer-recorded MECHANISM with the statement name
-        for DESCRIBE HISTORY (r11).  Recorded only when the statement
-        actually committed a generation (``committed_seq`` moved), or
-        unconditionally for whole-table rebuilds (``always`` — an
-        OVERWRITE of a gen-0 table re-lands at generation 0)."""
-        cur = rel.committed_seq()
-        if always or cur != before_seq:
-            rel.meta.generation_ops[str(cur)] = op
-            self.catalog.persist(rel.meta)
-
-    def _record_fold_op(
-        self, rel: AstroRelation, op: str, before_seq: int, stats: dict | None
-    ) -> None:
-        """_record_op for statements that may FOLD history back to
-        generation 0 (DELETE / UPDATE-via-rewrite / MERGE rewrites —
-        ADVICE r11): on a table whose only generation is 0, a folding
-        rewrite leaves ``committed_seq`` unchanged (0 == 0), so the
-        cur != before check alone would leave DESCRIBE HISTORY showing
-        the mechanism ('OVERWRITE'/'REWRITE') instead of the statement —
-        the identical gen-0 hazard INSERT OVERWRITE already handles with
-        always=True.  Force-record exactly when the rewrite actually
-        rebuilt files AND the table folded to generation 0; a fold whose
-        survivors keep higher generations must NOT relabel them (those
-        generations were committed by earlier statements)."""
-        folded_to_zero = bool(
-            stats
-            and stats.get("files_rewritten", 0) > 0
-            and rel.committed_seq() == 0
-        )
-        self._record_op(rel, op, before_seq, always=folded_to_zero)
 
     def _exec_DescribeHistory(self, c: ddl.DescribeHistory) -> DataFrame:
         """DESCRIBE HISTORY t (r11 — Delta analog): one row per stamped
@@ -1278,9 +1211,7 @@ class AstroSession:
             if c.version is not None
             else rel.seq_for_timestamp(self._parse_asof_timestamp(c.timestamp))
         )
-        stats = rel.restore(seq)
-        self._record_op(rel, "RESTORE", -1, always=True)
-        self.last_write_stats = stats
+        self.last_write_stats = rel.restore(seq, op="RESTORE")
         rel.register_view()
         return self._ok(f"restored {c.table} to generation {seq}")
 

@@ -17,6 +17,7 @@ import random
 import pytest
 
 from spark_sql_on_hbase_spark import bloom
+from spark_sql_on_hbase_spark import codec as C
 from spark_sql_on_hbase_spark.session import AstroSession
 
 # ---------------------------------------------------------------------------
@@ -216,3 +217,21 @@ def test_bloomfilter_none_writes_no_sidecars(spark, tmp_path_factory):
     rel = a.relation("nb")
     data_dir = a.catalog.data_dir(rel.meta)
     assert glob.glob(os.path.join(data_dir, "*.bloom")) == []
+
+
+def test_small_fragment_sidecar_rejects_absent_candidates(spark, tmp_path):
+    """A 9-key trickle fragment probed with 40 absent exact candidates
+    (an index lookup's shape) admits none of them: small sidecars are
+    floored at 1,024 bits.  At 64 bits these keys admit two."""
+    astro = AstroSession(spark, str(tmp_path / "wh"))
+    astro.sql(
+        "CREATE TABLE bs (k INT, v INT, PRIMARY KEY (k)) "
+        "MAPPED BY (bs_h, COLS=[v=f.v]) OPTIONS (regions=1, bloomfilter=row)"
+    )
+    astro.sql("INSERT INTO bs VALUES " + ", ".join(f"({k}, {k})" for k in range(90, 99)))
+    rel = astro.relation("bs")
+    (frag,) = rel.meta.regions
+    assert frag.num_keys == 9
+    absent = [C.encode_key([k], ["int"]) for k in range(190, 230)]
+    assert rel._bloom_admits(frag, [C.encode_key([93], ["int"])])
+    assert sum(rel._bloom_admits(frag, [rk]) for rk in absent) == 0

@@ -208,6 +208,31 @@ def test_compact_conflict_aborts_cleanly(spark, tmp_path, mode, monkeypatch):
     _assert_rebuild_aborts_cleanly(spark, a, rel_a.compact, monkeypatch)
 
 
+def test_sibling_commit_right_after_folded_rewrite(spark, tmp_path, mode, monkeypatch):
+    """A folded partial rewrite writes its survivors, history floor and
+    label in one pointer write, so a sibling that commits right after
+    that write finds the rewrite finished: both commits stand.  (A
+    second write for the floor used to conflict there, abort the
+    committed rewrite and unlink its survivor files.)"""
+    from spark_sql_on_hbase_spark.catalog import AstroCatalog
+
+    a, b = _mk_sessions(spark, tmp_path, "cc8", retain=False)
+    orig, fired = AstroCatalog.update_regions, []
+
+    def racing(self, meta, *args, **kwargs):
+        orig(self, meta, *args, **kwargs)
+        if self is a.catalog and kwargs.get("drops_live") and not fired:
+            fired.append(True)
+            b.sql("INSERT INTO cc8 VALUES (800, 'winner')")
+
+    monkeypatch.setattr(AstroCatalog, "update_regions", racing)
+    a.sql("DELETE FROM cc8 WHERE k <= 10 AND v = 'v5'")
+    monkeypatch.setattr(AstroCatalog, "update_regions", orig)
+    assert fired and a.last_write_stats["history"] == "folded-purge"
+    rows = {r.k: r.v for r in a.sql("SELECT k, v FROM cc8").collect()}
+    assert len(rows) == 100 and 5 not in rows and rows[800] == "winner"
+
+
 @pytest.mark.parametrize("retain", [True, False], ids=["retained", "folded"])
 def test_conflicting_fragment_rewrite_aborts(spark, tmp_path, mode, retain):
     """require_live: two DELETEs over the SAME fragments from two stale
