@@ -959,6 +959,142 @@ def to_column(p: Pred, col_of):
     return None  # Opaque
 
 
+_ARROW_TS_RE = re.compile(
+    r"(\d{4})-(\d{2})-(\d{2})(?:[ T](\d{2}):(\d{2}):(\d{2})(?:\.(\d{1,6}))?)?"
+)
+
+
+def _arrow_operand(col: str, dtype: str | None, values: list, tz: str | None):
+    """(column expression, literal array) comparing ``col`` with
+    ``values`` the way Spark's type coercion does, or None when a value's
+    coercion is not reproduced exactly here.  Numbers compare as Spark
+    widens them (a FLOAT column with a DOUBLE; an integral column only
+    with integers); a DATE/TIMESTAMP column with a strict ISO string cast
+    in the session time zone ``tz``, from 1900 on (older values may be
+    calendar-rebased in storage)."""
+    import datetime
+    import zoneinfo
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    f = pc.field(col)
+    nums = [v for v in values if isinstance(v, (int, float)) and not isinstance(v, bool)]
+    if dtype in ("byte", "short", "int", "long"):
+        if len(nums) == len(values) and all(
+            isinstance(v, int) and -(2**63) <= v < 2**63 for v in nums
+        ):
+            return f, pa.array(values, pa.int64())
+        return None
+    if dtype in ("float", "double"):
+        # non-ANSI Spark compares a FLOAT column with an INT literal in
+        # FLOAT, ANSI in DOUBLE: the same rows while the int is exact in both
+        if len(nums) != len(values) or any(
+            isinstance(v, int) and abs(v) > (2**24 if dtype == "float" else 2**53)
+            for v in nums
+        ):
+            return None
+        xs = [float(v) for v in nums]
+        if not all(math.isfinite(x) for x in xs):
+            return None
+        return f.cast(pa.float64()), pa.array(xs, pa.float64())
+    if dtype == "decimal":
+        if not all(isinstance(v, (int, Decimal)) and not isinstance(v, bool) for v in values):
+            return None
+        decs = [Decimal(v) for v in values]
+        if not all(d.is_finite() for d in decs):
+            return None
+        scale = max([2] + [-d.as_tuple().exponent for d in decs])
+        if scale > 20:  # decimal(38, scale) must hold the stored decimal(20,2)
+            return None
+        t = pa.decimal128(38, scale)
+        try:
+            return f.cast(t), pa.array(decs, t)
+        except (pa.ArrowInvalid, OverflowError):
+            return None
+    if dtype == "boolean":
+        if all(isinstance(v, bool) for v in values):
+            return f, pa.array(values, pa.bool_())
+        return None
+    if dtype == "string":
+        if all(isinstance(v, str) for v in values):
+            return f, pa.array(values, pa.string())
+        return None
+    if dtype in ("date", "timestamp"):
+        ms = [isinstance(v, str) and _ARROW_TS_RE.fullmatch(v) for v in values]
+        if not all(ms) or (dtype == "date" and any(m.group(4) for m in ms)):
+            return None
+        if dtype == "timestamp" and tz is None:
+            return None
+        try:
+            zone = zoneinfo.ZoneInfo(tz) if dtype == "timestamp" else None
+            dts = [
+                datetime.datetime(
+                    *(int(g or 0) for g in m.groups()[:6]),
+                    int((m.group(7) or "0").ljust(6, "0")),
+                    tzinfo=zone,
+                )
+                for m in ms
+            ]
+        except (ValueError, zoneinfo.ZoneInfoNotFoundError):
+            return None  # an invalid date or time zone
+        if any(d.year < 1900 for d in dts):
+            return None
+        if dtype == "date":
+            return f, pa.array([d.date() for d in dts], pa.date32())
+        epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+        us = [(d - epoch) // datetime.timedelta(microseconds=1) for d in dts]
+        return f, pa.array(us, pa.timestamp("us", tz="UTC"))
+    return None
+
+
+def to_arrow(p: Pred, coltypes: dict[str, str], tz: str | None = None):
+    """Compile a parsed predicate into a pyarrow compute ``Expression``
+    that keeps every row Spark's ``filter`` keeps — the sibling of
+    :func:`to_column` for a read done on the driver with pyarrow.
+    ``coltypes`` maps a column to its normalized type, ``tz`` is the
+    Spark session time zone (TIMESTAMP literals are dropped without it).
+
+    Spark's semantics are kept where arrow's differ: NaN equals NaN and
+    sorts above every number, and -0.0 equals 0.0.  Only =, !=, <, <=,
+    >, >= comparisons, IN lists and their ANDs are translated.  An AND
+    conjunct that cannot be expressed exactly is dropped, which only
+    widens the result; None means no filter.  So the result is exact or
+    a superset, and a caller must re-apply the full predicate when it
+    needs exact rows."""
+    import functools
+    import operator
+
+    import pyarrow.compute as pc
+
+    if isinstance(p, And):
+        parts = [x for x in (to_arrow(c, coltypes, tz) for c in p.children) if x is not None]
+        return functools.reduce(operator.and_, parts) if parts else None
+    if isinstance(p, (Comparison, InList)):
+        values = [p.value] if isinstance(p, Comparison) else [v for v in p.values if v is not None]
+        dtype = coltypes.get(p.col)
+        if not values or values[0] is None:
+            return None  # `x = NULL` keeps no row: dropping it only widens
+        operand = _arrow_operand(p.col, dtype, values, tz)
+        if operand is None:
+            return None
+        f, arr = operand
+        floats = dtype in ("float", "double")
+        if isinstance(p, InList):
+            if floats and any(x == 0 for x in values):
+                arr = arr.to_pylist() + [0.0, -0.0]  # is_in hashes -0.0 apart from 0.0
+            return f.isin(arr)
+        op = {
+            "=": operator.eq, "!=": operator.ne, "<": operator.lt,
+            "<=": operator.le, ">": operator.gt, ">=": operator.ge,
+        }[p.op]
+        out = op(f, arr[0])
+        if floats and p.op in (">", ">="):
+            out = out | pc.is_nan(f)  # NaN sorts above every number
+        return out
+    return None
+
+
 # ---------------------------------------------------------------------------
 # rendering (Pred → SQL text) — for per-partition residual simplification
 # ---------------------------------------------------------------------------

@@ -95,8 +95,9 @@ class PruneResult:
     # survived key-range and bloom pruning; None when no file is read
     merge: bool | None = None
     # the index probe behind index_mode: (index files read, index files
-    # total); the probe never merges.  None when no index engaged
-    index_probe: tuple[int, int] | None = None
+    # total, "driver" or "spark" — where it ran); the probe never
+    # merges.  None when no index engaged
+    index_probe: tuple[int, int, str] | None = None
     # how many exact index candidate rowkeys the blooms were probed
     # with (instead of the predicate's point set); None otherwise
     bloom_index_keys: int | None = None

@@ -1948,6 +1948,34 @@ class AstroRelation:
         df = self.spark.read.schema(self._file_schema()).parquet(*paths)
         return df.withColumn(SEQ_COL, F.coalesce(F.col(SEQ_COL), F.lit(0)))
 
+    def _read_on_driver(self, res: "PruneResult", columns: list[str]) -> list[tuple]:
+        """``columns`` of every stored version in ``res.files`` that may
+        satisfy ``res.predicate``, read with pyarrow on the driver under
+        the declared :meth:`_file_schema` — a batched get that runs no
+        Spark job.  The filter is :func:`predicate.to_arrow`'s, so the
+        rows are exactly Spark's or a superset of them.  No reader lease
+        is registered: the read is over when this returns, and a
+        fragment reclaimed under it raises."""
+        if not res.files:
+            return []
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from spark_sql_on_hbase_spark.predicate import referenced_columns, to_arrow
+        from spark_sql_on_hbase_spark.pruning import column_types
+
+        coltypes = column_types(self.meta)
+        tz = None
+        if any(coltypes.get(c) == C.TIMESTAMP for c in referenced_columns(res.predicate)):
+            tz = self.spark.conf.get("spark.sql.session.timeZone")
+        table = ds.dataset(
+            [self._local_path(r.path) for r in res.files],
+            schema=to_arrow_schema(self._file_schema()),
+            # Spark writes INT96 timestamps; nanoseconds overflow before 1677
+            format=ds.ParquetFileFormat(read_options={"coerce_int96_timestamp_unit": "us"}),
+        ).to_table(columns=columns, filter=to_arrow(res.predicate, coltypes, tz))
+        return list(zip(*(table.column(c).to_pylist() for c in columns)))
+
     def _build_bloom_sidecars(self, paths: list[str]) -> None:
         """Build missing ``<fragment>.bloom`` sidecars (bloom.py) — one
         executor task per fragment via applyInPandas, so the pass scales
@@ -2854,14 +2882,16 @@ class AstroRelation:
           scalars to the driver) used for file pruning + parquet
           pushdown; the caller leftsemi-joins ``keys`` for exactness.
 
-        ``probe`` is (index files read, index files total).  The probe
-        is the index table's ``scan_where`` with ``merge=False``: its
-        conjuncts are on index-table key columns, so filtering before
-        or after the newest-cell-wins merge keeps the same (col, key)
-        tuples and only duplicates differ — they are dropped on the
-        driver.  When the catalog row counts of the surviving index
-        fragments already fit the cap, a plain ``collect()`` is exact
-        and runs one Spark job; otherwise ``limit(cap + 1)`` bounds the
+        ``probe`` is (index files read, index files total, where the
+        probe ran: ``"driver"`` or ``"spark"``).  The probe never merges:
+        its conjuncts are on index-table key columns, so filtering
+        before or after the newest-cell-wins merge keeps the same (col,
+        key) tuples and only duplicates differ — they are dropped on the
+        driver.  When the catalog row counts of the pruned index
+        fragments fit the cap, the probe is a batched get: one pyarrow
+        read of those fragments on the driver (:meth:`_read_on_driver`),
+        no Spark job.  Over the cap it is the index table's
+        ``scan_where(merge=False)``: ``limit(cap + 1)`` bounds the
         collect, and only more than ``cap`` raw rows pay a ``distinct``
         (the over-cap count and the semi-join).
 
@@ -2878,7 +2908,7 @@ class AstroRelation:
             render,
             _lit_sql,
         )
-        from spark_sql_on_hbase_spark.pruning import POINT_PROBE_CAP
+        from spark_sql_on_hbase_spark.pruning import POINT_PROBE_CAP, prune_files
 
         # the candidate keys / bounds must render back into parseable
         # SQL literals — temporal/decimal key columns don't round-trip
@@ -2961,23 +2991,28 @@ class AstroRelation:
             probe_conjuncts.extend(by_col.get(d, ()))
         probe_sql = " AND ".join(render(c) for c in probe_conjuncts)
         cap = self.INDEX_LOOKUP_CAP
+        keys = None
         try:
-            idx_df, idx_res = idx_rel.scan_where(probe_sql, merge=False)
-            raw = idx_df.select(*self.meta.key_names)
-            if not idx_res.files:
-                rows = []
-            elif sum(r.num_rows for r in idx_res.files) <= cap:
-                rows = raw.collect()
-            else:
+            idx_rel._ensure_fresh_regions()
+            pruned = prune_files(idx_rel.meta, probe_sql)
+            rows = None
+            if sum(r.num_rows for r in pruned.files) <= cap:
+                rows = idx_rel._read_on_driver(pruned, self.meta.key_names)
+                probe = (len(pruned.files), pruned.total, "driver")
+            # more rows than the catalog counts (a stale count) take the
+            # Spark probe too: only it can feed the over-cap semi-join
+            if rows is None or len(rows) > cap:
+                idx_df, idx_res = idx_rel.scan_where(probe_sql, merge=False)
+                raw = idx_df.select(*self.meta.key_names)
                 rows = raw.limit(cap + 1).collect()
-            over_cap = len(rows) > cap
-            if over_cap:
-                # the only path to the semi-join below, which uses keys
-                keys = raw.distinct()
-                rows = keys.limit(cap + 1).collect()
+                if len(rows) > cap:
+                    # the only path to the semi-join below, which uses keys
+                    keys = raw.distinct()
+                    rows = keys.limit(cap + 1).collect()
+                probe = (len(idx_res.files), idx_res.total, "spark")
         except Exception:
             return None  # index unreadable → full scan (never a dependency)
-        probe = (len(idx_res.files), idx_res.total)
+        over_cap = keys is not None
         if not rows:
             return {"kind": "empty", "col": col, "probe": probe}
         # deduplicated by rowkey, the store's key identity (a set of
@@ -3803,8 +3838,11 @@ class AstroRelation:
         known-hard #2).
 
         A predicate on an indexed column routes through the index first
-        (:meth:`_index_route`): one merge-free probe job collects the
-        candidate keys, which narrow the pruning predicate and — up to
+        (:meth:`_index_route`): a merge-free probe of the index table
+        yields the candidate keys — a pyarrow read on the driver with no
+        Spark job when the pruned index fragments hold at most
+        ``INDEX_LOOKUP_CAP`` rows, a Spark job otherwise.  The candidates
+        narrow the pruning predicate and — up to
         ``POINT_PROBE_CAP`` of them — are the exact points the ROW-bloom
         sidecars are probed with, so a fragment holding no candidate is
         skipped and the read often needs no merge.

@@ -336,8 +336,9 @@ class AstroSession:
             if res.index_candidates is not None:
                 probe = ""
                 if res.index_probe is not None:
-                    read, total = res.index_probe
-                    probe = f"; probe read {read} of {total} index files, no merge"
+                    read, total, ran = res.index_probe
+                    ran = "on the driver" if ran == "driver" else "in Spark (over cap)"
+                    probe = f"; probe read {read} of {total} index files {ran}, no merge"
                 out += f" ({res.index_candidates} candidate keys{probe})"
             if res.index_declined:
                 out += f" — declined: {res.index_declined}"

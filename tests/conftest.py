@@ -126,3 +126,32 @@ def jobs_of(spark):
         return out, sc.statusTracker().getJobIdsForGroup(group)
 
     return run
+
+
+@pytest.fixture()
+def py4j_calls(spark, monkeypatch):
+    """``py4j_calls(action)`` → (result, number of calls from Python into
+    the JVM that ``action`` made on this thread), counted at
+    ``ClientServerConnection.send_command``.  Other threads (the lease
+    refresher) are not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    real = ClientServerConnection.send_command
+    me = threading.get_ident()
+    calls = [0]
+
+    def counted(self, *args, **kwargs):
+        if threading.get_ident() == me:
+            calls[0] += 1
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+
+    def run(action):
+        before = calls[0]
+        out = action()
+        return out, calls[0] - before
+
+    return run
