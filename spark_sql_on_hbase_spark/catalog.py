@@ -390,11 +390,19 @@ def _manifest_ref_stats(live: list[dict], meta: "TableMeta") -> dict:
                         hi[i] = iv.hi
             except TypeError:  # incomparable mixed types → unprunable dim
                 unbounded[i] = True
+    dtypes = meta.key_dtypes
+
+    def stored(bounds: list) -> list:
+        return [
+            None if unbounded[i] or not seen[i] else _json_key_value(bounds[i], dtypes[i])
+            for i in range(n)
+        ]
+
     return {
         "seq_lo": min(seqs),
         "seq_hi": max(seqs),
-        "env_lo": [None if unbounded[i] or not seen[i] else lo[i] for i in range(n)],
-        "env_hi": [None if unbounded[i] or not seen[i] else hi[i] for i in range(n)],
+        "env_lo": stored(lo),
+        "env_hi": stored(hi),
     }
 
 

@@ -959,9 +959,38 @@ def to_column(p: Pred, col_of):
     return None  # Opaque
 
 
-_ARROW_TS_RE = re.compile(
+_ISO_TS_RE = re.compile(
     r"(\d{4})-(\d{2})-(\d{2})(?:[ T](\d{2}):(\d{2}):(\d{2})(?:\.(\d{1,6}))?)?"
 )
+
+
+def temporal_value(v, dtype: str | None, tz: str | None):
+    """The value Spark casts the string ``v`` to when it is compared with
+    a DATE (a ``date``) or TIMESTAMP column (an aware ``datetime`` in the
+    session time zone ``tz``), or None when that cast is not reproduced
+    exactly here: only strict ISO strings from 1900 on (older values may
+    be calendar-rebased in storage), no time part for a DATE, and no
+    TIMESTAMP without ``tz``."""
+    import datetime
+    import zoneinfo
+
+    if dtype not in ("date", "timestamp") or (dtype == "timestamp" and tz is None):
+        return None
+    m = isinstance(v, str) and _ISO_TS_RE.fullmatch(v)
+    if not m or (dtype == "date" and m.group(4)):
+        return None
+    try:
+        zone = zoneinfo.ZoneInfo(tz) if dtype == "timestamp" else None
+        d = datetime.datetime(
+            *(int(g or 0) for g in m.groups()[:6]),
+            int((m.group(7) or "0").ljust(6, "0")),
+            tzinfo=zone,
+        )
+    except (ValueError, zoneinfo.ZoneInfoNotFoundError):
+        return None  # an invalid date or time zone
+    if d.year < 1900:
+        return None
+    return d.date() if dtype == "date" else d
 
 
 def _arrow_operand(col: str, dtype: str | None, values: list, tz: str | None):
@@ -970,10 +999,8 @@ def _arrow_operand(col: str, dtype: str | None, values: list, tz: str | None):
     coercion is not reproduced exactly here.  Numbers compare as Spark
     widens them (a FLOAT column with a DOUBLE; an integral column only
     with integers); a DATE/TIMESTAMP column with a strict ISO string cast
-    in the session time zone ``tz``, from 1900 on (older values may be
-    calendar-rebased in storage)."""
+    in the session time zone ``tz`` (:func:`temporal_value`)."""
     import datetime
-    import zoneinfo
 
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -1021,27 +1048,11 @@ def _arrow_operand(col: str, dtype: str | None, values: list, tz: str | None):
             return f, pa.array(values, pa.string())
         return None
     if dtype in ("date", "timestamp"):
-        ms = [isinstance(v, str) and _ARROW_TS_RE.fullmatch(v) for v in values]
-        if not all(ms) or (dtype == "date" and any(m.group(4) for m in ms)):
-            return None
-        if dtype == "timestamp" and tz is None:
-            return None
-        try:
-            zone = zoneinfo.ZoneInfo(tz) if dtype == "timestamp" else None
-            dts = [
-                datetime.datetime(
-                    *(int(g or 0) for g in m.groups()[:6]),
-                    int((m.group(7) or "0").ljust(6, "0")),
-                    tzinfo=zone,
-                )
-                for m in ms
-            ]
-        except (ValueError, zoneinfo.ZoneInfoNotFoundError):
-            return None  # an invalid date or time zone
-        if any(d.year < 1900 for d in dts):
+        dts = [temporal_value(v, dtype, tz) for v in values]
+        if any(d is None for d in dts):
             return None
         if dtype == "date":
-            return f, pa.array([d.date() for d in dts], pa.date32())
+            return f, pa.array(dts, pa.date32())
         epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
         us = [(d - epoch) // datetime.timedelta(microseconds=1) for d in dts]
         return f, pa.array(us, pa.timestamp("us", tz="UTC"))

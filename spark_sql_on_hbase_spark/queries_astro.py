@@ -986,7 +986,7 @@ ASTRO["astro_covering_sql"] = Q(
     "last_select_route, graded by the probe row together with the "
     "physical input-files claim and the pending-upsert (merge-on-read) "
     "state; ineligible shapes pass through spark.sql untouched "
-    "(tests/test_covering_sql_routing.py pins eight of them)",
+    "(tests/test_covering_sql_routing.py pins seven of them)",
 )
 
 

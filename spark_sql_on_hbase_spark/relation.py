@@ -36,6 +36,7 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -287,6 +288,17 @@ def rowkey_sql(key_names: list[str], key_dtypes: list[str]) -> str:
             f"ELSE {enc} END"
         )
     return f"concat({', '.join(parts)})"
+
+
+@dataclass
+class SelectPlan:
+    """How ``SELECT columns FROM <table> WHERE …`` reads: the decision of
+    :meth:`AstroRelation.plan_select`."""
+
+    df: DataFrame | None  # the planned read of the columns, None if none
+    res: "PruneResult | None"  # its pruning outcome
+    routed: bool  # read ``df``; else spark.sql over the full view
+    why: str  # the decision in words: EXPLAIN SCAN's ``covering`` row
 
 
 class AstroRelation:
@@ -1044,7 +1056,7 @@ class AstroRelation:
         if not meta.regions:
             return None
         try:
-            res = prune_files(meta, prune_where)
+            res = prune_files(meta, prune_where, self._pruning_tz())
         except ValueError:
             return None  # non-sargable → full path
         retain = bool(meta.retain_history)
@@ -1449,7 +1461,7 @@ class AstroRelation:
             if cond is None:
                 return None  # opaque leaf → resolved paths handle it
         try:
-            res = prune_files(meta, match)
+            res = prune_files(meta, match, self._pruning_tz())
         except ValueError:
             return None
         hit = sorted(res.files, key=lambda r: r.path)
@@ -1558,7 +1570,7 @@ class AstroRelation:
         if not meta.regions:
             return None
         try:
-            res = prune_files(meta, where)
+            res = prune_files(meta, where, self._pruning_tz())
         except ValueError:
             return None
         if 0 < len(res.files) < res.total:
@@ -1947,6 +1959,13 @@ class AstroRelation:
             leases.track(self)
         df = self.spark.read.schema(self._file_schema()).parquet(*paths)
         return df.withColumn(SEQ_COL, F.coalesce(F.col(SEQ_COL), F.lit(0)))
+
+    def _pruning_tz(self) -> str | None:
+        """The session time zone when a key column is a TIMESTAMP (pruning
+        casts TIMESTAMP key literals in it), else None — no JVM call."""
+        if C.TIMESTAMP in map(C.normalize_type, self.meta.key_dtypes):
+            return self.spark.conf.get("spark.sql.session.timeZone")
+        return None
 
     def _read_on_driver(self, res: "PruneResult", columns: list[str]) -> list[tuple]:
         """``columns`` of every stored version in ``res.files`` that may
@@ -2891,9 +2910,11 @@ class AstroRelation:
         fragments fit the cap, the probe is a batched get: one pyarrow
         read of those fragments on the driver (:meth:`_read_on_driver`),
         no Spark job.  Over the cap it is the index table's
-        ``scan_where(merge=False)``: ``limit(cap + 1)`` bounds the
-        collect, and only more than ``cap`` raw rows pay a ``distinct``
-        (the over-cap count and the semi-join).
+        ``scan_where(merge=False)``: its ``limit(cap + 1)``, collected
+        through the limit's RDD, reads every partition in parallel in
+        one job however many fragments it reads, and only more than
+        ``cap`` raw rows pay a ``distinct`` (the over-cap count and the
+        semi-join).
 
         Soundness is unchanged from r12: every path yields a SUPERSET of
         the matching rows (the index is superset-maintained; the augment
@@ -2994,7 +3015,7 @@ class AstroRelation:
         keys = None
         try:
             idx_rel._ensure_fresh_regions()
-            pruned = prune_files(idx_rel.meta, probe_sql)
+            pruned = prune_files(idx_rel.meta, probe_sql, idx_rel._pruning_tz())
             rows = None
             if sum(r.num_rows for r in pruned.files) <= cap:
                 rows = idx_rel._read_on_driver(pruned, self.meta.key_names)
@@ -3004,11 +3025,14 @@ class AstroRelation:
             if rows is None or len(rows) > cap:
                 idx_df, idx_res = idx_rel.scan_where(probe_sql, merge=False)
                 raw = idx_df.select(*self.meta.key_names)
-                rows = raw.limit(cap + 1).collect()
+                # a collected limit takes one partition, then more, each
+                # as its own job; the limit's RDD takes cap + 1 rows of
+                # every partition and shuffles them to one: one job
+                rows = raw.limit(cap + 1).rdd.collect()
                 if len(rows) > cap:
                     # the only path to the semi-join below, which uses keys
                     keys = raw.distinct()
-                    rows = keys.limit(cap + 1).collect()
+                    rows = keys.limit(cap + 1).rdd.collect()
                 probe = (len(idx_res.files), idx_res.total, "spark")
         except Exception:
             return None  # index unreadable → full scan (never a dependency)
@@ -3863,6 +3887,7 @@ class AstroRelation:
 
         self._ensure_fresh_regions()
         meta = self.meta
+        tz = self._pruning_tz()
         index_col = None
         index_mode = None
         index_n = None
@@ -3897,7 +3922,7 @@ class AstroRelation:
                 index_probe = route["probe"]
                 if route["kind"] == "empty":
                     # the index proves no key carries the value
-                    res = prune_files(meta, where)
+                    res = prune_files(meta, where, tz)
                     res.files = []
                     res.index_used = index_col
                     res.index_mode = "empty"
@@ -3913,7 +3938,7 @@ class AstroRelation:
                     if route["aug"]:
                         where = f"({where}) AND {route['aug']}"
         try:
-            res = prune_files(meta, where)
+            res = prune_files(meta, where, tz)
             res.index_used = index_col
             res.index_mode = index_mode
             res.index_candidates = index_n
@@ -3992,10 +4017,11 @@ class AstroRelation:
         # is the Spark equivalent (a single plan serves all partitions)
         from spark_sql_on_hbase_spark.predicate import TRUE as _T
         from spark_sql_on_hbase_spark.predicate import evaluate, render
-        from spark_sql_on_hbase_spark.pruning import file_envelope
+        from spark_sql_on_hbase_spark.pruning import by_value, file_envelope
 
         if res.key_pushed is not None and not isinstance(res.predicate, Opaque):
-            if all(evaluate(res.key_pushed, file_envelope(rf, meta)) == _T for rf in res.files):
+            key_pushed = by_value(res.key_pushed, meta, tz)
+            if all(evaluate(key_pushed, file_envelope(rf, meta)) == _T for rf in res.files):
                 res.residual_only = True
                 if res.residual is None:
                     return df, res
@@ -4003,9 +4029,10 @@ class AstroRelation:
         return df.filter(F.expr(where)), res
 
     def scan_covering(self, where: str, columns: list[str]):
-        """Pruned scan serving only ``columns`` — from a COVERING index
-        alone when sound (r13, Phoenix covered-column analog; VERDICT
-        r12 #3), else the ordinary :meth:`scan_where` projected.
+        """Pruned scan serving only ``columns``, as :meth:`plan_select`
+        decides it — from a COVERING index alone when sound (r13, Phoenix
+        covered-column analog; VERDICT r12 #3), else the ordinary
+        :meth:`scan_where` projected.
 
         An index created with ``INCLUDE (cols)`` stores the covered
         columns next to the (col, *main_keys) entries.  A query whose
@@ -4028,9 +4055,9 @@ class AstroRelation:
         and files counted against the index's fragments."""
         if not columns:
             raise ValueError("scan_covering needs at least one column")
-        route = self.covering_plan(where, columns)
-        if route is not None:
-            return route
+        plan = self.plan_select(where, columns)
+        if plan.df is not None:
+            return plan.df, plan.res
         df, res = self.scan_where(where)
         return df.select(*columns), res
 
@@ -4114,6 +4141,71 @@ class AstroRelation:
                 res.index_mode = "covering"
                 return df.select(*columns), res
         return None
+
+    def plan_select(self, where: str, columns: list[str]) -> SelectPlan:
+        """How ``SELECT columns FROM <this table> WHERE where`` reads: the
+        one decision behind the session's SELECT router, EXPLAIN SCAN's
+        ``covering`` row and :meth:`scan_covering`.  In order:
+
+        1. a covering index serves the projection and predicate: the
+           index-only read of :meth:`covering_plan`;
+        2. the predicate has a servable conjunct on a leading indexed
+           column and does not pin the full key: :meth:`scan_where`,
+           routed when its index probe engaged (``augment`` or
+           ``semijoin``), so the main table reads only the candidates'
+           fragments and merges only when they overlap, or when the
+           index proves no row matches.  A read of no fragment is a
+           ``limit(0)`` frame, which the optimizer folds to an empty
+           local relation: it runs no job;
+        3. everything else reads the view: point and range SELECTs
+           (critical-point pruning over the view is not planned yet)
+           and a declined index.  ``df`` is the projected
+           ``scan_where`` read when one was planned anyway."""
+        route = self.covering_plan(where, columns)
+        if route is not None:
+            df, res = route
+            how = (
+                "merge-on-read: newest-wins per key resolved "
+                "index-side under pending upserts"
+                if res.index_merge
+                else "projection ⊆ col ∪ keys ∪ include; exactly-live"
+            )
+            return SelectPlan(df, res, True, f"index-only via {res.index_used} ({how})")
+        df = res = None
+        servable = self._servable_index_conjuncts(where) if self.meta.indexes else {}
+        if servable is None:
+            why = "a NUL-carrying string literal bypasses every index"
+        elif not self.meta.indexes:
+            why = "no secondary index"
+        elif not set(servable) & set(self.meta.indexes):
+            why = "no servable conjunct on a leading indexed column"
+        elif self._full_key_pinned(where):
+            why = "full-key point predicate (key pruning and blooms serve it)"
+        else:
+            df, res = self.scan_where(where)
+            if not res.files:
+                # scan_where's empty frame: the filter still resolves the
+                # predicate (a SELECT spark.sql rejects is not answered)
+                # and limit(0) folds the plan to no job
+                df = df.filter(F.expr(where)).limit(0)
+            df = df.select(*columns)
+            if res.index_mode in ("augment", "semijoin"):
+                return SelectPlan(
+                    df,
+                    res,
+                    True,
+                    f"main-table read routed through index {res.index_used} "
+                    f"({res.index_mode})",
+                )
+            if res.index_mode == "empty":
+                return SelectPlan(
+                    df, res, True, f"no read: index {res.index_used} proves no row matches"
+                )
+            if res.index_declined:
+                why = f"index declined: {res.index_declined}"
+            else:
+                why = "the index probe did not engage"
+        return SelectPlan(df, res, False, f"spark.sql over the full view — {why}")
 
     def _scan_covering_merge(self, idx_rel, col, info, where, servable):
         """Index-only covering read UNDER pending main-table upserts

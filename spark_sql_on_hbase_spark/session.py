@@ -273,37 +273,13 @@ class AstroSession:
 
         rel = self.relation(c.table, c.namespace)
         covering_row = None
+        res = None
         if c.columns:
-            # COLUMNS projection (r13): report the covering-index
-            # decision the projected scan would take
-            _df, res = rel.scan_covering(c.where, list(c.columns))
-            if res.index_mode == "covering":
-                covering_row = (
-                    f"index-only via {res.index_used} "
-                    + (
-                        "(merge-on-read: newest-wins per key resolved "
-                        "index-side under pending upserts)"
-                        if res.index_merge
-                        else "(projection ⊆ col ∪ keys ∪ include; exactly-live)"
-                    )
-                )
-            else:
-                reasons = []
-                if rel.needs_merge():
-                    reasons.append(
-                        "pending upserts (needs_merge) and no merge-exact index"
-                    )
-                if not rel.meta.index_info:
-                    reasons.append("no index with INCLUDE state")
-                elif not any(
-                    v.get("clean") for v in rel.meta.index_info.values()
-                ):
-                    reasons.append("no exactly-live index (REINDEX re-attests)")
-                covering_row = "main-table scan" + (
-                    f" — {'; '.join(reasons)}" if reasons else
-                    " — projection/predicate not covered by any clean index"
-                )
-        else:
+            # COLUMNS projection: the route a SQL SELECT of these columns
+            # takes — the SELECT router's own decision
+            plan = rel.plan_select(c.where, list(c.columns))
+            res, covering_row = plan.res, plan.why
+        if res is None:
             _df, res = rel.scan_where(c.where)
 
         def _render(p):
@@ -1401,32 +1377,32 @@ class AstroSession:
         out.append(text[last:])
         return "".join(out)
 
-    # conservative SELECT shape the covering-index router recognizes:
-    # bare-identifier projection over ONE bare table with a WHERE tail.
-    # Anything richer (expressions, *, aliases, joins, qualified names)
-    # falls through to spark.sql.  Structural keywords after WHERE are
-    # handled by the predicate parser: GROUP/ORDER/LIMIT swallowed into
-    # the where-text make parse_predicate fail, so covering_plan
-    # declines and the statement passes through untouched.
-    _COVER_SELECT_RE = re.compile(
+    # conservative SELECT shape the router recognizes: bare-identifier
+    # projection over ONE bare table with a WHERE tail.  Anything richer
+    # (expressions, *, aliases, joins, qualified names) falls through to
+    # spark.sql.  Structural keywords after WHERE are handled by the
+    # predicate parser and the routed filter: GROUP/ORDER/LIMIT swallowed
+    # into the where-text either fail parse_predicate (no servable
+    # conjunct, so plan_select declines) or fail the routed frame's
+    # filter expression, and the statement passes through untouched.
+    _SELECT_RE = re.compile(
         r"^\s*SELECT\s+(?P<cols>[A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s+"
         r"FROM\s+(?P<tbl>[A-Za-z_]\w*)\s+WHERE\s+(?P<where>.+?)\s*;?\s*$",
         re.IGNORECASE | re.DOTALL,
     )
 
-    def _try_covering_select(self, text: str) -> DataFrame | None:
-        """Route a plain ``SELECT cols FROM t WHERE …`` through the
-        table's covering index when the projection ∪ predicate ⊆ the
-        covered set (r15, VERDICT r14 #6): the engine's own SQL entry
-        point now takes its best access path — an index-only read —
-        instead of always scanning the main table.  Sound by
-        construction: :meth:`AstroRelation.covering_plan` returns None
-        unless the index is clean (+ merge_exact under upserts) and the
-        predicate both parses and carries a servable conjunct; the
-        routed frame applies the FULL predicate, matching spark.sql
-        semantics exactly.  The decision is recorded on
-        ``last_select_route`` (EXPLAIN SCAN shows the same routing)."""
-        m = self._COVER_SELECT_RE.match(text)
+    def _route_select(self, text: str) -> DataFrame | None:
+        """The SELECT router: a plain ``SELECT cols FROM t WHERE …`` on an
+        indexed catalog table reads through the table's best access path
+        — the decision of :meth:`AstroRelation.plan_select`, which
+        EXPLAIN SCAN … COLUMNS shows too: an index-only read when a
+        covering index serves it, else ``scan_where``'s index route
+        (probe, pruned fragments, a merge decided over them) when the
+        index engaged or proved the result empty.  All apply the FULL
+        predicate, so the rows are spark.sql's.  Returns None (pass through to spark.sql) for every
+        other statement; a routed read is recorded on
+        ``last_select_route``."""
+        m = self._SELECT_RE.match(text)
         if m is None:
             return None
         tbl = m.group("tbl")
@@ -1434,28 +1410,28 @@ class AstroSession:
             rel = self.relation(tbl)
         except KeyError:
             return None  # not a catalog table (user temp view etc.)
-        if not rel.meta.index_info:
+        if not rel.meta.indexes:
             return None
         cols = [c.strip() for c in m.group("cols").split(",")]
         declared = {n for n, _ in rel.meta.all_columns}
         if not all(c in declared for c in cols):
             return None  # unknown/differently-cased identifier → spark.sql
         try:
-            route = rel.covering_plan(m.group("where"), cols)
+            plan = rel.plan_select(m.group("where"), cols)
         except Exception:
             return None  # router must never break a passthrough SELECT
-        if route is None:
+        if not plan.routed:
             return None
         # ownership guard (r15 review): a user may have REPLACED the
         # registered temp view (createOrReplaceTempView with the same
         # name) — spark.sql would then read the user's view, so routing
-        # to the catalog table's index would silently diverge.  Route
-        # only when the currently-registered view provably reads this
-        # table's physical store (its input files live under the
-        # table's directory); anything else passes through untouched.
-        # Probed LAST (r15 review follow-up): inputFiles() is a full
-        # view resolution + file listing, so only statements that would
-        # otherwise route pay it — a declined SELECT declines for free.
+        # to the catalog table would silently diverge.  Route only when
+        # the currently-registered view provably reads this table's
+        # physical store (its input files live under the table's
+        # directory); anything else passes through untouched.  Probed
+        # LAST: inputFiles() is a full view resolution + file listing,
+        # so only statements that would otherwise route pay it — a
+        # declined SELECT declines for free.
         try:
             vfiles = self.spark.table(tbl).inputFiles()
         except Exception:
@@ -1463,11 +1439,14 @@ class AstroSession:
         marker = f"/{rel.meta.physical_table}/"
         if not vfiles or not all(marker in f for f in vfiles):
             return None
-        df, res = route
-        self.last_select_route = res
-        return df
+        self.last_select_route = plan.res
+        return plan.df
 
     def _exec_PassThrough(self, c: ddl.PassThrough) -> DataFrame:
+        """Any statement the DDL parser does not own runs as spark.sql over
+        the registered views, after the time-travel (``VERSION AS OF``)
+        and change-feed rewrites; a plain SELECT that is neither is first
+        offered to :meth:`_route_select`."""
         self._register_all()
         self.last_select_route = None
         sql_text = c.sql
@@ -1479,7 +1458,7 @@ class AstroSession:
             sql_text = self._rewrite_changes(sql_text)
             rewritten = True
         if not rewritten:  # time-travel/changes reads never route
-            routed = self._try_covering_select(sql_text)
+            routed = self._route_select(sql_text)
             if routed is not None:
                 return routed
         return self.spark.sql(sql_text)

@@ -1,15 +1,15 @@
-"""r15 (VERDICT r14 #6) — covering-index planner integration.
+"""The SQL SELECT router.
 
-`scan_covering` existed as an API + EXPLAIN SCAN surface, but an
-ordinary ``hql("SELECT col, inc FROM t WHERE col = …")`` still took the
-main-table path — the engine's own SQL entry point didn't route to its
-best access path.  The session's SELECT planner now tries
-`AstroRelation.covering_plan` for the conservative shape
-``SELECT <bare cols> FROM <bare table> WHERE <pred>`` and serves the
-query index-only when the plan is sound; everything else passes through
-spark.sql untouched.  Reference analog: the DDL-managed index surface
-(HBaseSQLParser.scala:180-232) — an index you must query by hand is
-half an index.
+For the conservative shape ``SELECT <bare cols> FROM <bare table> WHERE
+<pred>`` the session asks `AstroRelation.plan_select` for the table's best
+access path: an index-only read when a covering index serves the
+projection and predicate, else ``scan_where``'s index route when the
+predicate has a servable conjunct on a leading indexed column and the
+index engages.  Everything else passes through spark.sql untouched.
+Reference analogs: the DDL-managed index surface
+(HBaseSQLParser.scala:180-232) — an index you must query by hand is half
+an index — and ``HBaseRelation.buildScan``, through which every SELECT
+reaches a pruned scan.
 """
 
 import pytest
@@ -80,8 +80,6 @@ def test_routes_under_pending_upserts_via_merge(astro):
 @pytest.mark.parametrize(
     "q",
     [
-        # projection outside the covered set → main path
-        "SELECT k1, note FROM csr WHERE status = 'E'",
         # no servable conjunct on the indexed column
         "SELECT k1, amt FROM csr WHERE amt > 100",
         # structural tails must not be swallowed into the predicate
@@ -101,6 +99,42 @@ def test_ineligible_selects_pass_through_with_correct_results(astro, q):
     assert sorted(map(tuple, df.collect())) == sorted(map(tuple, want.collect()))
 
 
+def test_uncovered_projection_routes_through_the_index(astro):
+    """A projection outside the covered set reads the main table through
+    scan_where's index route, with spark.sql's rows."""
+    q = "SELECT k1, note FROM csr WHERE status = 'E'"
+    df = astro.sql(q)
+    res = astro.last_select_route
+    assert res is not None and res.index_used == "status"
+    assert res.index_mode == "augment"
+    assert not any("idx_" in f for f in df.inputFiles())
+    want = astro.spark.sql(q)
+    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, want.collect()))
+    assert sorted(r.k1 for r in df.collect()) == [7, 17, 27]
+
+
+def test_index_proven_empty_select_routes_without_a_job(astro, jobs_of):
+    """When the index proves no row matches, the routed SELECT is an empty
+    frame that runs no Spark job; spark.sql over the view runs some."""
+    q = "SELECT k1, note FROM csr WHERE status = 'Z'"
+    df = astro.sql(q)
+    res = astro.last_select_route
+    assert res is not None and res.index_mode == "empty" and res.files == []
+    rows, jobs = jobs_of(df.collect)
+    assert rows == [] and jobs == []
+    want, view_jobs = jobs_of(astro.spark.sql(q).collect)
+    assert want == [] and view_jobs
+    assert df.schema == astro.spark.sql(q).schema
+
+
+def test_index_proven_empty_select_still_resolves_the_predicate(astro):
+    """The empty route applies the predicate too: a SELECT that spark.sql
+    rejects passes through and fails as it would there."""
+    with pytest.raises(Exception, match="nosuch"):
+        astro.sql("SELECT k1 FROM csr WHERE status = 'Z' AND nosuch = 1").collect()
+    assert astro.last_select_route is None
+
+
 def test_unknown_table_and_temp_view_pass_through(astro):
     astro.spark.range(5).selectExpr("id AS k1", "id AS amt").createOrReplaceTempView(
         "notacat"
@@ -110,10 +144,29 @@ def test_unknown_table_and_temp_view_pass_through(astro):
     assert df.count() == 2
 
 
+def _covering_row(astro, columns, where):
+    out = astro.sql(f"EXPLAIN SCAN csr COLUMNS ({columns}) WHERE {where}")
+    return {r.property: r.value for r in out.collect()}["covering"]
+
+
 def test_explain_scan_shows_same_routing(astro):
-    out = astro.sql("EXPLAIN SCAN csr COLUMNS (k1, amt) WHERE status = 'E'")
-    text = "\n".join(" ".join(str(c) for c in r) for r in out.collect())
-    assert "covering" in text, text
+    """EXPLAIN SCAN … COLUMNS names the route the SELECT router takes for
+    that projection and predicate."""
+    cases = [
+        ("k1, amt", "status = 'E'", "index-only via status ("),
+        ("k1, note", "status = 'E'", "main-table read routed through index status (augment)"),
+        ("k1, amt", "amt > 100", "spark.sql over the full view — no servable conjunct "
+                                 "on a leading indexed column"),
+        ("k1, note", "status = 'Z'", "no read: index status proves no row matches"),
+    ]
+    for columns, where, row in cases:
+        assert _covering_row(astro, columns, where).startswith(row), (columns, where)
+        astro.sql(f"SELECT {columns} FROM csr WHERE {where}").collect()
+        routed = astro.last_select_route
+        if row.startswith("spark.sql"):
+            assert routed is None, (columns, where)
+        else:
+            assert routed.index_used == "status", (columns, where)
 
 
 def test_string_literal_with_keywords_still_routes(astro):
@@ -145,3 +198,16 @@ def test_user_replaced_view_passes_through(astro):
     assert sorted((r.k1, r.amt) for r in df.collect()) == sorted(
         (r.k1, r.amt) for r in routed.collect()
     )
+
+
+def test_user_replaced_view_declines_the_index_route(astro):
+    """The ownership guard covers the main-table index route too."""
+    q = "SELECT k1, note FROM csr WHERE status = 'E'"
+    astro.sql(q)
+    assert astro.last_select_route.index_mode == "augment"  # sanity: routes
+    astro.spark.createDataFrame(
+        [(1, "x", "E"), (2, "y", "F")], "k1 int, note string, status string"
+    ).createOrReplaceTempView("csr")
+    df = astro.sql(q)
+    assert astro.last_select_route is None
+    assert [(r.k1, r.note) for r in df.collect()] == [(1, "x")]

@@ -82,14 +82,17 @@ def test_explain_columns_reports_covering(spark, tmp_path):
         ).collect()
     }
     assert out["covering"].startswith("index-only via st")
-    # uncovered projection: main-table scan with the reason
+    # no servable index conjunct: the view, with the reason
     out = {
         r.property: r.value
         for r in a.sql(
             "EXPLAIN SCAN exc COLUMNS (k, st, amt) WHERE amt > 5"
         ).collect()
     }
-    assert out["covering"].startswith("main-table scan")
+    assert out["covering"] == (
+        "spark.sql over the full view — no servable conjunct on a leading "
+        "indexed column"
+    )
     # no COLUMNS clause → no covering row (unchanged r12 shape)
     out = {
         r.property: r.value

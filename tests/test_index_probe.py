@@ -134,7 +134,7 @@ def test_probe_under_cap_runs_on_the_driver(table, monkeypatch, jobs_of):
     assert route["probe"][0] < route["probe"][1]
 
 
-def test_probe_is_one_merge_free_job(table, monkeypatch, jobs_of, spark):
+def test_probe_is_one_merge_free_job(table, monkeypatch, jobs_of):
     """Over the cap, the probe is the index table's ``scan_where`` with
     ``merge=False``: one job whose plan has no shuffle and no aggregate."""
     astro, _model = table
@@ -146,15 +146,8 @@ def test_probe_is_one_merge_free_job(table, monkeypatch, jobs_of, spark):
     n = merged.select("k1", "k2").distinct().count()
     assert n < sum(r.num_rows for r in res.files)
     monkeypatch.setattr(rel, "INDEX_LOOKUP_CAP", n)
-    # a limit takes partitions incrementally (one, then more jobs); take
-    # them all at once so the job count is the plan's own
-    old = spark.conf.get("spark.sql.limit.initialNumPartitions")
-    spark.conf.set("spark.sql.limit.initialNumPartitions", str(len(res.files)))
     probes = _spy_index_scans(monkeypatch, idx)
-    try:
-        route, jobs = jobs_of(lambda: rel._index_route("v1 = 7"))
-    finally:
-        spark.conf.set("spark.sql.limit.initialNumPartitions", old)
+    route, jobs = jobs_of(lambda: rel._index_route("v1 = 7"))
     assert route["kind"] == "augment" and route["n"] == n
     assert len(jobs) == 1
     [(kw, (probe_df, probe_res))] = probes
@@ -162,6 +155,22 @@ def test_probe_is_one_merge_free_job(table, monkeypatch, jobs_of, spark):
     plan = _plan(probe_df)
     assert "Exchange" not in plan and "Aggregate" not in plan
     assert route["probe"] == (len(probe_res.files), probe_res.total, "spark")
+
+
+@pytest.mark.parametrize("cap", [40, 100, 200])
+def test_over_cap_probe_jobs_do_not_grow_with_fragments(table, monkeypatch, jobs_of, cap):
+    """The over-cap probe limits every partition in one job: a collected
+    limit would scan one partition, then more, each as its own job (4
+    jobs at cap 40 on this index)."""
+    astro, model = table
+    rel = astro.relation("ip")
+    pruned = prune_files(rel._index_relation("v1").meta, "(v1 = 7)")
+    assert len(pruned.files) > 1 and sum(r.num_rows for r in pruned.files) > cap
+    monkeypatch.setattr(rel, "INDEX_LOOKUP_CAP", cap)
+    route, jobs = jobs_of(lambda: rel._index_route("v1 = 7"))
+    assert route["kind"] == "augment" and route["probe"][2] == "spark"
+    assert route["n"] >= len(model.where_v1(7))
+    assert len(jobs) <= 2
 
 
 def test_fragment_vanishing_under_the_driver_read_falls_back(table, tmp_path, monkeypatch):
@@ -189,12 +198,16 @@ def test_fragment_vanishing_under_the_driver_read_falls_back(table, tmp_path, mo
     assert all(p.startswith(main_leases + os.sep) for p in after - before)
 
 
-# py4j calls (Python → JVM) of three scan_where reads, plan and collect,
-# on the ``table`` fixture: ceilings to lower as plans get cheaper
+# py4j calls (Python → JVM) of three scan_where reads and one routed SQL
+# SELECT, plan and collect, on the ``table`` fixture: ceilings to lower as
+# plans get cheaper
 PY4J_CEILINGS = {
     "k1 = 5 AND k2 = 185": 113,  # a point get of one file
     "k1 BETWEEN 100 AND 150": 273,  # a range over merged files
     "v1 = 7": 274,  # an index lookup, its probe on the driver
+    # the same lookup as SQL: the router adds the view's registration
+    # check and the ownership guard's inputFiles() to the scan_where read
+    "SELECT k1, k2, v1, v2 FROM ip WHERE v1 = 7": 330,
 }
 
 
@@ -203,6 +216,9 @@ def test_py4j_ceilings_of_scan_where_reads(table, py4j_calls):
     rel = astro.relation("ip")
 
     def read(where):
+        if where.startswith("SELECT"):
+            df = astro.sql(where)
+            return df.collect(), astro.last_select_route
         df, res = rel.scan_where(where)
         return df.collect(), res
 
@@ -214,8 +230,8 @@ def test_py4j_ceilings_of_scan_where_reads(table, py4j_calls):
         elif where.startswith("k1 BETWEEN"):
             assert res.merge is True and len(res.files) > 1
         else:
-            assert res.index_probe[2] == "driver"
-        assert calls <= ceiling, where
+            assert res.index_mode == "augment" and res.index_probe[2] == "driver"
+        assert calls <= ceiling, (where, calls)
 
 
 def test_lookups_match_model_after_moves_deletes_and_stale_entries(table):
@@ -275,6 +291,25 @@ def test_candidates_drive_the_blooms_and_skip_the_merge(spark, tmp_path):
         f"{res.index_candidates} index candidate keys, skipped {res.bloom_skipped}"
     )
     assert out["merge"].startswith("none (")
+
+
+def test_routed_sql_lookup_is_one_merge_free_job(spark, tmp_path, jobs_of):
+    """A SQL index lookup reads through the index route: its probe runs on
+    the driver and its candidates' fragments need no merge, so it runs one
+    Spark job where spark.sql's merge over the whole view runs two."""
+    astro, model = _indexed_base(spark, tmp_path)
+    span = [(0, 1, 0, "s"), (N_K1 - 1, 998, N_V1 - 1, "s")]
+    astro.sql(f"INSERT INTO ip VALUES {_values(span)}")
+    model.upsert(span)
+    q = "SELECT k1, k2, v1, v2 FROM ip WHERE v1 = 10"
+    astro.sql(q).collect()  # warm
+    routed, jobs = jobs_of(lambda: astro.sql(q).collect())
+    res = astro.last_select_route
+    assert res.index_mode == "augment" and res.merge is False
+    assert len(jobs) == 1
+    passthrough, view_jobs = jobs_of(lambda: spark.sql(q).collect())
+    assert len(view_jobs) == 2
+    assert sorted(map(tuple, routed)) == sorted(map(tuple, passthrough)) == model.where_v1(10)
 
 
 def test_over_point_cap_candidates_skip_the_blooms(table):
@@ -571,9 +606,10 @@ def _scan_keys(rel, where):
     return {_rowkey(r.k, r.k2) for r in df.select("k", "k2").collect()}, res
 
 
-# Pruning compares DATE/TIMESTAMP string literals with the catalog's
-# bounds as text (see CHANGES.md): a non-ISO date, or a timestamp equal
-# to a fragment's lowest value, prunes fragments that hold matches.
+# DATE/TIMESTAMP string literals prune by value: a non-ISO date does not
+# prune at all, and a timestamp equal to a fragment's lowest value keeps
+# that fragment (compared as text with the catalog's ``+00:00`` bounds,
+# both pruned fragments holding matches).
 _TEXT_PRUNED = [
     [("c_date", "=", [date(1960, 3, 4)], "c_date = '1960-3-4'")],
     [("c_ts", "=", [datetime(1950, 1, 2, 3, 4, 5, 123456, UTC)])],
@@ -598,8 +634,6 @@ def test_driver_probe_matches_spark_probe_on_every_type(typed):
         assert on_driver >= by_spark, where
         if exact:
             assert on_driver == by_spark, where
-        if conjuncts in _TEXT_PRUNED:
-            continue
         got, res = _scan_keys(rel, where)
         if (conjuncts[0][0], conjuncts[0][1]) != ("c_str", ">"):  # string ranges bypass
             assert res.index_used == conjuncts[0][0], where
@@ -607,13 +641,48 @@ def test_driver_probe_matches_spark_probe_on_every_type(typed):
         assert got == _model_keys(model, conjuncts), where
 
 
-@pytest.mark.xfail(strict=True, reason="pruning compares DATE/TIMESTAMP literals as text")
 @pytest.mark.parametrize("conjuncts", _TEXT_PRUNED)
 def test_date_and_timestamp_literals_prune_by_value(typed, conjuncts):
     astro, model = typed
     where = " AND ".join(_conjunct_sql(*c) for c in conjuncts)
     got, _res = _scan_keys(astro.relation("pt"), where)
     assert got == _model_keys(model, conjuncts)
+    routed = astro.sql(f"SELECT k, k2 FROM pt WHERE {where}").collect()
+    assert astro.last_select_route.index_mode == "augment"
+    assert {_rowkey(r.k, r.k2) for r in routed} == _model_keys(model, conjuncts)
+
+
+def _sql_rows(astro, q):
+    """Rows of ``astro.sql(q)`` in a comparable form (NaN equal to NaN),
+    and the route the session recorded."""
+    rows = astro.sql(q).collect()
+    return sorted(tuple(repr(v) for v in r) for r in rows), astro.last_select_route
+
+
+def test_routed_sql_matches_the_view_and_the_model_on_every_type(typed):
+    """A SQL SELECT with an index-servable predicate reads through the
+    index route, and returns the rows of ``spark.sql`` over the view and
+    of the model, on every indexable type."""
+    astro, model = typed
+    cols = "k, k2, " + ", ".join(n for n, _t, _v in _TYPED_COLS)
+    routed = 0
+    for conjuncts, _exact in _CASES:
+        where = " AND ".join(_conjunct_sql(*c) for c in conjuncts)
+        q = f"SELECT {cols} FROM pt WHERE {where}"
+        got, res = _sql_rows(astro, q)
+        live = sorted(_model_keys(model, conjuncts))
+        if (conjuncts[0][0], conjuncts[0][1]) == ("c_str", ">"):
+            assert res is None, where  # a string range takes no index
+        elif res is not None and res.index_mode == "empty":
+            assert live == [], where  # the index proved the result empty
+        else:
+            assert res.index_used == conjuncts[0][0], where
+            assert res.index_mode == "augment", where
+        view = astro.spark.sql(q).collect()
+        assert got == sorted(tuple(repr(v) for v in r) for r in view), where
+        assert sorted(_rowkey(r.k, r.k2) for r in view) == live, where
+        routed += res is not None
+    assert routed >= len(_CASES) - 1
 
 
 def test_to_arrow_drops_what_it_cannot_express():
