@@ -259,12 +259,31 @@ def point_rowkeys(
     dtypes = meta.key_dtypes
     out = []
     try:
-        for combo in itertools.product(*[sorted(pinned[c]) for c in names]):
+        pinned_values = [
+            _probe_values(pinned[c], C.normalize_type(t)) for c, t in zip(names, dtypes)
+        ]
+        for combo in itertools.product(*pinned_values):
             out.append(C.encode_key(list(combo), dtypes))
     except (ValueError, TypeError, AttributeError):
         # literal/type mismatch (e.g. a string bound for a timestamp
         # key) — not a probe-able point set; fall back to maybe-present
         return None
+    return out
+
+
+def _probe_values(values: set, dtype: str) -> list:
+    """The stored key values Spark's ``=`` matches for ``values`` of a key
+    column of type ``dtype``.  A zero of a FLOAT/DOUBLE key also matches
+    the other zero, which encodes to other bytes.  A STRING key compared
+    with a non-string literal is cast by Spark (``'05' = 5`` holds), so
+    it has no point set: ValueError."""
+    if dtype == C.STRING and not all(isinstance(v, str) for v in values):
+        raise ValueError("a STRING key compared with a non-string literal")
+    out = sorted(values)
+    if dtype in (C.FLOAT, C.DOUBLE):
+        nonzero = [v for v in out if isinstance(v, bool) or float(v) != 0]
+        if len(nonzero) < len(out):
+            out = nonzero + [0.0, -0.0]
     return out
 
 

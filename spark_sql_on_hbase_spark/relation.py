@@ -47,6 +47,7 @@ from spark_sql_on_hbase_spark import bloom
 from spark_sql_on_hbase_spark import codec as C
 from spark_sql_on_hbase_spark import fsops
 from spark_sql_on_hbase_spark import leases
+from spark_sql_on_hbase_spark.functions.localdf import local_rows_df
 from spark_sql_on_hbase_spark.catalog import (
     STRING_FORMAT,
     AstroCatalog,
@@ -78,17 +79,43 @@ ROW_GROUP_BYTES = 8 * 1024 * 1024
 
 def view_state(spark: SparkSession) -> dict:
     """SparkSession-scoped view-registration registry: view name →
-    fingerprint.  Temp views are GLOBAL to the SparkSession, so the
-    cache that decides whether a view is current must be too — a
-    per-AstroSession cache would let session A's stale skip serve
-    session B's same-named view (two warehouses sharing one
-    SparkSession is supported; spark_table_name hashes the warehouse
-    path for exactly that reason)."""
+    (fingerprint, the registered temp view).  Temp views are GLOBAL to
+    the SparkSession, so the cache that decides whether a view is
+    current must be too — a per-AstroSession cache would let session
+    A's stale skip serve session B's same-named view (two warehouses
+    sharing one SparkSession is supported; spark_table_name hashes the
+    warehouse path for exactly that reason)."""
     reg = getattr(spark, "_astro_view_state", None)
     if reg is None:
         reg = {}
         spark._astro_view_state = reg
     return reg
+
+
+def _temp_view(spark: SparkSession, name: str):
+    """The session catalog's temp view ``name`` (a JVM ``Option``)."""
+    return spark._jsparkSession.sessionState().catalog().getRawTempView(name)
+
+
+def publish_view(spark: SparkSession, name: str, df: DataFrame, fingerprint: tuple) -> None:
+    """Register ``df`` as the temp view ``name`` of the table state
+    ``fingerprint``, and remember the view object that registration made
+    so :func:`owns_view` can tell it from a view the user put there."""
+    df.createOrReplaceTempView(name)
+    view_state(spark)[name] = (fingerprint, _temp_view(spark, name))
+
+
+def owns_view(spark: SparkSession, name: str, fingerprint: tuple) -> bool:
+    """True when the temp view ``name`` is still the one
+    :func:`publish_view` registered for the table state ``fingerprint``
+    — not replaced by a user's ``createOrReplaceTempView``, dropped, or
+    registered for another table.  Four py4j calls."""
+    entry = view_state(spark).get(name)
+    return (
+        entry is not None
+        and entry[0] == fingerprint
+        and entry[1].equals(_temp_view(spark, name))
+    )
 
 
 def view_fingerprint(catalog, meta: TableMeta) -> tuple:
@@ -224,6 +251,11 @@ def table_schema(meta: TableMeta) -> T.StructType:
     return T.StructType(
         [T.StructField(n, spark_type(dt), nullable=n not in keys) for n, dt in meta.all_columns]
     )
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _key_component_sql(c: str, t: str, final: bool) -> str:
@@ -1958,7 +1990,7 @@ class AstroRelation:
             self._lease_last_plan = _time.monotonic()
             leases.track(self)
         df = self.spark.read.schema(self._file_schema()).parquet(*paths)
-        return df.withColumn(SEQ_COL, F.coalesce(F.col(SEQ_COL), F.lit(0)))
+        return df.withColumn(SEQ_COL, F.expr(f"coalesce({SEQ_COL}, 0)"))
 
     def _pruning_tz(self) -> str | None:
         """The session time zone when a key column is a TIMESTAMP (pruning
@@ -2737,7 +2769,7 @@ class AstroRelation:
             if paths:
                 src = self._index_source_frame(paths, col)
             else:  # empty table → empty index
-                src = self.spark.createDataFrame([], table_schema(idx_rel.meta))
+                src = local_rows_df(self.spark, [], table_schema(idx_rel.meta))
             idx_rel.write(src)
             rebuilt.append(col)
             n += 1
@@ -2852,7 +2884,8 @@ class AstroRelation:
         reads (r14, VERDICT r13 #5).  scan_where skips `_index_route`
         for this class and records the skip in
         ``PruneResult.index_declined`` so EXPLAIN SCAN shows the index
-        as deliberately not consulted."""
+        as deliberately not consulted; :meth:`plan_select` routes a SQL
+        SELECT of this class to that point read."""
         from spark_sql_on_hbase_spark.predicate import (
             And,
             Comparison,
@@ -3410,14 +3443,14 @@ class AstroRelation:
         for c, _dt in self.meta.all_columns:
             if c in group:
                 continue
+            q = quote_ident(c)
             if c in keys:
-                aggs.append(F.max(F.col(c)).alias(c))  # constant per rowkey
+                aggs.append(F.expr(f"max({q}) AS {q}"))  # constant per rowkey
             else:
-                aggs.append(
-                    F.max_by(F.col(c), F.when(F.col(c).isNotNull(), F.col(SEQ_COL))).alias(c)
-                )
+                newest = f"CASE WHEN {q} IS NOT NULL THEN {SEQ_COL} END"
+                aggs.append(F.expr(f"max_by({q}, {newest}) AS {q}"))
         if not aggs:
-            aggs.append(F.max(F.col(SEQ_COL)).alias(SEQ_COL))
+            aggs.append(F.expr(f"max({SEQ_COL}) AS {SEQ_COL}"))
         return df.groupBy(ROWKEY_COL, *group).agg(*aggs)
 
     # -- bulk load (CSV) ----------------------------------------------------
@@ -3639,7 +3672,7 @@ class AstroRelation:
             T.StructField("_commit_seq", T.IntegerType(), False),
         ]
         cols = [c for c, _ in meta.all_columns]
-        empty = self.spark.createDataFrame([], T.StructType(out_fields))
+        empty = local_rows_df(self.spark, [], T.StructType(out_fields))
         parts = []
         if delta:
             # changed keys + their newest generation, from the delta only
@@ -3755,7 +3788,7 @@ class AstroRelation:
             live = [r.path for r in self.meta.regions]
             if not live:
                 return self._resolve(
-                    self.spark.createDataFrame([], self._file_schema()),
+                    local_rows_df(self.spark, [], self._file_schema()),
                     with_rowkey=with_rowkey,
                     needs_merge=False,
                 )
@@ -3786,7 +3819,7 @@ class AstroRelation:
                     schema = T.StructType(
                         schema.fields + [T.StructField(ROWKEY_COL, T.BinaryType(), True)]
                     )
-                return self.spark.createDataFrame([], schema)
+                return local_rows_df(self.spark, [], schema)
             # global needs_merge stays sound for the subset: fragments
             # disjoint overall are disjoint in any subset; the converse
             # only costs an unneeded merge pass, never wrong rows
@@ -3804,10 +3837,13 @@ class AstroRelation:
         with_rowkey: bool = False,
         needs_merge: bool | None = None,
     ) -> DataFrame:
-        """Shared scan tail: absent-cell NULLs for ALTER-ADDed columns
-        (HBaseRelation.scala:885-901), upsert merge when needed, and
-        schema-on-read casts for stringformat tables (SURVEY §7 step 8).
-        The output schema is :meth:`_scan_schema`.  A filter over the
+        """Shared scan tail over a :meth:`_read_fragments` frame: upsert
+        merge when needed and schema-on-read casts for stringformat
+        tables (SURVEY §7 step 8); ALTER-ADDed columns are already
+        absent-cell NULLs, because the declared read schema null-fills
+        them (HBaseRelation.scala:885-901).  The plan is built from SQL
+        expression strings, a few py4j calls each.  The output schema is
+        :meth:`_scan_schema`.  A filter over the
         result reaches the parquet scan for its key conjuncts whether or
         not the merge runs (see :meth:`_merge_latest`).
 
@@ -3817,25 +3853,19 @@ class AstroRelation:
         closure) — the global check would charge a merge-free subset for
         overlap elsewhere."""
         meta = self.meta
-        present = set(df.columns)
-        if SEQ_COL not in present:
-            df = df.withColumn(SEQ_COL, F.lit(0))
-        for c, dt in meta.all_columns:
-            if c not in present:
-                raw_t = T.StringType() if meta.encoding == STRING_FORMAT else spark_type(dt)
-                df = df.withColumn(c, F.lit(None).cast(raw_t))
         if self.needs_merge() if needs_merge is None else needs_merge:
             df = self._merge_latest(df)
 
-        def col(c: str, dt: str):
+        def col(c: str, dt: str) -> str:
+            q = quote_ident(c)
             if meta.encoding == STRING_FORMAT:
-                return F.col(c).cast(spark_type(dt)).alias(c)
-            return F.col(c)
+                return f"CAST({q} AS {spark_type(dt).simpleString()}) AS {q}"
+            return q
 
         cols = [col(c, dt) for c, dt in meta.all_columns]
         if with_rowkey:
-            cols.append(F.col(ROWKEY_COL))
-        return df.select(*cols)
+            cols.append(ROWKEY_COL)
+        return df.selectExpr(*cols)
 
     def _scan_schema(self) -> T.StructType:
         """Schema of every ``scan()`` / ``scan_where`` result, from the
@@ -3846,13 +3876,15 @@ class AstroRelation:
         )
 
     def register_view(self, name: str | None = None) -> None:
-        self.scan().createOrReplaceTempView(name or self.meta.name)
         # record who owns the (SparkSession-global) view and at what
         # physical/declared state, so session._register_all can skip the
         # plan analysis for unchanged tables without ever serving another
         # catalog's (or namespace's) same-named view from the cache
-        view_state(self.spark)[name or self.meta.name] = view_fingerprint(
-            self.catalog, self.meta
+        publish_view(
+            self.spark,
+            name or self.meta.name,
+            self.scan(),
+            view_fingerprint(self.catalog, self.meta),
         )
 
     def scan_where(self, where: str, *, merge: bool = True):
@@ -3876,6 +3908,9 @@ class AstroRelation:
         duplicates do not matter and the predicate is on key columns
         alone (a non-key conjunct could match a superseded value); the
         index probe is the one caller.
+
+        A read no fragment survives is an empty local relation: it runs
+        no Spark job.
 
         Returns (DataFrame, PruneResult); PruneResult carries
         files-read/files-total for plan assertions and bench metrics
@@ -3928,8 +3963,7 @@ class AstroRelation:
                     res.index_mode = "empty"
                     res.index_candidates = 0
                     res.index_probe = index_probe
-                    df = self.spark.createDataFrame([], self._scan_schema())
-                    return df, res
+                    return self._empty_read(where), res
                 if route["kind"] == "augment":
                     where = f"({where}) AND {route['aug']}"
                     cand_rowkeys = route["rowkeys"]
@@ -3972,8 +4006,7 @@ class AstroRelation:
                 res.files = [rf for rf in res.files if self._bloom_admits(rf, pts)]
                 res.bloom_skipped = res.bloom_probed - len(res.files)
         if not res.files:
-            df = self.spark.createDataFrame([], self._scan_schema())
-            return df, res
+            return self._empty_read(where), res
         paths = [r.path for r in res.files]
         # any fragment holding a given key overlaps every key range that
         # contains it, and a bloom skips only fragments proven not to
@@ -4000,7 +4033,7 @@ class AstroRelation:
                 sf_pred = string_pushdown(res.predicate, coltypes)
                 if sf_pred is not None:
                     res.sf_pushdown = sf_pred
-                    raw = raw.filter(F.expr(sf_pred))
+                    raw = raw.filter(sf_pred)
         df = self._resolve(raw, needs_merge=res.merge)
         if semi_keys is not None:
             # r13 over-cap index path: exact key membership via a
@@ -4025,8 +4058,15 @@ class AstroRelation:
                 res.residual_only = True
                 if res.residual is None:
                     return df, res
-                return df.filter(F.expr(render(res.residual))), res
-        return df.filter(F.expr(where)), res
+                return df.filter(render(res.residual)), res
+        return df.filter(where), res
+
+    def _empty_read(self, where: str) -> DataFrame:
+        """``scan_where``'s result when no fragment can hold a match: an
+        empty local relation under the scan schema, filtered by the
+        predicate so a predicate Spark rejects still fails.  The optimizer
+        folds it to an empty relation: collecting it runs no job."""
+        return local_rows_df(self.spark, [], self._scan_schema()).filter(where)
 
     def scan_covering(self, where: str, columns: list[str]):
         """Pruned scan serving only ``columns``, as :meth:`plan_select`
@@ -4149,18 +4189,23 @@ class AstroRelation:
 
         1. a covering index serves the projection and predicate: the
            index-only read of :meth:`covering_plan`;
-        2. the predicate has a servable conjunct on a leading indexed
-           column and does not pin the full key: :meth:`scan_where`,
-           routed when its index probe engaged (``augment`` or
-           ``semijoin``), so the main table reads only the candidates'
-           fragments and merges only when they overlap, or when the
-           index proves no row matches.  A read of no fragment is a
-           ``limit(0)`` frame, which the optimizer folds to an empty
-           local relation: it runs no job;
-        3. everything else reads the view: point and range SELECTs
-           (critical-point pruning over the view is not planned yet)
-           and a declined index.  ``df`` is the projected
-           ``scan_where`` read when one was planned anyway."""
+        2. the predicate pins the full row key with =/IN
+           (:meth:`_full_key_pinned`): the point read of
+           :meth:`scan_where` — critical-point pruning, the ROW-bloom
+           probe, and a merge only when the surviving files overlap —
+           the HBase batched-Get path;
+        3. the predicate has a servable conjunct on a leading indexed
+           column: :meth:`scan_where`, routed when its index probe
+           engaged (``augment`` or ``semijoin``), so the main table reads
+           only the candidates' fragments and merges only when they
+           overlap, or when the index proves no row matches;
+        4. everything else reads the view: ranges (critical-point
+           pruning over the view is not planned yet) and a declined
+           index.  ``df`` is the projected ``scan_where`` read when one
+           was planned anyway.
+
+        A read of no fragment is an empty local relation: it runs no
+        job."""
         route = self.covering_plan(where, columns)
         if route is not None:
             df, res = route
@@ -4171,6 +4216,13 @@ class AstroRelation:
                 else "projection ⊆ col ∪ keys ∪ include; exactly-live"
             )
             return SelectPlan(df, res, True, f"index-only via {res.index_used} ({how})")
+        project = [quote_ident(c) for c in columns]
+        if self._full_key_pinned(where):
+            df, res = self.scan_where(where)
+            return SelectPlan(
+                df.selectExpr(*project), res, True,
+                "main-table point read (key pruning and blooms)",
+            )
         df = res = None
         servable = self._servable_index_conjuncts(where) if self.meta.indexes else {}
         if servable is None:
@@ -4179,16 +4231,9 @@ class AstroRelation:
             why = "no secondary index"
         elif not set(servable) & set(self.meta.indexes):
             why = "no servable conjunct on a leading indexed column"
-        elif self._full_key_pinned(where):
-            why = "full-key point predicate (key pruning and blooms serve it)"
         else:
             df, res = self.scan_where(where)
-            if not res.files:
-                # scan_where's empty frame: the filter still resolves the
-                # predicate (a SELECT spark.sql rejects is not answered)
-                # and limit(0) folds the plan to no job
-                df = df.filter(F.expr(where)).limit(0)
-            df = df.select(*columns)
+            df = df.selectExpr(*project)
             if res.index_mode in ("augment", "semijoin"):
                 return SelectPlan(
                     df,

@@ -36,6 +36,8 @@ from spark_sql_on_hbase_spark.catalog import (
 )
 from spark_sql_on_hbase_spark.relation import (
     AstroRelation,
+    owns_view,
+    publish_view,
     table_schema,
     view_fingerprint,
     view_state,
@@ -100,15 +102,15 @@ class AstroSession:
         for ns, name in self.catalog.list_tables():
             meta = self.catalog.get_table(name, ns)
             fp = view_fingerprint(self.catalog, meta)
-            if reg.get(name) == fp and self.spark.catalog.tableExists(name):
+            if reg.get(name, (None,))[0] == fp and self.spark.catalog.tableExists(name):
                 continue
             # schema-on-read: another logical table may have populated the
             # shared physical store (many-to-one mapping, doc §16.1.1)
             if fp[2]:  # has_data
                 AstroRelation(self.catalog, meta, self.spark).register_view(name)
             else:  # empty table → empty view with right schema
-                self.spark.createDataFrame([], table_schema(meta)).createOrReplaceTempView(name)
-                reg[name] = fp
+                empty = local_rows_df(self.spark, [], table_schema(meta))
+                publish_view(self.spark, name, empty, fp)
 
     # -- entry point --------------------------------------------------------
     def sql(self, text: str) -> DataFrame:
@@ -202,7 +204,12 @@ class AstroSession:
             rel._ensure_fresh_regions()
             rel.register_view(c.table)
         else:
-            self.spark.createDataFrame([], table_schema(stored)).createOrReplaceTempView(c.table)
+            publish_view(
+                self.spark,
+                c.table,
+                local_rows_df(self.spark, [], table_schema(stored)),
+                view_fingerprint(self.catalog, stored),
+            )
         return self._ok(f"created {c.namespace}.{c.table}")
 
     def _exec_DropTable(self, c: ddl.DropTable) -> DataFrame:
@@ -1392,16 +1399,17 @@ class AstroSession:
     )
 
     def _route_select(self, text: str) -> DataFrame | None:
-        """The SELECT router: a plain ``SELECT cols FROM t WHERE …`` on an
-        indexed catalog table reads through the table's best access path
-        — the decision of :meth:`AstroRelation.plan_select`, which
-        EXPLAIN SCAN … COLUMNS shows too: an index-only read when a
-        covering index serves it, else ``scan_where``'s index route
-        (probe, pruned fragments, a merge decided over them) when the
-        index engaged or proved the result empty.  All apply the FULL
-        predicate, so the rows are spark.sql's.  Returns None (pass through to spark.sql) for every
-        other statement; a routed read is recorded on
-        ``last_select_route``."""
+        """The SELECT router: a plain ``SELECT cols FROM t WHERE …`` on a
+        catalog table reads through the table's best access path — the
+        decision of :meth:`AstroRelation.plan_select`, which EXPLAIN SCAN
+        … COLUMNS shows too: an index-only read when a covering index
+        serves it, a point read (critical-point pruning, the ROW-bloom
+        probe, a merge decided over the surviving files) when the
+        predicate pins the full row key, else ``scan_where``'s index route
+        when the index engaged or proved the result empty.  All apply the
+        FULL predicate, so the rows are spark.sql's.  Returns None (pass
+        through to spark.sql) for every other statement — ranges among
+        them; a routed read is recorded on ``last_select_route``."""
         m = self._SELECT_RE.match(text)
         if m is None:
             return None
@@ -1410,8 +1418,6 @@ class AstroSession:
             rel = self.relation(tbl)
         except KeyError:
             return None  # not a catalog table (user temp view etc.)
-        if not rel.meta.indexes:
-            return None
         cols = [c.strip() for c in m.group("cols").split(",")]
         declared = {n for n, _ in rel.meta.all_columns}
         if not all(c in declared for c in cols):
@@ -1425,19 +1431,10 @@ class AstroSession:
         # ownership guard (r15 review): a user may have REPLACED the
         # registered temp view (createOrReplaceTempView with the same
         # name) — spark.sql would then read the user's view, so routing
-        # to the catalog table would silently diverge.  Route only when
-        # the currently-registered view provably reads this table's
-        # physical store (its input files live under the table's
-        # directory); anything else passes through untouched.  Probed
-        # LAST: inputFiles() is a full view resolution + file listing,
-        # so only statements that would otherwise route pay it — a
-        # declined SELECT declines for free.
-        try:
-            vfiles = self.spark.table(tbl).inputFiles()
-        except Exception:
-            return None
-        marker = f"/{rel.meta.physical_table}/"
-        if not vfiles or not all(marker in f for f in vfiles):
+        # to the catalog table would silently diverge.  Route only while
+        # the session catalog still holds the view registered for this
+        # table's current state; anything else passes through.
+        if not owns_view(self.spark, tbl, view_fingerprint(self.catalog, rel.meta)):
             return None
         self.last_select_route = plan.res
         return plan.df
@@ -1446,7 +1443,9 @@ class AstroSession:
         """Any statement the DDL parser does not own runs as spark.sql over
         the registered views, after the time-travel (``VERSION AS OF``)
         and change-feed rewrites; a plain SELECT that is neither is first
-        offered to :meth:`_route_select`."""
+        offered to :meth:`_route_select`, which serves full-key point
+        gets and index-servable lookups from the pruned read and passes
+        ranges and everything else back to spark.sql."""
         self._register_all()
         self.last_select_route = None
         sql_text = c.sql

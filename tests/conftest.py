@@ -128,10 +128,41 @@ def jobs_of(spark):
     return run
 
 
+class Py4jCalls(int):
+    """A py4j call count that names where the calls came from: ``sites``
+    maps each engine function (the innermost frame in
+    ``spark_sql_on_hbase_spark`` on the calling stack, else
+    ``<outside>``) to its calls, and the repr lists the top ones, so a
+    failed ceiling names its source."""
+
+    def __new__(cls, n: int, sites: Counter):
+        self = super().__new__(cls, n)
+        self.sites = sites
+        return self
+
+    def __repr__(self) -> str:
+        top = ", ".join(f"{site} {n}" for site, n in self.sites.most_common(8))
+        return f"{int(self)} py4j calls ({top})"
+
+
+_ENGINE_DIR = os.sep + "spark_sql_on_hbase_spark" + os.sep
+
+
+def _engine_site(frame) -> str:
+    while frame is not None:
+        code = frame.f_code
+        if _ENGINE_DIR in code.co_filename:
+            module = os.path.basename(code.co_filename).removesuffix(".py")
+            return f"{module}.{code.co_qualname}"
+        frame = frame.f_back
+    return "<outside>"
+
+
 @pytest.fixture()
 def py4j_calls(spark, monkeypatch):
-    """``py4j_calls(action)`` → (result, number of calls from Python into
-    the JVM that ``action`` made on this thread), counted at
+    """``py4j_calls(action)`` → (result, :class:`Py4jCalls`: the number of
+    calls from Python into the JVM that ``action`` made on this thread,
+    with the engine function each came from), counted at
     ``ClientServerConnection.send_command``.  Other threads (the lease
     refresher) are not counted."""
     import threading
@@ -140,18 +171,19 @@ def py4j_calls(spark, monkeypatch):
 
     real = ClientServerConnection.send_command
     me = threading.get_ident()
-    calls = [0]
+    sites = Counter()
 
     def counted(self, *args, **kwargs):
         if threading.get_ident() == me:
-            calls[0] += 1
+            sites[_engine_site(sys._getframe(1))] += 1
         return real(self, *args, **kwargs)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counted)
 
     def run(action):
-        before = calls[0]
+        before = Counter(sites)
         out = action()
-        return out, calls[0] - before
+        delta = sites - before
+        return out, Py4jCalls(sum(delta.values()), delta)
 
     return run

@@ -198,16 +198,18 @@ def test_fragment_vanishing_under_the_driver_read_falls_back(table, tmp_path, mo
     assert all(p.startswith(main_leases + os.sep) for p in after - before)
 
 
-# py4j calls (Python → JVM) of three scan_where reads and one routed SQL
-# SELECT, plan and collect, on the ``table`` fixture: ceilings to lower as
-# plans get cheaper
-PY4J_CEILINGS = {
-    "k1 = 5 AND k2 = 185": 113,  # a point get of one file
-    "k1 BETWEEN 100 AND 150": 273,  # a range over merged files
-    "v1 = 7": 274,  # an index lookup, its probe on the driver
-    # the same lookup as SQL: the router adds the view's registration
-    # check and the ownership guard's inputFiles() to the scan_where read
-    "SELECT k1, k2, v1, v2 FROM ip WHERE v1 = 7": 330,
+# py4j calls (Python → JVM) of three scan_where reads and two routed SQL
+# SELECTs, plan and collect, on the ``table`` fixture: ceilings to lower as
+# plans get cheaper.  A failure names the engine functions that made the
+# calls (the ``py4j_calls`` fixture).
+PY4J_CEILINGS = {  # measured + 10%
+    "k1 = 5 AND k2 = 185": 37,  # a point get of one file (34)
+    "k1 BETWEEN 100 AND 150": 73,  # a range over merged files (66)
+    "v1 = 7": 74,  # an index lookup, its probe on the driver (67)
+    # the same reads as SQL: the router adds the view's registration
+    # check, the plan's projection and the ownership guard
+    "SELECT k1, k2, v1, v2 FROM ip WHERE k1 = 5 AND k2 = 185": 54,  # (49)
+    "SELECT k1, k2, v1, v2 FROM ip WHERE v1 = 7": 90,  # (82)
 }
 
 
@@ -225,10 +227,12 @@ def test_py4j_ceilings_of_scan_where_reads(table, py4j_calls):
     for where, ceiling in PY4J_CEILINGS.items():
         read(where)  # warm
         (_rows, res), calls = py4j_calls(lambda: read(where))
-        if where.startswith("k1 ="):
+        if "k1 = 5" in where:
             assert len(res.files) == 1
         elif where.startswith("k1 BETWEEN"):
             assert res.merge is True and len(res.files) > 1
+            assert calls.sites["relation.AstroRelation._merge_latest"] > 0
+            assert "relation.AstroRelation._merge_latest" in repr(calls)
         else:
             assert res.index_mode == "augment" and res.index_probe[2] == "driver"
         assert calls <= ceiling, (where, calls)
@@ -711,3 +715,224 @@ def test_to_arrow_drops_what_it_cannot_express():
     assert to_arrow(parse_predicate("c_ts = '1970-01-01'", coltypes), coltypes) is None
     kept = parse_predicate("c_int < 2.5 AND c_byte = 1 AND c_ts = '1970-01-01'", coltypes)
     assert str(to_arrow(kept, coltypes, "UTC")).count("==") == 2
+
+
+# -- full-key SQL SELECTs: the pruned, bloom-probed point read ---------------
+
+_ALL = "k, k2, " + ", ".join(n for n, _t, _v in _TYPED_COLS)
+
+
+def _k2_sql(v) -> str:
+    if math.isnan(v):
+        return "'NaN'"
+    if math.isinf(v):
+        return "'Infinity'" if v > 0 else "'-Infinity'"
+    return repr(v)
+
+
+# (where, the model keys it selects): present keys of every k2 kind, the
+# other zero and string-spelled non-finite literals, upserted keys (0, 7,
+# 13, 20, 33), the deleted key 5, absent keys, IN lists with NULL
+_POINT_CASES = [
+    ("k = 3 AND k2 = 2.5", {3}),
+    ("k = 0 AND k2 = 0.0", {0}),  # stored -0.0: Spark's = ignores the sign
+    ("k = 1 AND k2 = -0.0", {1}),
+    ("k = 2 AND k2 = 'NaN'", {2}),
+    ("k = 4 AND k2 = '-Infinity'", {4}),
+    ("k = 11 AND k2 = 'Infinity'", {11}),
+    ("k = 7 AND k2 = 0.0", {7}),
+    ("k = 13 AND k2 = -0.0", {13}),
+    ("k = 20 AND k2 = 'NaN'", {20}),
+    ("k = 33 AND k2 = 2.5", {33}),
+    ("k = 5 AND k2 = 'Infinity'", set()),
+    ("k = 48 AND k2 = -0.0", set()),
+    ("k = 3 AND k2 = 2.25", set()),
+    ("k IN (3, 9, 47) AND k2 IN (2.5, 'Infinity')", {3, 9, 47}),
+    ("k IN (1, NULL, 7) AND k2 = 0.0", {1, 7}),
+    ("k IN (NULL, 8) AND k2 IN (NULL, 'NaN')", {8}),
+    ("k = 13 AND k2 = -0.0 AND c_int > 0", {13}),
+    ("k2 = 2.5 AND k = 21", {21}),
+]
+
+
+def test_full_key_selects_read_the_point_path_on_every_k2_kind(typed):
+    """A SELECT pinning the full key reads through the point path and
+    returns the rows of spark.sql over the view and of the model: upserted,
+    deleted and absent keys, ±0.0, NaN and ±Infinity, NULL in an IN list."""
+    astro, model = typed
+    for where, keys in _POINT_CASES:
+        q = f"SELECT {_ALL} FROM pt WHERE {where}"
+        got, res = _sql_rows(astro, q)
+        assert res is not None and res.index_used is None, where
+        assert res.index_declined == "full-key point predicate (index not consulted)", where
+        view = astro.spark.sql(q).collect()
+        assert got == sorted(tuple(repr(v) for v in r) for r in view), where
+        assert {r.k for r in view} == keys and keys <= model.keys(), where
+
+
+_KEY_TYPES = [(n, t, [v for v in vals if v is not None]) for n, t, vals in _TYPED_COLS[:11]]
+
+
+@pytest.fixture(scope="module")
+def keyed(spark, tmp_path_factory):
+    """A table whose key has a column of every key type, in two
+    generations (upserts and new keys), with a deleted key, and its model
+    {key tuple: v}."""
+    astro = AstroSession(spark, str(tmp_path_factory.mktemp("kt") / "kt_wh"))
+    cols = ", ".join(f"{n} {t}" for n, t, _v in _KEY_TYPES)
+    names = [n for n, _t, _v in _KEY_TYPES]
+    astro.sql(
+        f"CREATE TABLE kt ({cols}, v INT, PRIMARY KEY ({', '.join(names)})) "
+        "MAPPED BY (kt_h, COLS=[v=f.v]) OPTIONS (regions=2, bloomfilter=row)"
+    )
+    rel = astro.relation("kt")
+    schema = table_schema(rel.meta)
+
+    def key(i):
+        return tuple(vals[i % len(vals)] for _n, _t, vals in _KEY_TYPES)
+
+    model = {key(i): i for i in range(24)}
+    rel.write(spark.createDataFrame([(*k, v) for k, v in model.items()], schema))
+    later = {key(i): 100 + i for i in (2, 9, 30, 31)}
+    rel.append(spark.createDataFrame([(*k, v) for k, v in later.items()], schema))
+    model.update(later)
+    gone = key(5)
+    astro.sql(f"DELETE FROM kt WHERE {_key_where(gone)}")
+    model = {k: v for k, v in model.items() if not _same_key(k, gone)}
+    return astro, model, key
+
+
+def _same_key(a, b) -> bool:
+    return all(_spark_order(x) == _spark_order(y) for x, y in zip(a, b))
+
+
+def _key_where(key) -> str:
+    parts = []
+    for (n, _t, _v), v in zip(_KEY_TYPES, key):
+        lit = _k2_sql(v) if isinstance(v, float) and not math.isfinite(v) else _sql_lit(v)
+        parts.append(f"{n} = {lit}")
+    return " AND ".join(parts)
+
+
+def test_full_key_selects_on_every_key_type(keyed):
+    """Full-key gets on a table keyed by every key type route through the
+    point path and match spark.sql over the view and the model."""
+    astro, model, key = keyed
+    names = [n for n, _t, _v in _KEY_TYPES]
+    for i in (0, 1, 2, 5, 9, 23, 24, 30, 31, 40):
+        where = _key_where(key(i))
+        q = f"SELECT {', '.join(names)}, v FROM kt WHERE {where}"
+        got, res = _sql_rows(astro, q)
+        assert res is not None and res.index_used is None, where
+        view = astro.spark.sql(q).collect()
+        assert got == sorted(tuple(repr(v) for v in r) for r in view), where
+        want = sorted(v for k, v in model.items() if _same_key(k, key(i)))
+        assert sorted(r.v for r in view) == want, where
+
+
+def test_routed_point_get_reads_one_file(table):
+    """A SQL full-key get reads 1 file of the table's N, in its plan."""
+    astro, model = table
+    q = "SELECT k1, k2, v1, v2 FROM ip WHERE k1 = 5 AND k2 = 185"
+    df = astro.sql(q)
+    res = astro.last_select_route
+    assert res is not None and len(res.files) == 1 and res.total > 1
+    assert len(df.inputFiles()) == 1
+    assert astro.spark.sql(q).inputFiles() != df.inputFiles()
+    assert [tuple(r) for r in df.collect()] == [(5, 185, *model.rows[(5, 185)])]
+
+
+def test_absent_key_get_runs_no_job(table, jobs_of):
+    """An absent key read through scan_where and through SQL runs no Spark
+    job, and has the scan schema."""
+    astro, _model = table
+    rel = astro.relation("ip")
+    df, res = rel.scan_where("k1 = 5 AND k2 = 186")
+    assert res.files == []
+    rows, jobs = jobs_of(df.collect)
+    assert rows == [] and jobs == []
+    assert df.schema == rel.scan().schema
+    q = "SELECT k1, k2, v1, v2 FROM ip WHERE k1 = 5 AND k2 = 186"
+    rows, jobs = jobs_of(lambda: astro.sql(q).collect())
+    assert rows == [] and jobs == [] and astro.last_select_route.files == []
+
+
+def test_full_key_select_naming_an_unknown_column_still_raises(table):
+    astro, _model = table
+    with pytest.raises(Exception, match="nosuch"):
+        astro.sql("SELECT k1 FROM ip WHERE k1 = 1 AND k2 = 2 AND nosuch = 1").collect()
+    assert astro.last_select_route is None
+
+
+def test_full_key_select_on_a_stringformat_table_with_an_added_column(spark, tmp_path):
+    """The point route on a table without an index, stored as strings,
+    after an ALTER ADD: the older fragments lack the new column."""
+    astro = AstroSession(spark, str(tmp_path / "sf_wh"))
+    astro.sql(
+        "CREATE TABLE sf (k1 INT, s STRING, v DECIMAL(10,2), PRIMARY KEY (k1, s)) "
+        "MAPPED BY (sf_h, COLS=[v=f.v]) IN stringformat"
+    )
+    astro.sql("INSERT INTO sf VALUES (1, 'a', 1.5), (2, 'b', 2.5), (10, 'a', 3.5)")
+    astro.sql("ALTER TABLE sf ADD w DOUBLE MAPPED BY (f.w)")
+    astro.sql("INSERT INTO sf VALUES (1, 'a', NULL, 7.0), (3, 'c', 4.5, 8.0)")
+    assert not astro.relation("sf").meta.indexes
+    for where, want in (
+        ("k1 = 1 AND s = 'a'", [(1, "a", Decimal("1.50"), 7.0)]),
+        ("k1 = 2 AND s = 'b'", [(2, "b", Decimal("2.50"), None)]),
+        ("k1 IN (3, 10) AND s IN ('a', 'c')", [(3, "c", Decimal("4.50"), 8.0),
+                                               (10, "a", Decimal("3.50"), None)]),
+        ("k1 = 1 AND s = 'b'", []),
+    ):
+        q = f"SELECT k1, s, v, w FROM sf WHERE {where}"
+        got = sorted(tuple(r) for r in astro.sql(q).collect())
+        assert astro.last_select_route is not None, where
+        assert got == want, where
+        assert got == sorted(tuple(r) for r in astro.spark.sql(q).collect()), where
+
+
+def test_merged_scan_plan_is_unchanged(spark, tmp_path):
+    """The merge and projection built from SQL expression strings optimize
+    to the plan the Column-built ones did (expression ids normalized)."""
+    import re
+
+    astro = AstroSession(spark, str(tmp_path / "mp_wh"))
+    astro.sql(
+        "CREATE TABLE mp (k1 LONG, k2 INT, v1 LONG, v2 STRING, PRIMARY KEY (k1, k2)) "
+        "MAPPED BY (mp_h, COLS=[v1=f.v1, v2=f.v2]) OPTIONS (regions=2)"
+    )
+    astro.sql("INSERT INTO mp VALUES (1, 1, 10, 'a'), (2, 2, 20, 'b')")
+    astro.sql("INSERT INTO mp VALUES (1, 1, 11, NULL), (3, 3, 30, 'c')")
+    astro.sql("ALTER TABLE mp ADD v3 DOUBLE MAPPED BY (f.v3)")
+    astro.sql(
+        "CREATE TABLE sp (k1 INT, s STRING, v DECIMAL(10,2), PRIMARY KEY (k1, s)) "
+        "MAPPED BY (sp_h, COLS=[v=f.v]) IN stringformat"
+    )
+    astro.sql("INSERT INTO sp VALUES (1, 'x', 1.5)")
+    astro.sql("INSERT INTO sp VALUES (1, 'x', 2.5)")
+    read = (
+        "+- Project [{cols}, _rowkey#, coalesce(_seq#, 0) AS _seq#]\n"
+        "   +- Relation [{rel}] parquet"
+    )
+    mp_aggs = ", ".join(
+        f"max_by({c}#, CASE WHEN isnotnull({c}#) THEN _seq# END) AS {c}#"
+        for c in ("v1", "v2", "v3")
+    )
+    sp_aggs = (
+        "cast(max(k1#) as int) AS k1#, s#, cast(max_by(v#, CASE WHEN isnotnull(v#) "
+        "THEN _seq# END) as decimal(20,2)) AS v#"
+    )
+    want = {
+        "mp": "Aggregate [_rowkey#, k1#, k2#], [k1#, k2#, " + mp_aggs + "{rk}]\n" + read.format(
+            cols="k1#, k2#, v1#, v2#, v3#", rel="k1#,k2#,v1#,v2#,v3#,_rowkey#,_seq#"
+        ),
+        "sp": "Aggregate [_rowkey#, s#], [" + sp_aggs + "{rk}]\n" + read.format(
+            cols="k1#, s#, v#", rel="k1#,s#,v#,_rowkey#,_seq#"
+        ),
+    }
+    for t, plan in want.items():
+        rel = astro.relation(t)
+        assert rel.needs_merge(), t
+        for with_rowkey in (False, True):
+            got = rel.scan(with_rowkey=with_rowkey)._jdf.queryExecution().optimizedPlan()
+            got = re.sub(r"#\d+L?", "#", got.toString()).strip()
+            assert got == plan.replace("{rk}", ", _rowkey#" if with_rowkey else ""), (t, got)

@@ -300,3 +300,30 @@ def test_three_valued_evaluation_soundness_fuzz():
             assert not any(truths), (pred, env)
         elif verdict == TRUE:
             assert all(truths), (pred, env)
+
+
+def test_point_rowkeys_probe_what_spark_equality_matches():
+    """The bloom probe set of a full-key point predicate holds every key
+    Spark's ``=`` matches: both zeros of a DOUBLE key (they encode to
+    other bytes), and no point set at all for a STRING key compared with
+    a number (Spark casts, so ``'05' = 5`` holds)."""
+    from spark_sql_on_hbase_spark import codec as C
+    from spark_sql_on_hbase_spark.catalog import KeyColumn, NonKeyColumn, TableMeta
+    from spark_sql_on_hbase_spark.pruning import point_rowkeys
+
+    def meta(*keys):
+        return TableMeta(
+            name="t", namespace="default", physical_table="ht",
+            key_columns=[KeyColumn(n, t, i) for i, (n, t) in enumerate(keys)],
+            nonkey_columns=[NonKeyColumn("v", "int", "f", "v")],
+            declared_columns=[n for n, _t in keys] + ["v"],
+        )
+
+    dk = meta(("k", "int"), ("d", "double"))
+    keys = point_rowkeys(parse_predicate("k = 1 AND d = 0.0"), dk)
+    assert sorted(keys) == sorted(C.encode_key([1, z], ["int", "double"]) for z in (0.0, -0.0))
+    keys = point_rowkeys(parse_predicate("k = 1 AND d IN (-0.0, 2.5)"), dk)
+    assert len(keys) == 3 and C.encode_key([1, 2.5], ["int", "double"]) in keys
+    sk = meta(("s", "string"),)
+    assert point_rowkeys(parse_predicate("s = 5"), sk) is None
+    assert point_rowkeys(parse_predicate("s = '5'"), sk) == [C.encode_key(["5"], ["string"])]
