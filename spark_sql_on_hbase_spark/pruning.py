@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from datetime import date, datetime
+from decimal import Decimal
 
 from spark_sql_on_hbase_spark.catalog import RegionFile, TableMeta
 from spark_sql_on_hbase_spark.predicate import (
@@ -271,17 +272,33 @@ def point_rowkeys(
     return out
 
 
+# Python types of the literals a key column of each type is compared
+# with as they are: Spark casts any other literal by its own rules
+_LITERAL_TYPES = {
+    C.STRING: str,
+    C.BOOLEAN: bool,
+    **dict.fromkeys((C.BYTE, C.SHORT, C.INT, C.LONG), int),
+    C.FLOAT: (int, float),
+    C.DOUBLE: (int, float),
+    C.DECIMAL: (int, Decimal),
+    C.DATE: date,
+    C.TIMESTAMP: datetime,
+}
+
+
 def _probe_values(values: set, dtype: str) -> list:
     """The stored key values Spark's ``=`` matches for ``values`` of a key
     column of type ``dtype``.  A zero of a FLOAT/DOUBLE key also matches
-    the other zero, which encodes to other bytes.  A STRING key compared
-    with a non-string literal is cast by Spark (``'05' = 5`` holds), so
-    it has no point set: ValueError."""
-    if dtype == C.STRING and not all(isinstance(v, str) for v in values):
-        raise ValueError("a STRING key compared with a non-string literal")
+    the other zero, which encodes to other bytes.  A literal of another
+    type than the key's is cast by Spark (``'05' = 5`` and
+    ``b = 'false'`` hold), so it has no point set: ValueError."""
+    want = _LITERAL_TYPES[dtype]
+    if not all(isinstance(v, want) and (dtype == C.BOOLEAN or not isinstance(v, bool))
+               for v in values):
+        raise ValueError(f"a {dtype} key compared with a literal of another type")
     out = sorted(values)
     if dtype in (C.FLOAT, C.DOUBLE):
-        nonzero = [v for v in out if isinstance(v, bool) or float(v) != 0]
+        nonzero = [v for v in out if v != 0]
         if len(nonzero) < len(out):
             out = nonzero + [0.0, -0.0]
     return out

@@ -105,6 +105,12 @@ def publish_view(spark: SparkSession, name: str, df: DataFrame, fingerprint: tup
     view_state(spark)[name] = (fingerprint, _temp_view(spark, name))
 
 
+def registered_fingerprint(spark: SparkSession, name: str) -> tuple | None:
+    """The table state :func:`publish_view` last registered ``name`` for."""
+    entry = view_state(spark).get(name)
+    return entry and entry[0]
+
+
 def owns_view(spark: SparkSession, name: str, fingerprint: tuple) -> bool:
     """True when the temp view ``name`` is still the one
     :func:`publish_view` registered for the table state ``fingerprint``
@@ -3994,11 +4000,13 @@ class AstroRelation:
             # that may hold the key, not all k.  An index lookup probes
             # its exact candidate keys: every fragment holding a version
             # of a candidate admits that candidate.
-            from spark_sql_on_hbase_spark.pruning import point_rowkeys
+            from spark_sql_on_hbase_spark.pruning import by_value, point_rowkeys
 
             pts = cand_rowkeys
             if pts is None:
-                pts = point_rowkeys(res.predicate, meta)
+                # DATE/TIMESTAMP string literals probe as the values
+                # Spark casts them to
+                pts = point_rowkeys(by_value(res.predicate, meta, tz), meta)
             else:
                 res.bloom_index_keys = len(pts)
             if pts is not None:

@@ -38,9 +38,9 @@ from spark_sql_on_hbase_spark.relation import (
     AstroRelation,
     owns_view,
     publish_view,
+    registered_fingerprint,
     table_schema,
     view_fingerprint,
-    view_state,
 )
 
 
@@ -98,11 +98,13 @@ class AstroSession:
         session's skip check; `register_view` itself records the
         fingerprint, so the DML paths that re-register after a write
         keep the cache current for free."""
-        reg = view_state(self.spark)
         for ns, name in self.catalog.list_tables():
             meta = self.catalog.get_table(name, ns)
             fp = view_fingerprint(self.catalog, meta)
-            if reg.get(name, (None,))[0] == fp and self.spark.catalog.tableExists(name):
+            if (
+                registered_fingerprint(self.spark, name) == fp
+                and self.spark.catalog.tableExists(name)
+            ):
                 continue
             # schema-on-read: another logical table may have populated the
             # shared physical store (many-to-one mapping, doc §16.1.1)

@@ -160,7 +160,8 @@ def test_explain_scan_shows_same_routing(astro):
         ("k1, amt", "amt > 100", "spark.sql over the full view — no servable conjunct "
                                  "on a leading indexed column"),
         ("k1, note", "status = 'Z'", "no read: index status proves no row matches"),
-        ("k1, note", "k1 = 7", "main-table point read (key pruning and blooms)"),
+        ("k1, note, status", "k1 IN (7, 8, 400)",
+         "main-table point read (key pruning and blooms)"),
     ]
     for columns, where, row in cases:
         assert _covering_row(astro, columns, where).startswith(row), (columns, where)
@@ -170,6 +171,7 @@ def test_explain_scan_shows_same_routing(astro):
             assert routed is None, (columns, where)
         elif row.startswith("main-table point read"):
             assert routed.index_used is None and len(routed.files) == 1, (columns, where)
+            assert routed.index_declined == "full-key point predicate (index not consulted)"
         else:
             assert routed.index_used == "status", (columns, where)
 
@@ -218,21 +220,6 @@ def test_user_replaced_view_declines_the_index_route(astro):
     assert [(r.k1, r.note) for r in df.collect()] == [(1, "x")]
 
 
-def test_full_key_select_routes_as_a_point_read(astro):
-    """A SELECT pinning the row key reads the one file that can hold it,
-    with the index not consulted, and returns spark.sql's rows."""
-    q = "SELECT k1, note, status FROM csr WHERE k1 IN (7, 8, 400)"
-    df = astro.sql(q)
-    res = astro.last_select_route
-    assert res is not None and res.index_used is None
-    assert res.index_declined == "full-key point predicate (index not consulted)"
-    assert len(res.files) < res.total and len(df.inputFiles()) == len(res.files)
-    want = astro.spark.sql(q)
-    assert df.columns == want.columns
-    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, want.collect()))
-    assert sorted(r.k1 for r in df.collect()) == [7, 8]
-
-
 def test_table_without_an_index_routes_point_gets(astro):
     astro.sql(
         "CREATE TABLE plain (k1 INT, v STRING, PRIMARY KEY (k1)) "
@@ -263,23 +250,21 @@ def test_select_over_an_empty_table_runs_no_job(astro, jobs_of):
         assert (astro.last_select_route is not None) == routed, q
 
 
-def test_user_replaced_view_declines_the_point_route(astro):
-    """The ownership guard covers the point route too."""
+def test_ownership_guard_is_a_few_py4j_calls(astro, py4j_calls):
+    """The guard is a few py4j calls, and it declines the point route
+    once the user replaces the view."""
+    from spark_sql_on_hbase_spark.relation import owns_view, view_fingerprint
+
     q = "SELECT k1, note FROM csr WHERE k1 = 7"
     astro.sql(q)
     assert astro.last_select_route is not None  # sanity: routes
-    astro.spark.createDataFrame([(7, "mine")], "k1 int, note string").createOrReplaceTempView(
-        "csr"
-    )
-    df = astro.sql(q)
-    assert astro.last_select_route is None
-    assert [(r.k1, r.note) for r in df.collect()] == [(7, "mine")]
-
-
-def test_ownership_guard_is_a_few_py4j_calls(astro, py4j_calls):
-    from spark_sql_on_hbase_spark.relation import owns_view, view_fingerprint
-
-    astro.sql("SELECT k1, note FROM csr WHERE k1 = 7")
     fp = view_fingerprint(astro.catalog, astro.relation("csr").meta)
     owned, calls = py4j_calls(lambda: owns_view(astro.spark, "csr", fp))
     assert owned and calls <= 5, calls
+    astro.spark.createDataFrame([(7, "mine")], "k1 int, note string").createOrReplaceTempView(
+        "csr"
+    )
+    assert not owns_view(astro.spark, "csr", fp)
+    df = astro.sql(q)
+    assert astro.last_select_route is None
+    assert [(r.k1, r.note) for r in df.collect()] == [(7, "mine")]

@@ -816,18 +816,32 @@ def _key_where(key) -> str:
 
 def test_full_key_selects_on_every_key_type(keyed):
     """Full-key gets on a table keyed by every key type route through the
-    point path and match spark.sql over the view and the model."""
+    point path and match spark.sql over the view and the model.  Keys
+    of finite floats probe the ROW blooms (DATE and TIMESTAMP keys by
+    the values Spark casts their string literals to)."""
     astro, model, key = keyed
     names = [n for n, _t, _v in _KEY_TYPES]
-    for i in (0, 1, 2, 5, 9, 23, 24, 30, 31, 40):
-        where = _key_where(key(i))
+    cases = [(i, _key_where(key(i))) for i in (0, 1, 2, 5, 9, 23, 24, 30, 31, 40)]
+    # Spark casts a string compared with a BOOLEAN key: 'false' and '0'
+    # match the false key (odd i), which a truthiness probe would miss
+    for i in (1, 9):
+        assert "c_bool = FALSE" in _key_where(key(i))
+        cases += [
+            (i, _key_where(key(i)).replace("c_bool = FALSE", f"c_bool = {s}"))
+            for s in ("'false'", "'0'")
+        ]
+    probed = set()
+    for i, where in cases:
         q = f"SELECT {', '.join(names)}, v FROM kt WHERE {where}"
         got, res = _sql_rows(astro, q)
         assert res is not None and res.index_used is None, where
+        if res.bloom_probed is not None:
+            probed.add(where)
         view = astro.spark.sql(q).collect()
         assert got == sorted(tuple(repr(v) for v in r) for r in view), where
         want = sorted(v for k, v in model.items() if _same_key(k, key(i)))
         assert sorted(r.v for r in view) == want, where
+    assert {_key_where(key(i)) for i in (1, 2, 9)} <= probed
 
 
 def test_routed_point_get_reads_one_file(table):

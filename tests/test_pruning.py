@@ -305,8 +305,9 @@ def test_three_valued_evaluation_soundness_fuzz():
 def test_point_rowkeys_probe_what_spark_equality_matches():
     """The bloom probe set of a full-key point predicate holds every key
     Spark's ``=`` matches: both zeros of a DOUBLE key (they encode to
-    other bytes), and no point set at all for a STRING key compared with
-    a number (Spark casts, so ``'05' = 5`` holds)."""
+    other bytes), and no point set at all for a key compared with a
+    literal of another type (Spark casts, so ``'05' = 5`` and
+    ``b = 'false'`` hold)."""
     from spark_sql_on_hbase_spark import codec as C
     from spark_sql_on_hbase_spark.catalog import KeyColumn, NonKeyColumn, TableMeta
     from spark_sql_on_hbase_spark.pruning import point_rowkeys
@@ -327,3 +328,11 @@ def test_point_rowkeys_probe_what_spark_equality_matches():
     sk = meta(("s", "string"),)
     assert point_rowkeys(parse_predicate("s = 5"), sk) is None
     assert point_rowkeys(parse_predicate("s = '5'"), sk) == [C.encode_key(["5"], ["string"])]
+    bk = meta(("k", "int"), ("b", "boolean"))
+    for text in ("b = 'false'", "b = '0'", "b IN ('f', FALSE)", "b = 0"):
+        assert point_rowkeys(parse_predicate(f"k = 1 AND {text}"), bk) is None, text
+    assert point_rowkeys(parse_predicate("k = 1 AND b = FALSE"), bk) == [
+        C.encode_key([1, False], ["int", "boolean"])
+    ]
+    assert point_rowkeys(parse_predicate("k = '1' AND b = TRUE"), bk) is None
+    assert point_rowkeys(parse_predicate("k = TRUE AND b = TRUE"), bk) is None
