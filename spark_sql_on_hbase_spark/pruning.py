@@ -111,6 +111,13 @@ class PruneResult:
     # how many exact index candidate rowkeys the blooms were probed
     # with (instead of the predicate's point set); None otherwise
     bloom_index_keys: int | None = None
+    # the delta probe (AstroRelation._drop_unmatched_deltas): overlapping
+    # files whose rows were counted under the key conjuncts on the
+    # driver, how many of them held no match and were dropped, and the
+    # matching rows counted; None when no probe ran
+    delta_probed: int | None = None
+    delta_dropped: int | None = None
+    delta_rows: int | None = None
 
     @property
     def pruned(self) -> int:

@@ -92,6 +92,21 @@ def view_state(spark: SparkSession) -> dict:
     return reg
 
 
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty local relation of ``schema``, built once per SparkSession
+    and schema and kept beside :func:`view_state`: a read that no
+    fragment survives returns it, filtered, without the ~20 py4j calls
+    of an Arrow ``createDataFrame``.  Collecting it runs no job."""
+    frames = getattr(spark, "_astro_empty_frames", None)
+    if frames is None:
+        frames = spark._astro_empty_frames = {}
+    key = schema.json()
+    df = frames.get(key)
+    if df is None:
+        df = frames[key] = local_rows_df(spark, [], schema)
+    return df
+
+
 def _temp_view(spark: SparkSession, name: str):
     """The session catalog's temp view ``name`` (a JVM ``Option``)."""
     return spark._jsparkSession.sessionState().catalog().getRawTempView(name)
@@ -2015,9 +2030,6 @@ class AstroRelation:
         fragment reclaimed under it raises."""
         if not res.files:
             return []
-        import pyarrow.dataset as ds
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         from spark_sql_on_hbase_spark.predicate import referenced_columns, to_arrow
         from spark_sql_on_hbase_spark.pruning import column_types
 
@@ -2025,13 +2037,81 @@ class AstroRelation:
         tz = None
         if any(coltypes.get(c) == C.TIMESTAMP for c in referenced_columns(res.predicate)):
             tz = self.spark.conf.get("spark.sql.session.timeZone")
-        table = ds.dataset(
-            [self._local_path(r.path) for r in res.files],
+        table = self._driver_dataset(res.files).to_table(
+            columns=columns, filter=to_arrow(res.predicate, coltypes, tz)
+        )
+        return list(zip(*(table.column(c).to_pylist() for c in columns)))
+
+    def _driver_dataset(self, files: list[RegionFile]):
+        """A pyarrow dataset of ``files`` under the declared
+        :meth:`_file_schema`, for reads on the driver."""
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return ds.dataset(
+            [self._local_path(r.path) for r in files],
             schema=to_arrow_schema(self._file_schema()),
             # Spark writes INT96 timestamps; nanoseconds overflow before 1677
             format=ds.ParquetFileFormat(read_options={"coerce_int96_timestamp_unit": "us"}),
-        ).to_table(columns=columns, filter=to_arrow(res.predicate, coltypes, tz))
-        return list(zip(*(table.column(c).to_pylist() for c in columns)))
+        )
+
+    def _drop_unmatched_deltas(self, res: "PruneResult", tz: str | None) -> None:
+        """Drop from ``res.files`` every fragment that forces the merge —
+        its rowkey range overlaps another survivor's, or it repeats a key —
+        and that holds no row matching the key-pushed conjuncts: the
+        HBase scan's seek past a store file with no key in range.
+        Smallest first, while their catalog ``num_rows`` sum stays within
+        ``INDEX_LOOKUP_CAP``, one pyarrow read on the driver counts each
+        fragment's matching rows (:func:`predicate.to_arrow`, exact or a
+        superset, TIMESTAMP keys cast in the session zone ``tz``).
+
+        Sound because key columns are constant per rowkey: a fragment
+        with no row matching the key conjuncts holds no version of any
+        key that can match, and the full predicate is still applied to
+        what is read.  A read error keeps every survivor.  Records the
+        probe on ``res`` (``delta_probed``, ``delta_dropped``,
+        ``delta_rows``)."""
+        from spark_sql_on_hbase_spark.predicate import to_arrow
+        from spark_sql_on_hbase_spark.pruning import column_types
+
+        if res.key_pushed is None or not self.needs_merge(res.files):
+            return
+        flt = to_arrow(res.key_pushed, column_types(self.meta), tz)
+        if flt is None:
+            return
+        rs = sorted(res.files, key=lambda r: r.min_rowkey_hex)
+        # overlaps a later file: the next one starts inside it; overlaps
+        # an earlier one: some earlier file ends at or past its start
+        merging = {
+            id(a) for a, b in zip(rs, rs[1:]) if a.max_rowkey_hex >= b.min_rowkey_hex
+        }
+        reach = None
+        for r in rs:
+            if reach is not None and reach >= r.min_rowkey_hex:
+                merging.add(id(r))
+            reach = r.max_rowkey_hex if reach is None else max(reach, r.max_rowkey_hex)
+        probe, rows = [], 0
+        for r in sorted(res.files, key=lambda r: r.num_rows):
+            if not (id(r) in merging or 0 <= r.num_keys != r.num_rows):
+                continue
+            if rows + r.num_rows > self.INDEX_LOOKUP_CAP:
+                break
+            probe.append(r)
+            rows += r.num_rows
+        if not probe:
+            return
+        try:
+            dataset = self._driver_dataset(probe)
+            found = dataset.to_table(columns=["__filename"], filter=flt)
+        except Exception:
+            return  # unreadable (e.g. reclaimed under the read): keep all
+        hits = set(found.column("__filename").to_pylist())
+        # dataset.files holds the paths as the scan names them, in order
+        dropped = {id(r) for r, f in zip(probe, dataset.files) if f not in hits}
+        res.files = [r for r in res.files if id(r) not in dropped]
+        res.delta_probed = len(probe)
+        res.delta_dropped = len(dropped)
+        res.delta_rows = found.num_rows
 
     def _build_bloom_sidecars(self, paths: list[str]) -> None:
         """Build missing ``<fragment>.bloom`` sidecars (bloom.py) — one
@@ -3794,7 +3874,7 @@ class AstroRelation:
             live = [r.path for r in self.meta.regions]
             if not live:
                 return self._resolve(
-                    local_rows_df(self.spark, [], self._file_schema()),
+                    empty_frame(self.spark, self._file_schema()),
                     with_rowkey=with_rowkey,
                     needs_merge=False,
                 )
@@ -3825,7 +3905,7 @@ class AstroRelation:
                     schema = T.StructType(
                         schema.fields + [T.StructField(ROWKEY_COL, T.BinaryType(), True)]
                     )
-                return local_rows_df(self.spark, [], schema)
+                return empty_frame(self.spark, schema)
             # global needs_merge stays sound for the subset: fragments
             # disjoint overall are disjoint in any subset; the converse
             # only costs an unneeded merge pass, never wrong rows
@@ -3909,11 +3989,19 @@ class AstroRelation:
         sidecars are probed with, so a fragment holding no candidate is
         skipped and the read often needs no merge.
 
-        ``merge=False`` skips the newest-cell-wins merge and returns
-        every stored version of each matching row.  Only sound when
-        duplicates do not matter and the predicate is on key columns
-        alone (a non-key conjunct could match a superseded value); the
-        index probe is the one caller.
+        When the survivors still overlap, the delta probe
+        (:meth:`_drop_unmatched_deltas`) counts, on the driver, the rows
+        of the small overlapping fragments that match the key conjuncts
+        — up to ``INDEX_LOOKUP_CAP`` rows in all — and drops every
+        fragment with none before the merge is decided: a range that no
+        trickle delta matches reads as one shuffle-free job.
+        Stringformat tables keep every survivor.
+
+        ``merge=False`` skips the newest-cell-wins merge and the delta
+        probe, and returns every stored version of each matching row.
+        Only sound when duplicates do not matter and the predicate is on
+        key columns alone (a non-key conjunct could match a superseded
+        value); the index probe is the one caller.
 
         A read no fragment survives is an empty local relation: it runs
         no Spark job.
@@ -4013,6 +4101,8 @@ class AstroRelation:
                 res.bloom_probed = len(res.files)
                 res.files = [rf for rf in res.files if self._bloom_admits(rf, pts)]
                 res.bloom_skipped = res.bloom_probed - len(res.files)
+        if merge and meta.encoding != STRING_FORMAT and not isinstance(res.predicate, Opaque):
+            self._drop_unmatched_deltas(res, tz)
         if not res.files:
             return self._empty_read(where), res
         paths = [r.path for r in res.files]
@@ -4020,6 +4110,7 @@ class AstroRelation:
         # contains it, and a bloom skips only fragments proven not to
         # hold it, so pruning keeps ALL versions of a surviving key —
         # the merge decision and the merge itself need only the subset
+        # (the delta probe drops only fragments holding no such key)
         res.merge = merge and self.needs_merge(res.files)
         raw = self._read_fragments(*paths)
         if meta.encoding == STRING_FORMAT and not isinstance(res.predicate, Opaque):
@@ -4074,7 +4165,7 @@ class AstroRelation:
         empty local relation under the scan schema, filtered by the
         predicate so a predicate Spark rejects still fails.  The optimizer
         folds it to an empty relation: collecting it runs no job."""
-        return local_rows_df(self.spark, [], self._scan_schema()).filter(where)
+        return empty_frame(self.spark, self._scan_schema()).filter(where)
 
     def scan_covering(self, where: str, columns: list[str]):
         """Pruned scan serving only ``columns``, as :meth:`plan_select`
@@ -4207,10 +4298,15 @@ class AstroRelation:
            engaged (``augment`` or ``semijoin``), so the main table reads
            only the candidates' fragments and merges only when they
            overlap, or when the index proves no row matches;
-        4. everything else reads the view: ranges (critical-point
-           pruning over the view is not planned yet) and a declined
-           index.  ``df`` is the projected ``scan_where`` read when one
-           was planned anyway.
+        4. the predicate has a key-pushed conjunct — a range on the
+           leading or a deeper key column, here or beside a declined
+           index: the key-range read of :meth:`scan_where` —
+           critical-point pruning, then the delta probe, which drops the
+           small overlapping fragments with no key in range, and a merge
+           only when the rest overlap;
+        5. everything else reads the view through spark.sql: predicates
+           on non-key columns alone and unparseable ones.  ``df`` is the
+           projected ``scan_where`` read when one was planned anyway.
 
         A read of no fragment is an empty local relation: it runs no
         job."""
@@ -4258,7 +4354,26 @@ class AstroRelation:
                 why = f"index declined: {res.index_declined}"
             else:
                 why = "the index probe did not engage"
+        if res is None and self._has_key_conjunct(where):
+            df, res = self.scan_where(where)
+            df = df.selectExpr(*project)
+        if res is not None and res.key_pushed is not None:
+            return SelectPlan(
+                df, res, True, "main-table key-range read (key pruning and the delta probe)"
+            )
         return SelectPlan(df, res, False, f"spark.sql over the full view — {why}")
+
+    def _has_key_conjunct(self, where: str) -> bool:
+        """True when ``where`` parses and has a conjunct on key columns
+        alone — one critical-point pruning can use.  Pure Python."""
+        from spark_sql_on_hbase_spark.predicate import classify, parse_predicate
+        from spark_sql_on_hbase_spark.pruning import column_types
+
+        try:
+            pred = parse_predicate(where, column_types(self.meta))
+        except ValueError:
+            return False
+        return classify(pred, set(self.meta.key_names))[0] is not None
 
     def _scan_covering_merge(self, idx_rel, col, info, where, servable):
         """Index-only covering read UNDER pending main-table upserts

@@ -342,6 +342,17 @@ class AstroSession:
                 f"skipped {res.bloom_skipped}"
             )
 
+        def _delta_probe():
+            if res.delta_probed is None:
+                return (
+                    "(not run — survivors key-disjoint, no key conjunct, "
+                    "none within the cap, or stringformat)"
+                )
+            return (
+                f"probed {res.delta_probed} overlapping files under the key conjuncts, "
+                f"dropped {res.delta_dropped} with no match ({res.delta_rows} rows counted)"
+            )
+
         meta = rel.meta
         rows = [
             ("table", f"{c.namespace}.{c.table}"),
@@ -352,6 +363,7 @@ class AstroSession:
             ("index_mode", _index_mode()),
             ("bloomfilter", meta.bloomfilter or "none"),
             ("bloom_outcome", _bloom_outcome()),
+            ("delta_probe", _delta_probe()),
             (
                 "stringformat_pushdown",
                 res.sf_pushdown
@@ -1407,11 +1419,15 @@ class AstroSession:
         … COLUMNS shows too: an index-only read when a covering index
         serves it, a point read (critical-point pruning, the ROW-bloom
         probe, a merge decided over the surviving files) when the
-        predicate pins the full row key, else ``scan_where``'s index route
-        when the index engaged or proved the result empty.  All apply the
-        FULL predicate, so the rows are spark.sql's.  Returns None (pass
-        through to spark.sql) for every other statement — ranges among
-        them; a routed read is recorded on ``last_select_route``."""
+        predicate pins the full row key, ``scan_where``'s index route
+        when the index engaged or proved the result empty, else
+        ``scan_where``'s key-range read (critical-point pruning, the
+        delta probe, a merge only over overlapping survivors) when a
+        conjunct is on key columns alone.  All apply the FULL predicate,
+        so the rows are spark.sql's.  Returns None (pass through to
+        spark.sql) for every other statement — those filtering on
+        non-key columns alone among them; a routed read is recorded on
+        ``last_select_route``."""
         m = self._SELECT_RE.match(text)
         if m is None:
             return None
@@ -1446,8 +1462,9 @@ class AstroSession:
         the registered views, after the time-travel (``VERSION AS OF``)
         and change-feed rewrites; a plain SELECT that is neither is first
         offered to :meth:`_route_select`, which serves full-key point
-        gets and index-servable lookups from the pruned read and passes
-        ranges and everything else back to spark.sql."""
+        gets, index-servable lookups and key ranges (leading or deeper
+        key columns) from the pruned read and passes everything else
+        back to spark.sql."""
         self._register_all()
         self.last_select_route = None
         sql_text = c.sql

@@ -51,6 +51,27 @@ def test_bloom_counts_reported(astro):
     assert out["bloom_outcome"].startswith("(not consulted")
 
 
+def test_delta_probe_reported(astro):
+    # the spanning appends hold keys 1, 2, 3 and 1999: a range none of
+    # them matches drops all three and reads one file without a merge
+    out = _explain(astro, "k BETWEEN 10 AND 20")
+    assert out["delta_probe"] == (
+        "probed 3 overlapping files under the key conjuncts, "
+        "dropped 3 with no match (0 rows counted)"
+    )
+    assert out["files_read"] == "1"
+    assert out["merge"] == "none (1 key-unique file)"
+    # a range every append matches keeps them all, and merges
+    out = _explain(astro, "k BETWEEN 1 AND 20")
+    assert out["delta_probe"] == (
+        "probed 3 overlapping files under the key conjuncts, "
+        "dropped 0 with no match (3 rows counted)"
+    )
+    assert out["merge"].startswith("newest-cell-wins over 4 files")
+    # a point get the blooms leave key-disjoint runs no probe
+    assert _explain(astro, "k = 500")["delta_probe"].startswith("(not run")
+
+
 def test_index_engaged_with_counts(astro):
     out = _explain(astro, "v = 500.0")
     assert out["index_used"] == "v"

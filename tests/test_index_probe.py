@@ -141,6 +141,8 @@ def test_probe_is_one_merge_free_job(table, monkeypatch, jobs_of):
     rel = astro.relation("ip")
     idx = rel._index_relation("v1")
     # the index merges: a merged probe of one value plans an aggregate
+    # (with the delta probe off, which would drop the deltas of no match)
+    monkeypatch.setattr(idx, "INDEX_LOOKUP_CAP", 0)
     merged, res = idx.scan_where("(v1 = 7)")
     assert res.merge is True and "Aggregate" in _plan(merged)
     n = merged.select("k1", "k2").distinct().count()
@@ -198,18 +200,20 @@ def test_fragment_vanishing_under_the_driver_read_falls_back(table, tmp_path, mo
     assert all(p.startswith(main_leases + os.sep) for p in after - before)
 
 
-# py4j calls (Python → JVM) of three scan_where reads and two routed SQL
+# py4j calls (Python → JVM) of four scan_where reads and three routed SQL
 # SELECTs, plan and collect, on the ``table`` fixture: ceilings to lower as
 # plans get cheaper.  A failure names the engine functions that made the
 # calls (the ``py4j_calls`` fixture).
 PY4J_CEILINGS = {  # measured + 10%
     "k1 = 5 AND k2 = 185": 37,  # a point get of one file (34)
-    "k1 BETWEEN 100 AND 150": 73,  # a range over merged files (66)
+    "k1 BETWEEN 100 AND 150": 73,  # a range over merged files: a delta matches (66)
+    "k1 BETWEEN 30 AND 90": 37,  # a range no delta matches: probed, merge-free (34)
     "v1 = 7": 74,  # an index lookup, its probe on the driver (67)
     # the same reads as SQL: the router adds the view's registration
     # check, the plan's projection and the ownership guard
     "SELECT k1, k2, v1, v2 FROM ip WHERE k1 = 5 AND k2 = 185": 54,  # (49)
     "SELECT k1, k2, v1, v2 FROM ip WHERE v1 = 7": 90,  # (82)
+    "SELECT k1, k2, v1, v2 FROM ip WHERE k1 BETWEEN 30 AND 90": 54,  # (49)
 }
 
 
@@ -229,6 +233,10 @@ def test_py4j_ceilings_of_scan_where_reads(table, py4j_calls):
         (_rows, res), calls = py4j_calls(lambda: read(where))
         if "k1 = 5" in where:
             assert len(res.files) == 1
+        elif "BETWEEN 30" in where:
+            assert res.merge is False and len(res.files) == 1
+            assert res.delta_dropped == 3  # the three trickle fragments
+            assert "relation.AstroRelation._merge_latest" not in calls.sites
         elif where.startswith("k1 BETWEEN"):
             assert res.merge is True and len(res.files) > 1
             assert calls.sites["relation.AstroRelation._merge_latest"] > 0
