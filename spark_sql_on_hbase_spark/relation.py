@@ -802,12 +802,24 @@ class AstroRelation:
             F.col(ROWKEY_COL),
         )
 
-    def compact(self) -> None:
-        """Rewrite all fragments into num_regions clean sorted regions,
-        restoring the table's declared layout (bucketed or z-order) and
-        reclaiming retired fragments — one :meth:`_rebuild`, committed by
-        :meth:`_commit_rewrite`'s ``rebuild`` mode, which skips index
-        upkeep for a COMPACT (the indexes already cover its content).
+    def compact(self) -> dict:
+        """COMPACT: fold every newer generation into generation 0 and
+        reclaim retired fragments, region by region as HBase compacts:
+        on a table whose generation-0 base is a clean range layout, only
+        the regions that receive a newer row are rewritten
+        (:meth:`_compaction_plan`), one sorted file each, and every other
+        region keeps its file and bloom sidecar.  Otherwise — a z-order
+        or bucketed layout, a shared physical store, nothing newer to
+        fold, no clean base, or a receiving region that would grow past
+        twice the mean region size (the rebalance HBase gets from a
+        region split) — one :meth:`_rebuild` rewrites the whole table
+        into num_regions regions of its declared layout.
+        Both commit through :meth:`_commit_rewrite`'s ``rebuild`` mode,
+        which skips index upkeep for a COMPACT (the indexes already
+        cover its content).  Returns the statement's stats:
+        ``compact_mode`` (``regions`` or ``rebuild``), ``rebuild_reason``
+        (None for ``regions``), ``regions_rewritten`` and
+        ``regions_kept``.
 
         Crash-safe at EVERY point (r12 manifest-pointer commit): the
         merged result is written to a sibling temp directory, published
@@ -821,6 +833,7 @@ class AstroRelation:
         post-compact table (plus a persisted ``gc_pending`` reclaim the
         next touch completes).  Reference compaction is HBase-side with
         the same write-new-then-switch structure."""
+        self._ensure_fresh_regions()
         # covering-read precondition (r13): a compact of a MERGE-FREE
         # table preserves the row set exactly, so indexes that were
         # exactly-live stay exactly-live (maintenance is skipped — the
@@ -838,8 +851,31 @@ class AstroRelation:
             c for c, v in self.meta.vector_indexes.items() if not v.get("stale")
         ]
         preserve = bool(pre_clean or pre_vec_fresh) and not self.needs_merge()
-        df = self.scan().select(*[c for c, _ in self.meta.all_columns])
-        self._rebuild(df, "COMPACT")
+        plan = self._compaction_plan()
+        if isinstance(plan, str):
+            df = self.scan().select(*[c for c, _ in self.meta.all_columns])
+            self._rebuild(df, "COMPACT")
+            stats = {
+                "compact_mode": "rebuild",
+                "rebuild_reason": plan,
+                "regions_rewritten": len(self.meta.regions),
+                "regions_kept": 0,
+            }
+        else:
+            base, receiving, newer = plan
+            hit = receiving + newer
+            df = self._resolve(
+                self._read_fragments(*[r.path for r in hit]),
+                needs_merge=self.needs_merge(hit),
+            )
+            new_files = self._publish_rows(df, 0, receiving)
+            self._commit_rewrite(hit, new_files, "rebuild", op="COMPACT")
+            stats = {
+                "compact_mode": "regions",
+                "rebuild_reason": None,
+                "regions_rewritten": len(receiving),
+                "regions_kept": len(base) - len(receiving),
+            }
         if preserve:
             post = {r.path for r in self.meta.regions}
 
@@ -859,6 +895,80 @@ class AstroRelation:
                 self.catalog.persist(self.meta)
 
             self._commit_retry(_reclean)
+        return stats
+
+    def _compaction_plan(self):
+        """Which regions a COMPACT rewrites: ``(base, receiving, newer)``
+        for a region compaction, else the reason the whole table is
+        rebuilt.  ``base`` is the generation-0 region files in key order,
+        ``newer`` every fragment of a later generation, and ``receiving``
+        the base regions some newer row routes to.
+
+        A region is the byte range from its file's ``min_rowkey`` to the
+        next region's (``HBasePartition``); a row routes to the region
+        with the greatest start key at or below its rowkey, and a row
+        below every start key to the first region (``HBasePartitioner``'s
+        binary search).  The newer rowkeys are read with one pyarrow read
+        on the driver when they number at most ``INDEX_LOOKUP_CAP``, else
+        counted per region by one Spark aggregate.
+
+        The whole table is rebuilt, and the reason returned, for a
+        z-order or bucketed declared layout; for a physical store that
+        another logical table maps (a sibling's catalog adopts the
+        rebuilt store whole, through its restat of vanished files); when
+        no newer fragment exists (COMPACT of a compacted table rebalances
+        its regions); when the base is not clean; and when a receiving
+        region would hold more than twice the mean region size.  The
+        base is clean when it has at most num_regions files, each file
+        holds every key once, and the files' key ranges are pairwise
+        disjoint: then a merged region's rows stay inside its range, and
+        a rewritten region never overlaps a kept one."""
+        import bisect
+        from collections import Counter
+
+        meta = self.meta
+        layout = self._layout_for(meta.align_prefix)
+        if layout != "range":
+            return f"{layout} layout"
+        if any(
+            self.catalog.get_table(t, ns).physical_table == meta.physical_table
+            for ns, t in self.catalog.list_tables(meta.namespace)
+            if t != meta.name
+        ):
+            return "shared physical store"
+        newer = [r for r in meta.regions if r.seq != 0]
+        if not newer:
+            return "no newer rows"
+        n = max(1, meta.num_regions)
+        base = sorted((r for r in meta.regions if r.seq == 0), key=lambda r: r.min_rowkey_hex)
+        if (
+            not base
+            or len(base) > n
+            or any(r.num_keys != r.num_rows for r in base)
+            or any(a.max_rowkey_hex >= b.min_rowkey_hex for a, b in zip(base, base[1:]))
+        ):
+            return "no clean base"
+        starts = [bytes.fromhex(r.min_rowkey_hex) for r in base]
+        newer_rows = sum(r.num_rows for r in newer)
+        if newer_rows <= self.INDEX_LOOKUP_CAP:
+            table = self._driver_dataset(newer).to_table(columns=[ROWKEY_COL])
+            keys = table.column(ROWKEY_COL).to_pylist()
+            counts = Counter(max(0, bisect.bisect_right(starts, k) - 1) for k in keys)
+        else:
+            idx = F.lit(0)
+            for s in starts[1:]:
+                idx = idx + (F.col(ROWKEY_COL) >= F.lit(s)).cast("int")
+            counts = {
+                r.i: r.n
+                for r in self._read_fragments(*[r.path for r in newer])
+                .groupBy(idx.alias("i"))
+                .agg(F.count("*").alias("n"))
+                .collect()
+            }
+        limit = 2 * (sum(r.num_rows for r in base) + newer_rows) / n
+        if any(base[i].num_rows + c > limit for i, c in counts.items()):
+            return "a region over 2x the mean size"
+        return base, [base[i] for i in sorted(counts)], newer
 
     def overwrite(self, df: DataFrame, op: str | None = None) -> None:
         """INSERT OVERWRITE …: atomically replace the table's contents
@@ -1229,7 +1339,9 @@ class AstroRelation:
           statements committed them), nor does a direct relation call
           (``op`` None).
         - ``rebuild`` (:meth:`_rebuild`: COMPACT / INSERT OVERWRITE, with
-          ``hit`` = every live fragment): the whole-table MVCC reclaim
+          ``hit`` = every live fragment; a region compaction's ``hit`` is
+          its receiving regions plus every newer fragment, so every live
+          file left is at generation 0): the whole-table MVCC reclaim
           point.  The retired fragments join the hit files in
           ``gc_pending``, the floor drops to 0, every generation
           re-stamps at commit time, the declared layout is re-applied
@@ -1243,9 +1355,11 @@ class AstroRelation:
         Optimistic retry: a concurrent APPEND is commutative for a
         partial rewrite (reload + re-derive); a concurrent rewrite of
         our own hit fragments aborts — our survivors were computed from
-        fragments that no longer exist.  A rebuild aborts on ANY change
-        of the live set (a fold based on the pre-commit snapshot would
-        lose a sibling's appended rows).  An aborted commit leaves
+        fragments that no longer exist.  A rebuild aborts when the live
+        set changed since its snapshot (a fold based on the pre-commit
+        snapshot would lose a sibling's appended rows, and a region
+        compaction would leave a sibling's newer generation live above
+        the rebased generation 0).  An aborted commit leaves
         nothing behind: the published files are unlinked and a retained
         rewrite's reservation is rolled back (no phantom generation, no
         orphan storage)."""
@@ -1266,9 +1380,13 @@ class AstroRelation:
             # re-registers it from the catalog
             self.spark.sql(f"DROP TABLE IF EXISTS {self.spark_table_name}")
 
+        # the live set the rewrite was planned against: callers hand the
+        # snapshot's metadata here unrefreshed (see _rebuild)
+        snapshot = {r.path for r in self.meta.regions}
+
         def conflict(m) -> bool:
             live = {r.path for r in m.regions}
-            return not hp <= live or (rebuild and live != hp)
+            return not hp <= live or (rebuild and live != snapshot)
 
         def finish(m) -> None:
             # inside the commit's one pointer write, once regions and

@@ -71,6 +71,7 @@ class AstroSession:
         # router served index-only (r15, VERDICT r14 #6); None when the
         # last SELECT passed through spark.sql
         self.last_select_route = None
+        self._session_catalog = None  # the JVM SessionCatalog, on first use
 
     # -- helpers ------------------------------------------------------------
     def relation(self, table: str, namespace: str = "default") -> AstroRelation:
@@ -97,15 +98,20 @@ class AstroSession:
         sibling AstroSession (or another namespace) never satisfies this
         session's skip check; `register_view` itself records the
         fingerprint, so the DML paths that re-register after a write
-        keep the cache current for free."""
+        keep the cache current for free.  A view the user dropped is
+        registered again: the session's temp-view names are read once
+        per call (two py4j calls, whatever the table count)."""
+        views = None
         for ns, name in self.catalog.list_tables():
             meta = self.catalog.get_table(name, ns)
             fp = view_fingerprint(self.catalog, meta)
-            if (
-                registered_fingerprint(self.spark, name) == fp
-                and self.spark.catalog.tableExists(name)
-            ):
-                continue
+            if registered_fingerprint(self.spark, name) == fp:
+                if views is None:
+                    views = self._temp_view_names()
+                # the session catalog stores names lower-cased unless
+                # spark.sql.caseSensitive is set
+                if name in views or name.lower() in views:
+                    continue
             # schema-on-read: another logical table may have populated the
             # shared physical store (many-to-one mapping, doc §16.1.1)
             if fp[2]:  # has_data
@@ -113,6 +119,12 @@ class AstroSession:
             else:  # empty table → empty view with right schema
                 empty = local_rows_df(self.spark, [], table_schema(meta))
                 publish_view(self.spark, name, empty, fp)
+
+    def _temp_view_names(self) -> set[str]:
+        """Names of the SparkSession's temp views, in two py4j calls."""
+        if self._session_catalog is None:
+            self._session_catalog = self.spark._jsparkSession.sessionState().catalog()
+        return set(self._session_catalog.getTempViewNames().mkString("\n").split("\n"))
 
     # -- entry point --------------------------------------------------------
     def sql(self, text: str) -> DataFrame:
@@ -1251,10 +1263,14 @@ class AstroSession:
     def _exec_CompactTable(self, c: ddl.CompactTable) -> DataFrame:
         rel = self.relation(c.table, c.namespace)
         n_before = len(rel.meta.regions)
-        rel.compact()
+        stats = self.last_write_stats = rel.compact()
         rel.register_view()
+        if stats["compact_mode"] == "regions":
+            how = f"{stats['regions_rewritten']} rewritten, {stats['regions_kept']} kept"
+        else:
+            how = f"whole table rebuilt: {stats['rebuild_reason']}"
         return self._ok(
-            f"compacted {c.table}: {n_before} fragments -> {len(rel.meta.regions)} regions"
+            f"compacted {c.table}: {n_before} fragments -> {len(rel.meta.regions)} regions ({how})"
         )
 
     _VERSION_ASOF_RE = re.compile(

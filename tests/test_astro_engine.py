@@ -748,6 +748,21 @@ def test_register_all_fingerprint_cache(astro, tmp_path, monkeypatch):
     assert [r.k for r in other.sql("SELECT k FROM rc").collect()] == [99]
 
 
+def test_register_all_reads_view_names_once(astro, py4j_calls):
+    """Up-to-date tables cost no per-table JVM round trip: the session's
+    temp-view names are read once per statement, two py4j calls for a
+    3-table warehouse.  A view the user dropped is registered again."""
+    for t in ("ta", "tb", "tc"):
+        astro.sql(f"CREATE TABLE {t} (k INT, v STRING, PRIMARY KEY (k)) MAPPED BY ({t}_ht)")
+        astro.sql(f"INSERT INTO {t} VALUES (1, '{t}')")
+    astro._register_all()
+    _, calls = py4j_calls(astro._register_all)
+    assert calls == 2, calls
+    astro.spark.catalog.dropTempView("tb")
+    astro._register_all()
+    assert astro.spark.sql("SELECT v FROM tb").collect()[0].v == "tb"
+
+
 def test_multirow_insert_values(spark, tmp_path):
     """INSERT INTO t VALUES (...), (...) — standard-SQL multi-row form
     (the reference grammar is single-row; ours is a superset).  All rows

@@ -12,7 +12,8 @@
    literal UPDATEs, retained DELETEs, VACUUMs and COMPACTs alternating
    between two AstroSessions over one warehouse (separate catalog
    caches = genuinely stale reads), model-checked row-for-row after
-   every step from a THIRD fresh session.  No commit may lose another
+   every step from a THIRD fresh session, and a last step in which the
+   stale session compacts by region.  No commit may lose another
    session's rows, retirements, or stamps.
 """
 
@@ -180,6 +181,15 @@ def test_two_session_interleaving_fuzz(spark, tmp_path, seed, fsmode, monkeypatc
             f"{'A' if sess is a else 'B'}: {len(got)} vs {len(model)} rows; "
             f"diff={sorted(set(got.items()) ^ set(model.items()))[:6]}"
         )
+    # a region-compaction step from the stale session: A rebuilds the
+    # table into balanced regions and upserts one key, B compacts it
+    with monkeypatch.context() as m:
+        m.setattr(AstroRelation, "_compaction_plan", lambda self: "forced")
+        a.relation(name).compact()
+    a.sql(f"INSERT INTO {name} VALUES (60, 'last')")
+    model[60] = "last"
+    assert b.relation(name).compact()["compact_mode"] == "regions"
+    assert _rows(checker, name) == model
     # end state also correct from both writers' own views
     assert _rows(a, name) == model
     assert _rows(b, name) == model

@@ -11,8 +11,10 @@ holds one record per operation.  This prints, per (kind, group) — the
 operation type and, for reads, the entry point and predicate shape
 (``sql``, ``scan_where``, ``sql/in``, …) — the operation count and the
 median of each of ``wall_ms``, ``spark.jobs``, ``py4j.calls``,
-``scan_rows`` and ``spark.shuffle_bytes``.  A metric a record lacks (writes
-have no ``scan_rows``) is left out of that group's median; ``-`` means no
+``scan_rows`` and ``spark.shuffle_bytes``, and of the storage deltas of
+writes and COMPACT: ``files_written``, ``files_retired`` and
+``bytes_written``.  A metric a record lacks (writes have no ``scan_rows``,
+reads no storage delta) is left out of that group's median; ``-`` means no
 record of the group has it.  With several files, one table per file.
 """
 
@@ -22,7 +24,8 @@ import argparse
 import json
 import statistics
 
-COLUMNS = ("wall_ms", "spark.jobs", "py4j.calls", "scan_rows", "spark.shuffle_bytes")
+COLUMNS = ("wall_ms", "spark.jobs", "py4j.calls", "scan_rows", "spark.shuffle_bytes",
+           "files_written", "files_retired", "bytes_written")
 
 
 def group_medians(records: list[dict], phase: str = "timed") -> list[dict]:
