@@ -223,6 +223,24 @@ _SPARK_TYPES = {
 }
 
 
+def range_index(split_keys: list[bytes]) -> "F.Column":
+    """0-based index of the key range each row's ``_rowkey`` falls in:
+    the number of sorted ``split_keys`` (every range's start key but the
+    first) at or below it, so a rowkey below every start key lands in
+    range 0 (``HBasePartitioner``'s binary search).  One SQL expression,
+    a balanced sum of comparisons: building it is one py4j call, and its
+    tree stays log-deep at any number of split keys."""
+
+    def total(terms: list[str]) -> str:
+        if len(terms) == 1:
+            return terms[0]
+        mid = len(terms) // 2
+        return f"({total(terms[:mid])} + {total(terms[mid:])})"
+
+    terms = [f"CAST(`{ROWKEY_COL}` >= X'{k.hex()}' AS INT)" for k in split_keys]
+    return F.expr(total(terms) if terms else "0")
+
+
 # integer key widths usable as z-order dimensions (bits)
 _Z_WIDTHS = {C.BYTE: 8, C.SHORT: 16, C.INT: 32, C.LONG: 64}
 
@@ -853,8 +871,18 @@ class AstroRelation:
         preserve = bool(pre_clean or pre_vec_fresh) and not self.needs_merge()
         plan = self._compaction_plan()
         if isinstance(plan, str):
-            df = self.scan().select(*[c for c, _ in self.meta.all_columns])
-            self._rebuild(df, "COMPACT")
+            hit = list(self.meta.regions)
+        else:
+            base, receiving, newer = plan
+            hit = receiving + newer
+        df = self._resolve(
+            self._read_fragments(*[r.path for r in hit])
+            if hit
+            else empty_frame(self.spark, self._file_schema()),
+            needs_merge=self.needs_merge(hit),
+        )
+        if isinstance(plan, str):
+            self._rebuild(df.select(*[c for c, _ in self.meta.all_columns]), "COMPACT")
             stats = {
                 "compact_mode": "rebuild",
                 "rebuild_reason": plan,
@@ -862,12 +890,6 @@ class AstroRelation:
                 "regions_kept": 0,
             }
         else:
-            base, receiving, newer = plan
-            hit = receiving + newer
-            df = self._resolve(
-                self._read_fragments(*[r.path for r in hit]),
-                needs_merge=self.needs_merge(hit),
-            )
             new_files = self._publish_rows(df, 0, receiving)
             self._commit_rewrite(hit, new_files, "rebuild", op="COMPACT")
             stats = {
@@ -908,23 +930,26 @@ class AstroRelation:
         next region's (``HBasePartition``); a row routes to the region
         with the greatest start key at or below its rowkey, and a row
         below every start key to the first region (``HBasePartitioner``'s
-        binary search).  The newer rowkeys are read with one pyarrow read
-        on the driver when they number at most ``INDEX_LOOKUP_CAP``, else
-        counted per region by one Spark aggregate.
+        binary search).  The newer rows are counted per region by one
+        Spark aggregate over :func:`range_index`.
 
         The whole table is rebuilt, and the reason returned, for a
         z-order or bucketed declared layout; for a physical store that
         another logical table maps (a sibling's catalog adopts the
         rebuilt store whole, through its restat of vanished files); when
         no newer fragment exists (COMPACT of a compacted table rebalances
-        its regions); when the base is not clean; and when a receiving
-        region would hold more than twice the mean region size.  The
-        base is clean when it has at most num_regions files, each file
-        holds every key once, and the files' key ranges are pairwise
-        disjoint: then a merged region's rows stay inside its range, and
-        a rewritten region never overlaps a kept one."""
-        import bisect
-        from collections import Counter
+        its regions); when the base is not clean; when a base file still
+        holds a column that ALTER … DROP removed (a kept region would
+        keep its cells, and a later ADD of the same name would read them
+        back); and when a receiving region would hold more than twice
+        the mean region size.  The base is clean when it has at most
+        num_regions files, each file holds every key once, and the
+        files' key ranges are pairwise disjoint: then a merged region's
+        rows stay inside its range, and a rewritten region never
+        overlaps a kept one."""
+        import pyarrow.parquet as pq
+
+        from spark_sql_on_hbase_spark.catalog import ConcurrentWriteError
 
         meta = self.meta
         layout = self._layout_for(meta.align_prefix)
@@ -948,23 +973,29 @@ class AstroRelation:
             or any(a.max_rowkey_hex >= b.min_rowkey_hex for a, b in zip(base, base[1:]))
         ):
             return "no clean base"
+        declared = {c for c, _ in meta.all_columns} | {ROWKEY_COL, SEQ_COL}
+        try:
+            dropped = any(
+                set(pq.read_schema(self._local_path(r.path)).names) - declared for r in base
+            )
+        except OSError as e:  # a sibling's rewrite reclaimed a base file
+            raise ConcurrentWriteError(
+                f"{meta.namespace}.{meta.name}",
+                meta.meta_version,
+                self.catalog.disk_version(meta.name, meta.namespace),
+                detail="a concurrent rewrite replaced the regions this COMPACT planned",
+            ) from e
+        if dropped:
+            return "a dropped column in the base"
         starts = [bytes.fromhex(r.min_rowkey_hex) for r in base]
+        counts = {
+            r.i: r.n
+            for r in self._read_fragments(*[r.path for r in newer])
+            .groupBy(range_index(starts[1:]).alias("i"))
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
         newer_rows = sum(r.num_rows for r in newer)
-        if newer_rows <= self.INDEX_LOOKUP_CAP:
-            table = self._driver_dataset(newer).to_table(columns=[ROWKEY_COL])
-            keys = table.column(ROWKEY_COL).to_pylist()
-            counts = Counter(max(0, bisect.bisect_right(starts, k) - 1) for k in keys)
-        else:
-            idx = F.lit(0)
-            for s in starts[1:]:
-                idx = idx + (F.col(ROWKEY_COL) >= F.lit(s)).cast("int")
-            counts = {
-                r.i: r.n
-                for r in self._read_fragments(*[r.path for r in newer])
-                .groupBy(idx.alias("i"))
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
         limit = 2 * (sum(r.num_rows for r in base) + newer_rows) / n
         if any(base[i].num_rows + c > limit for i, c in counts.items()):
             return "a region over 2x the mean size"
@@ -1996,16 +2027,14 @@ class AstroRelation:
         keyed = self._with_rowkey(out.select(*[c for c, _ in meta.all_columns]))
         keyed = self._physical_encode(keyed).withColumn(SEQ_COL, F.lit(seq))
         if zmaxs is None:
-            mins = sorted(f.min_rowkey_hex for f in hit)[1:]
-            steps = [F.col(ROWKEY_COL) >= F.lit(bytes.fromhex(b)) for b in mins]
+            idx = range_index(sorted(bytes.fromhex(f.min_rowkey_hex) for f in hit)[1:])
             sort_cols = None
         else:
             keyed = keyed.withColumn("__z", zorder_value(meta))
-            steps = [F.col("__z") > F.lit(zb) for zb in zmaxs[:-1]]
+            idx = F.lit(0)
+            for zb in zmaxs[:-1]:
+                idx = idx + (F.col("__z") > F.lit(zb)).cast("int")
             sort_cols = ["__z", ROWKEY_COL]
-        idx = F.lit(0)
-        for s in steps:
-            idx = idx + s.cast("int")
         return self._publish_survivors(keyed, idx, len(hit), sort_cols=sort_cols)
 
     def _publish_survivors(

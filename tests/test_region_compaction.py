@@ -10,8 +10,9 @@ session zone, DOUBLE keys with NaN and ±0.0 and DECIMAL keys, with
 upserts that carry NULL cells, deleted keys and new keys below the first
 region and above the last.  Kept regions keep their files, inodes and
 bloom sidecars; an append that commits under the compaction aborts it;
-z-order, bucketed, over-grown, dirty and shared tables, and a table with
-nothing newer, take the full rebuild.
+z-order, bucketed, over-grown, dirty and shared tables, a table with
+nothing newer and one whose base still holds a dropped column take the
+full rebuild.
 """
 
 import os
@@ -352,12 +353,23 @@ def test_shared_physical_store_takes_the_full_rebuild(spark, tmp_path):
     assert astro.last_write_stats["rebuild_reason"] == "shared physical store"
 
 
-def test_over_the_driver_cap_counts_regions_with_spark(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("dtype,value,cell", [("INT", "1", 1), ("STRING", "'1'", "1")])
+def test_dropped_column_takes_the_full_rebuild(spark, tmp_path, dtype, value, cell):
+    """A kept region would keep a dropped column's cells, so COMPACT
+    rebuilds: an ADD of the same name, of either type, reads NULL."""
     astro = AstroSession(spark, str(tmp_path / "wh"))
-    rel = _plain(astro, "cap")
-    astro.sql("INSERT INTO cap VALUES (1, 'a'), (2, 'b'), (399, 'c')")
-    monkeypatch.setattr(AstroRelation, "INDEX_LOOKUP_CAP", 0)
-    plan = rel._compaction_plan()
-    monkeypatch.undo()
-    assert plan[1] == rel._compaction_plan()[1]
-    assert len(plan[1]) == 2
+    astro.sql(
+        "CREATE TABLE dc (k INT, v STRING, w INT, PRIMARY KEY (k)) "
+        "MAPPED BY (dc_ht, COLS=[v=f.v, w=f.w]) OPTIONS (regions=8)"
+    )
+    astro.sql("INSERT INTO dc SELECT id, CONCAT('v', id), id FROM range(0, 400)")
+    astro.sql("INSERT INTO dc VALUES (5, 'x', 5)")
+    astro.sql("ALTER TABLE dc DROP w")
+    astro.sql("COMPACT TABLE dc")
+    assert astro.last_write_stats["rebuild_reason"] == "a dropped column in the base"
+    astro.sql(f"ALTER TABLE dc ADD w {dtype} MAPPED BY (f.w)")
+    astro.sql(f"INSERT INTO dc VALUES (7, 'y', {value})")
+    astro.sql("COMPACT TABLE dc")
+    assert astro.last_write_stats["compact_mode"] == "regions"
+    got = {r.k: (r.v, r.w) for r in astro.sql("SELECT k, v, w FROM dc").collect()}
+    assert got == {k: (f"v{k}", None) for k in range(400)} | {5: ("x", None), 7: ("y", cell)}
